@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every registered query against
   * SPARK_GRAFT_SF_DIR (default sf0.1) and prints ONE JSON line with
   * per-query and total wall seconds. Driver runs this per round →
@@ -104,7 +102,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
     // contended passes are rejected and re-run up to this many total
     // attempts; the LAST pass is the recorded one (flagged if still
@@ -125,28 +122,7 @@ object Bench {
       sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_S", "1500").toDouble
     val tJvm0 = System.nanoTime()
     def elapsedS: Double = (System.nanoTime() - tJvm0) / 1e9
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // Default restored to `true` (VERDICT r13 #2): r13 flipped this to
-      // false (AQE's per-exchange driver re-plan is ~40 ms — real wall at
-      // KB-sized bench shuffles, irrelevant at TB where its skew splitting
-      // and coalescing are wanted) — but the flip was a NON-ADDITIVE
-      // harness change: every historical bench row and committed floor was
-      // measured with AQE on, so future rows would conflate "algorithm got
-      // faster" with "planner overhead removed". The default stays `true`
-      // for round-over-round comparability; SPARK_GRAFT_AQE=false remains
-      // available as a diagnostics opt-out, and the one-time dual-mode
-      // measurement lives in plans/r14/aqe_ab.md.
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    // big-SF sweeps: split multi-row-group fixture files across tasks
-    sys.env.get("SPARK_GRAFT_MAX_PARTITION_BYTES")
-      .foreach(v => builder.config("spark.sql.files.maxPartitionBytes", v))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(defaultCpus = 32)
     // JVM/codegen warm-up: run every query once on the smallest fixture so
     // per-query numbers measure the plan in steady state, not Janino
     // compilation and first-call classloading (the cold floor was ~1-8s per
@@ -167,32 +143,18 @@ object Bench {
     var leakedBlocks = 0
     val leakedBy = scala.collection.mutable.LinkedHashMap[String, Int]()
     def releaseAndCheck(after: String): Unit = {
-      graft.ext.OpCaches.releaseAll()
-      var left = spark.sparkContext.getPersistentRDDs
-      if (left.nonEmpty) {
-        // grace re-check: localCheckpoint blocks are weak-referenced and
-        // the ContextCleaner drops them on GC — only a block that survives
-        // an explicit GC cycle is a real (strongly-referenced) leak
-        System.gc()
-        Thread.sleep(100)
-        left = spark.sparkContext.getPersistentRDDs
-      }
+      val left = graft.ext.OpCaches.releaseAllLeaks(spark)
       if (left.nonEmpty) {
         leakedBlocks = math.max(leakedBlocks, left.size)
         if (!leakedBy.contains(after)) {
           leakedBy(after) = left.size
           System.err.println(s"[bench] CACHE LEAK after $after: " +
             s"${left.size} persisted RDD(s) survived releaseAll+GC")
-          left.values.foreach { r =>
+          left.foreach { r =>
             System.err.println(s"[bench]   id=${r.id} " +
               r.toDebugString.linesIterator.take(3).mkString(" | "))
           }
         }
-        // recover BOTH cache layers: clearCache drops Dataset caches but
-        // never raw-RDD persists (localCheckpoint), so unpersist those
-        // directly — a standing block must not contaminate later timings
-        spark.catalog.clearCache()
-        left.values.foreach(_.unpersist(blocking = false))
       }
     }
     // one-time corpus encodes (ANN index build) happen in warm-up, not

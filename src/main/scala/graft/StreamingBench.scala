@@ -98,19 +98,13 @@ object StreamingBench {
       val (warm, main) = replayed.splitAt(math.max(1, replayed.length / 100))
       ms.addData(warm.toSeq)
       q.processAllAvailable()
-      // each addData call is ONE MemoryStream block = one partition of the
-      // micro-batch's source scan: feeding a 124k-row batch as a single
-      // block serializes the row decode + shuffle write on one task.
-      // feedBlocks > 1 splits each micro-batch across that many blocks
-      // (diagnostic knob; default 1 = historical feed shape)
-      val feedBlocks =
-        sys.env.getOrElse("SPARK_GRAFT_STREAM_FEED_BLOCKS", "1").toInt
+      // one addData (one MemoryStream block) per micro-batch: splitting a
+      // batch across 4 blocks gave more, smaller batches and ran slower
+      // (82-92k vs 102-119k rows/s at sf0.1 on 4 cores)
       val t0 = System.nanoTime()
       var ingested = 0L
       main.grouped(math.max(1, main.length / batches)).foreach { batch =>
-        if (feedBlocks <= 1) ms.addData(batch.toSeq)
-        else batch.grouped(math.max(1, batch.length / feedBlocks))
-          .foreach(b => ms.addData(b.toSeq))
+        ms.addData(batch.toSeq)
         q.processAllAvailable()
       }
       ingested = q.recentProgress.map(_.numInputRows).sum

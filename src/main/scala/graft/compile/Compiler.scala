@@ -143,11 +143,8 @@ final class StreamEnv(val spark: SparkSession, streams: Map[String, DataFrame],
   */
 object Compiler {
 
-  /** Public entry: normalize (filter fusion, merge flattening) then fold. */
-  def compile(node: KNode, env: Env): KFrame =
-    compile0(Normalizer.normalize(node), env)
-
-  private[graft] def compile0(node: KNode, env: Env): KFrame = node match {
+  /** Public entry: fold the topology into a [[KFrame]], one case per node. */
+  def compile(node: KNode, env: Env): KFrame = node match {
 
     // ---- sources -------------------------------------------------------
     case StreamSource(topics, pattern, consumed) =>

@@ -548,33 +548,31 @@ object Funnel {
     require(gapSeconds >= 1, s"gapSeconds must be >= 1, got $gapSeconds")
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
       OutputMode}
-    val spark = events.sparkSession
-    import spark.implicits._
+    import org.apache.spark.sql.{Encoders, Row}
+    import org.apache.spark.sql.types.StructType
+    // keyed by a Row of the key columns, so NULLs and any key text stay
+    // distinct (a joined string key would merge (a, NULL) with (NULL, a))
+    val keyIdx = keyCols.map(events.schema.fieldIndex)
     val packed = events.select(
-      concat_ws(" ", keyCols.map(c => col(c).cast("string")): _*)
-        .as("__k"),
       unix_micros(col(tsCol).cast("timestamp")).as("__us"),
       struct(events.columns.map(col): _*).as("__row"))
-    val enc = org.apache.spark.sql.Encoders.row(packed.schema)
-    val outEnc = org.apache.spark.sql.Encoders.row(
-      events.schema)
-    val kept = packed.as(enc)
-      .groupByKey(_.getString(0))(org.apache.spark.sql.Encoders.STRING)
+    val kEnc = Encoders.row(StructType(keyIdx.map(events.schema.fields(_))))
+    val kept = packed.as(Encoders.row(packed.schema))
+      .groupByKey(r => Row.fromSeq(keyIdx.map(r.getStruct(1).get)))(kEnc)
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.NoTimeout) {
-        (_: String, rows: Iterator[org.apache.spark.sql.Row],
-         state: GroupState[Long]) =>
+        (_: Row, rows: Iterator[Row], state: GroupState[Long]) =>
           var last = state.getOption.getOrElse(Long.MinValue)
-          val out = rows.toSeq.sortBy(_.getLong(1)).flatMap { r =>
-            val t = r.getLong(1)
+          val out = rows.toSeq.sortBy(_.getLong(0)).flatMap { r =>
+            val t = r.getLong(0)
             val fresh = last == Long.MinValue ||
               t - last > gapSeconds * 1000000L
             last = t
-            if (fresh) Some(r.getStruct(2)) else None
+            if (fresh) Some(r.getStruct(1)) else None
           }
           state.update(last)
           out.iterator
-      }(org.apache.spark.sql.Encoders.scalaLong, outEnc)
+      }(Encoders.scalaLong, Encoders.row(events.schema))
     kept
   }
 

@@ -1,6 +1,7 @@
 package graft.ext
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Lifecycle registry for operator-internal persisted frames.
   *
@@ -15,9 +16,10 @@ import org.apache.spark.sql.DataFrame
   * on an operator's result the caller calls [[releaseAll]] (idempotent,
   * non-blocking unpersist of everything registered since the last call).
   *
-  * `graft.Verify` and `graft.Bench` release between queries, and Bench
-  * asserts `sparkContext.getPersistentRDDs` is empty after each release —
-  * the regression guard that keeps a full gate run cache-neutral.
+  * `graft.Verify` and `graft.Bench` release between queries; Bench and
+  * `graft.tools.Profile` release through [[releaseAllLeaks]] and report
+  * what survives — the regression guard that keeps a full gate run
+  * cache-neutral.
   */
 object OpCaches {
   private val reg = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
@@ -55,5 +57,24 @@ object OpCaches {
     while (df != null) { df.unpersist(blocking = false); df = reg.poll() }
     var r = rddReg.poll()
     while (r != null) { r.unpersist(blocking = false); r = rddReg.poll() }
+  }
+
+  /** [[releaseAll]], then unpersist and return every persisted RDD that
+    * survives it: a block some operator persisted outside this registry.
+    * A localCheckpoint block is only weakly held (the ContextCleaner drops
+    * it on GC), so survivors are re-read after one GC before they count.
+    * Survivors are dropped from both cache layers — `clearCache` never
+    * reaches raw-RDD persists — so a leak cannot distort the next run.
+    */
+  def releaseAllLeaks(spark: SparkSession): Seq[RDD[_]] = {
+    releaseAll()
+    val sc = spark.sparkContext
+    if (sc.getPersistentRDDs.nonEmpty) { System.gc(); Thread.sleep(100) }
+    val left = sc.getPersistentRDDs.values.toSeq
+    if (left.nonEmpty) {
+      spark.catalog.clearCache()
+      left.foreach(_.unpersist(blocking = false))
+    }
+    left
   }
 }

@@ -1,0 +1,115 @@
+package graft.tools
+
+import graft.ext.OpCaches
+import org.apache.spark.rdd.RDD
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.execution.{FormattedMode, QueryExecution,
+  SQLExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.graftfn.ListenerDrain
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+
+/** Per-query execution profile (dev tool): timing, plan review and cache
+  * leak hunting in one pass. Each named query (gate or bench-only) is
+  * warmed once (codegen, fits, index builds), then on each rep built and
+  * run to full results — every row computed, none collected — and one
+  * line printed: wall seconds (build + run), Spark jobs, stages, tasks,
+  * shuffle-write MB, shuffle exchanges in the executed plan, and the
+  * number of persisted RDDs that survive `OpCaches.releaseAllLeaks`, each
+  * survivor followed by its lineage. Job count is the hidden per-query
+  * cost at bench scale: every eager action (persist materialization,
+  * localCheckpoint, count, first) is a job with its own scheduling and
+  * barrier. `--plans dir` writes the last rep's formatted executed plan
+  * to `dir/<query>.txt`.
+  *
+  * Usage: runMain graft.tools.Profile <query…> [--reps n] [--plans dir]
+  * Fixtures come from SPARK_GRAFT_SF_DIR (required).
+  */
+object Profile extends AdaptiveSparkPlanHelper {
+
+  def main(args: Array[String]): Unit = {
+    var reps = 3
+    var plansDir: Option[String] = None
+    val names = Seq.newBuilder[String]
+    val it = args.iterator
+    while (it.hasNext) it.next() match {
+      case "--reps" => reps = it.next().toInt
+      case "--plans" => plansDir = Some(it.next())
+      case n => names += n
+    }
+    val queries = names.result()
+    val all = graft.SparkEntry.queries ++ graft.queries.ExtQueries.benchOnly
+    require(queries.nonEmpty && reps >= 1,
+      "usage: Profile <query…> [--reps n] [--plans dir]")
+    val unknown = queries.filterNot(all.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    plansDir.foreach(d => Files.createDirectories(Paths.get(d)))
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
+      sys.error("set SPARK_GRAFT_SF_DIR to a fixture directory"))
+
+    val spark = graft.Sessions.local(defaultCpus = 32)
+    val jobs = new AtomicInteger; val stages = new AtomicInteger
+    val tasks = new AtomicInteger; val shufW = new AtomicLong
+    spark.sparkContext.addSparkListener(new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
+        stages.incrementAndGet()
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
+        tasks.incrementAndGet()
+        if (t.taskMetrics != null)
+          shufW.addAndGet(t.taskMetrics.shuffleWriteMetrics.bytesWritten)
+      }
+    })
+
+    /** One build + full run; returns its wall seconds and executed plan. */
+    def run(name: String): (Double, QueryExecution) = {
+      jobs.set(0); stages.set(0); tasks.set(0); shufW.set(0)
+      val t0 = System.nanoTime()
+      val qe = all(name)(spark, sfDir).queryExecution
+      SQLExecution.withNewExecutionId(qe, Some(s"profile $name")) {
+        qe.toRdd.foreach(_ => ())
+      }
+      val secs = (System.nanoTime() - t0) / 1e9
+      ListenerDrain(spark.sparkContext)
+      (secs, qe)
+    }
+    def printLineage(leaked: Seq[RDD[_]]): Unit = leaked.foreach { r =>
+      println(s"  leaked id=${r.id} ${r.getStorageLevel.description}")
+      r.toDebugString.linesIterator.foreach(l => println(s"    $l"))
+    }
+
+    println(f"${"query"}%-28s ${"rep"}%4s ${"sec"}%7s ${"jobs"}%5s " +
+      f"${"stages"}%6s ${"tasks"}%6s ${"shufMB"}%7s ${"exch"}%4s leaked")
+    var failed = Seq.empty[String]
+    queries.foreach { n =>
+      try {
+        run(n)
+        printLineage(OpCaches.releaseAllLeaks(spark))
+        (1 to reps).foreach { rep =>
+          val (secs, qe) = run(n)
+          val exch = collectWithSubqueries(qe.executedPlan) {
+            case e: ShuffleExchangeLike => e
+          }.size
+          val leaked = OpCaches.releaseAllLeaks(spark)
+          println(f"$n%-28s $rep%4d $secs%7.2f ${jobs.get}%5d " +
+            f"${stages.get}%6d ${tasks.get}%6d ${shufW.get / 1e6}%7.2f " +
+            f"$exch%4d ${leaked.size}%6d")
+          printLineage(leaked)
+          if (rep == reps) plansDir.foreach { d =>
+            Files.writeString(Paths.get(d, s"$n.txt"),
+              qe.explainString(FormattedMode))
+          }
+        }
+      } catch { case e: Throwable =>
+        println(s"$n FAILED: $e")
+        failed :+= n
+      }
+    }
+    spark.stop()
+    if (failed.nonEmpty) sys.exit(1)
+  }
+}

@@ -54,12 +54,8 @@ object ScaleUp {
     val out = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
     require(factor >= 1, s"factor must be >= 1, got $factor")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(defaultCpus = 32,
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true")
     scaleAll(spark, src, out, factor)
     spark.stop()
   }

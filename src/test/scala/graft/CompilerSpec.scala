@@ -153,21 +153,19 @@ class CompilerSpec extends SparkSpecBase {
     assert(plan.contains("BroadcastHashJoin"), s"expected broadcast join:\n$plan")
   }
 
-  test("normalizer fuses adjacent filters and flattens merges") {
-    import graft.compile.Normalizer
-    val fused = Normalizer.normalize(
-      stream(Seq("events"), consumed)
-        .filter(col("value") > 10).filterNot(col("value") > 100))
-    fused match {
-      case FilterOp(_: StreamSource, _, false) => ()
-      case other => fail(s"expected one fused filter, got $other")
-    }
+  test("filter chains and nested merges plan like their fused forms") {
+    // the compiler rewrites nothing: Catalyst's CombineFilters and
+    // CombineUnions must reach the fused plan on their own
+    def plan(n: KNode) = Compiler.compile(n, env).df.queryExecution
+      .executedPlan.canonicalized
     val ev = stream(Seq("events"), consumed)
-    val flat = Normalizer.normalize(ev.merge(ev).merge(ev))
-    assert(flat.asInstanceOf[MergeOp].ups.size == 3)
-    // semantics preserved
-    val got = Compiler.compile(fused, env).df.count()
-    assert(got == events.where(col("value") > 10 && !(col("value") > 100)).count())
+    val (a, b) = (col("value") > 10, col("value") > 100)
+    assert(plan(ev.filter(a).filter(b)) == plan(ev.filter(a && b)))
+    assert(plan(ev.filter(a).filterNot(b)) == plan(ev.filter(a && !b)))
+    val (x, y, z) = (ev.filter(a), ev.filterNot(a), ev.filter(b))
+    assert(plan(x.merge(y).merge(z)) == plan(MergeOp(Seq(x, y, z))))
+    val got = Compiler.compile(ev.filter(a).filterNot(b), env).df.count()
+    assert(got == events.where(a && !b).count())
   }
 
   test("timestamp policies: skip drops null event times, wallclock fills") {

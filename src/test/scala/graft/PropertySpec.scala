@@ -2,7 +2,7 @@ package graft
 
 import graft.ast._
 import graft.ast.dsl._
-import graft.compile.{Compiler, Normalizer, ParquetEnv}
+import graft.compile.{Compiler, ParquetEnv}
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, Prop, Test => SCTest}

@@ -303,6 +303,39 @@ class Round10bSpec extends SparkSpecBase {
     } finally q.stop()
   }
 
+  test("collapseBurstsStream: NULL and separator keys stay distinct " +
+    "(batch parity)") {
+    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val nul = "\u0000"
+    // pairs that a joined string key would merge: (a, NULL) / (NULL, a),
+    // (a<NUL>b, c) / (a, b<NUL>c) and ("", NULL) / (NULL, NULL)
+    val all = Seq[(String, String, Long, Long)](
+      ("a", null, 1L, 0L), (null, "a", 2L, 10L), ("a", null, 5L, 30L),
+      (s"a${nul}b", "c", 3L, 100L), ("a", s"b${nul}c", 4L, 110L),
+      (null, null, 6L, 200L), ("", null, 8L, 210L), (null, null, 7L, 220L))
+    val (b1, b2) = (all.filter(_._4 < 100), all.filterNot(_._4 < 100))
+    val ms = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(String, String, Long, Long)]
+    def keyed(df: org.apache.spark.sql.DataFrame) =
+      df.toDF("k1", "k2", "id", "sec").select(col("k1"), col("k2"), col("id"),
+        timestamp_seconds(col("sec")).as("ts"))
+    val q = graft.ext.Funnel.collapseBurstsStream(keyed(ms.toDF()),
+        Seq("k1", "k2"), "ts", gapSeconds = 60L)
+      .writeStream.format("memory").queryName("debounce10b_keys")
+      .outputMode("append").start()
+    try {
+      ms.addData(b1: _*); q.processAllAvailable()
+      ms.addData(b2: _*); q.processAllAvailable()
+      val got = spark.table("debounce10b_keys").collect()
+        .map(_.getAs[Long]("id")).toSet
+      val want = graft.ext.Funnel.collapseBursts(keyed(all.toDF()),
+          Seq("k1", "k2"), "ts", gapSeconds = 60L, tieBreak = Seq("id"))
+        .collect().map(_.getAs[Long]("id")).toSet
+      assert(got == want && want == Set(1L, 2L, 3L, 4L, 6L, 8L),
+        s"stream kept $got, batch kept $want")
+    } finally q.stop()
+  }
+
   test("hazardCurve: crafted lifetimes yield exact risk sets, churn " +
     "counts, and ppm hazards; the curve conserves the population") {
     def ts(day: Long) = new java.sql.Timestamp(day * 86400000L)

@@ -427,6 +427,10 @@ class Round5Spec extends SparkSpecBase {
       "an operator persist bypassed the OpCaches registry")
   }
 
+  test("every oracle belongs to a registered gate query") {
+    assert(SparkEntry.oracleSql.keySet subsetOf SparkEntry.queries.keySet)
+  }
+
   // ---- VERDICT r4 #6: TPC-H anchor plan shapes locked by spec ----
 
   test("q1/q3/q5 plans: broadcast dims, no nested-loop join, no cartesian") {

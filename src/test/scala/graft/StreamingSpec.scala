@@ -180,6 +180,28 @@ class StreamingSpec extends SparkSpecBase {
     assert(rows.length == 2)
     assert(rows.head.getAs[String]("v") == "good")
     assert(rows.last.isNullAt(rows.last.fieldIndex("v"))) // delete marker
+    // a chained filter + filterNot (two nested CASE WHEN projections) must
+    // emit the same rows and tombstones as the one fused predicate
+    val tbl = table("tbl", Consumed(keys = Seq("k")), orderBy = Some("off"))
+    val (p1, p2) = (col("v") =!= "bad", col("v") === "ugly")
+    def emitted(node: KNode, name: String): Seq[String] = {
+      val ms = MemoryStream[(Long, String, Long)]
+      val env = new StreamEnv(spark,
+        Map("tbl" -> ms.toDF().toDF("k", "v", "off")))
+      val q = Compiler.compile(node, env).df.writeStream
+        .format("memory").queryName(name).outputMode("append").start()
+      try {
+        ms.addData((1L, "good", 1L), (2L, "ugly", 2L), (3L, null, 3L))
+        q.processAllAvailable()
+        ms.addData((1L, "bad", 4L), (2L, "fine", 5L), (3L, "good", 6L))
+        q.processAllAvailable()
+      } finally q.stop()
+      spark.table(name).collect().map(_.toString).toSeq.sorted
+    }
+    val chained = emitted(tbl.filter(p1).filterNot(p2), "tomb_chain")
+    assert(chained == emitted(tbl.filter(p1 && !p2), "tomb_fused"))
+    assert(chained.size == 6 && chained.count(_.endsWith(",null,null]")) == 3,
+      s"expected 3 rows and 3 tombstones, got $chained")
   }
 
   test("session kernel merges bridged sessions via the user merger") {
