@@ -3,6 +3,7 @@ package graft.compile
 import graft.ast._
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** A compiled stream: a DataFrame plus the record-model metadata the DSL
   * tracks across operators — which columns form the key (Kafka's partition
@@ -30,8 +31,16 @@ trait Env {
   /** All known topic names — for pattern subscription (`eval_test.clj:36`). */
   def topicNames: Seq[String]
   def isStreaming: Boolean
+  /** An upper bound on the rows `load(topic)` yields, when the source knows
+    * one without running a job.
+    */
+  def rowsUpperBound(topic: String): Option[Long] = None
 }
 
+/** Batch env over the driver's parquet fixtures (`<dir>/<topic>.parquet`).
+  * Every load goes through [[ParquetEnv.read]], so a warm build re-reads
+  * only cached metadata: no schema-inference job, no footer read.
+  */
 final class ParquetEnv(val spark: SparkSession, dir: String) extends Env {
   // Some fixtures carry INT64 TIMESTAMP(NANOS) columns, which Spark's parquet
   // reader rejects (no nanosecond TimestampType). Read them as longs and
@@ -39,28 +48,140 @@ final class ParquetEnv(val spark: SparkSession, dir: String) extends Env {
   // parquet footer so the convention is data-driven, not name-driven.
   spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
-  def load(topic: String): DataFrame = {
-    val path = s"$dir/$topic.parquet"
-    val df = spark.read.parquet(path)
-    nanoTimestampCols(path).foldLeft(df)((d, c) =>
-      d.withColumn(c, expr(s"timestamp_micros(`$c` div 1000)")))
+  private def path(topic: String): String = s"$dir/$topic.parquet"
+
+  def load(topic: String): DataFrame = ParquetEnv.read(spark, path(topic))
+
+  /** The summed footer row count of the topic's data files. */
+  override def rowsUpperBound(topic: String): Option[Long] =
+    ParquetEnv.footerRows(spark, path(topic))
+
+  def topicNames: Seq[String] = {
+    val d = new java.io.File(dir)
+    Option(d.list()).getOrElse(Array.empty[String]).toSeq
+      .filter(_.endsWith(".parquet")).map(_.stripSuffix(".parquet")).sorted
+  }
+  def isStreaming: Boolean = false
+}
+
+/** Source-metadata cache for parquet reads. One entry per qualified path
+  * holds metadata only — never a DataFrame, data or a session: the stamp
+  * (name, length and mtime of each data file), the explicitly set parquet
+  * and case-sensitivity confs the read depended on, the Spark-inferred
+  * schema, the nano-timestamp columns and, once asked for, the summed
+  * footer row count. A read whose stamp and confs match its entry passes
+  * the cached schema to the reader and starts no Spark job; any other read
+  * runs Spark's inference and the footer scan and replaces the entry, so
+  * the cache never holds more entries than distinct paths. A cold JVM pays
+  * inference once per file.
+  */
+object ParquetEnv {
+  import org.apache.hadoop.conf.Configuration
+  import org.apache.hadoop.fs.{FileSystem, Path}
+  import org.apache.parquet.hadoop.ParquetFileReader
+  import org.apache.parquet.hadoop.util.HadoopInputFile
+
+  private final case class FileStamp(name: String, length: Long, mtime: Long)
+
+  private final class Entry(val stamp: Seq[FileStamp],
+                            val conf: Map[String, String],
+                            val schema: StructType,
+                            val nanoCols: Seq[String]) {
+    private var rows: Option[Long] = _ // null until first asked for
+    def footerRows(hconf: Configuration): Option[Long] = synchronized {
+      if (rows == null) rows = sumFooterRows(stamp, hconf)
+      rows
+    }
   }
 
-  private def nanoTimestampCols(path: String): Seq[String] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    import org.apache.parquet.schema.LogicalTypeAnnotation
+  private val cache = new java.util.concurrent.ConcurrentHashMap[String, Entry]
+
+  /** `spark.read.parquet(path)` with nano-timestamp columns converted to
+    * microsecond timestamps, through the metadata cache.
+    */
+  def read(spark: SparkSession, path: String): DataFrame =
+    resolve(spark, path) match {
+      case None => spark.read.parquet(path)
+      case Some((e, inferred)) =>
+        val df = inferred.getOrElse(spark.read.schema(e.schema).parquet(path))
+        e.nanoCols.foldLeft(df)((d, c) =>
+          d.withColumn(c, expr(s"timestamp_micros(`$c` div 1000)")))
+    }
+
+  private[compile] def footerRows(spark: SparkSession, path: String): Option[Long] =
+    resolve(spark, path).flatMap(_._1.footerRows(hadoopConf(spark)))
+
+  /** Drops every entry; the next read of each path infers again. */
+  private[graft] def clearCache(): Unit = cache.clear()
+
+  private def hadoopConf(spark: SparkSession) = spark.sparkContext.hadoopConfiguration
+
+  /** The current entry for `path` and, on a miss, the inferred frame that
+    * filled it; None when the path does not name existing files (the
+    * plain read then reports it as Spark always has).
+    */
+  private def resolve(spark: SparkSession,
+                      path: String): Option[(Entry, Option[DataFrame])] = {
+    val hconf = hadoopConf(spark)
+    val p = new Path(path)
+    val fs = p.getFileSystem(hconf)
+    val status =
+      try fs.getFileStatus(p) catch { case _: java.io.FileNotFoundException => return None }
+    val key = fs.makeQualified(p).toString
+    val stamp = stampOf(fs, status)
+    val conf = spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") ||
+      k.startsWith("spark.sql.legacy.parquet.") || k == "spark.sql.caseSensitive"
+    }
+    Option(cache.get(key)).filter(e => e.stamp == stamp && e.conf == conf) match {
+      case Some(e) => Some((e, None))
+      case None =>
+        val df = spark.read.parquet(path)
+        val e = new Entry(stamp, conf, df.schema,
+          nanoTimestampCols(status.isFile, stamp, hconf))
+        cache.put(key, e)
+        Some((e, Some(df)))
+    }
+  }
+
+  /** The files a parquet read of `status` scans: the file itself, or every
+    * file under the directory except hidden and metadata files (names
+    * starting with `.` or `_`), sorted by name.
+    */
+  private def stampOf(fs: FileSystem, status: org.apache.hadoop.fs.FileStatus): Seq[FileStamp] = {
+    def of(s: org.apache.hadoop.fs.FileStatus) =
+      FileStamp(s.getPath.toString, s.getLen, s.getModificationTime)
+    if (status.isFile) Seq(of(status))
+    else {
+      val it = fs.listFiles(status.getPath, true)
+      val b = Seq.newBuilder[FileStamp]
+      while (it.hasNext) {
+        val f = it.next()
+        val n = f.getPath.getName
+        if (!n.startsWith(".") && !n.startsWith("_")) b += of(f)
+      }
+      b.result().sortBy(_.name)
+    }
+  }
+
+  /** Summed footer row count of the stamped files; None when a footer
+    * cannot be read, so callers fall back to counting.
+    */
+  private def sumFooterRows(stamp: Seq[FileStamp], hconf: Configuration): Option[Long] =
+    scala.util.Try(stamp.map { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f.name), hconf))
+      try reader.getRecordCount finally reader.close()
+    }.sum).toOption
+
+  /** INT64 TIMESTAMP(NANOS) columns of the path's first parquet file. */
+  private def nanoTimestampCols(isFile: Boolean, stamp: Seq[FileStamp],
+                                hconf: Configuration): Seq[String] = {
     import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
     import scala.jdk.CollectionConverters._
-    val f = new java.io.File(path)
     val first =
-      if (f.isFile) Some(f)
-      else Option(f.listFiles()).flatMap(_.find(_.getName.endsWith(".parquet")))
-    first.toSeq.flatMap { file =>
-      val in = HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(file.getAbsolutePath),
-        spark.sparkContext.hadoopConfiguration)
-      val reader = ParquetFileReader.open(in)
+      if (isFile) stamp.headOption else stamp.find(_.name.endsWith(".parquet"))
+    first.toSeq.flatMap { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(f.name), hconf))
       try reader.getFileMetaData.getSchema.getFields.asScala.toSeq.collect {
         case field if field.isPrimitive &&
             (field.getLogicalTypeAnnotation match {
@@ -70,13 +191,6 @@ final class ParquetEnv(val spark: SparkSession, dir: String) extends Env {
       } finally reader.close()
     }
   }
-
-  def topicNames: Seq[String] = {
-    val d = new java.io.File(dir)
-    Option(d.list()).getOrElse(Array.empty[String]).toSeq
-      .filter(_.endsWith(".parquet")).map(_.stripSuffix(".parquet")).sorted
-  }
-  def isStreaming: Boolean = false
 }
 
 /** Batch env over a directory of `<topic>.<format>` files in any
@@ -189,18 +303,22 @@ object Compiler {
       // Fully-replicated lookup side (`eval.clj:73`) → broadcast hint;
       // unique sources skip the compaction shuffle before the broadcast.
       // Size guard: a mislabeled big table must fail with a clear message,
-      // not an executor OOM mid-broadcast. Counts the COMPACTED frame (an
-      // upsert-heavy changelog can compact far below its raw row count) and
-      // bounds the action with limit(maxRows+1) so a non-parquet source
-      // never pays a full scan at compile time — the count stops as soon as
-      // the limit is hit.
+      // not an executor OOM mid-broadcast. The env's row bound comes first:
+      // decode and compaction only ever remove rows, so a source bound
+      // within maxRows (a parquet footer count) passes without a job.
+      // Otherwise it counts the COMPACTED frame (an upsert-heavy changelog
+      // can compact far below its raw row count), bounded by
+      // limit(maxRows+1) so the count stops as soon as the limit is hit.
       val compacted =
         if (unique) df else compact(df, keys, consumed.eventTime)
       val maxRows =
         env.spark.conf.getOption("graft.globalTable.maxRows")
           .map(_.toLong).getOrElse(10000000L)
       val lim = math.min(maxRows + 1, Int.MaxValue.toLong).toInt
-      val n = if (df.isStreaming) -1L else compacted.limit(lim).count()
+      val n =
+        if (df.isStreaming) -1L
+        else env.rowsUpperBound(topic).filter(_ <= maxRows)
+          .getOrElse(compacted.limit(lim).count())
       require(n <= maxRows,
         s"global table '$topic' has more than $maxRows compacted rows, over " +
         s"the broadcast guard (graft.globalTable.maxRows). GlobalKTables are " +

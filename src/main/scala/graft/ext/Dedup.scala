@@ -1610,9 +1610,11 @@ object Dedup {
     * merge: linkage is the pair-mining face of entity resolution, exactly
     * as [[minhashPairs]] is for near-dup text.
     *
-    * Scale shape: ONE shuffle on the blocking key builds candidate lists;
-    * per-pair scoring joins only (id, token-hash set, exact-field)
-    * tuples — full records never shuffle. In-block pairing is O(b²) per
+    * Scale shape: ONE shuffle on the blocking key moves each record's
+    * scoring payload (id, token-hash sets, exact fields — full records
+    * never shuffle) into its block's id-sorted list; pairs stream from
+    * that list and score inline, and only pairs at or above `threshold`
+    * leave the block stage: no scoring join. In-block pairing is O(b²) per
     * block UNTIL b crosses [[maxBucketFanout]], after which the block
     * emits only O(b) star candidates anchored at its min id — measured
     * saturating (ScaleSpec: 10× the block size past the cap cost 1.5×
@@ -1739,7 +1741,10 @@ object Dedup {
           ex.map { case ((_, wt), i) =>
             when(col(s"pa.ex$i") <=> col(s"pb.ex$i"), wt).otherwise(0.0) })
           .reduce(_ + _)
+        // ids are unique by contract; dirty input with a repeated id
+        // must still emit no self-pair
         return smallPairs.union(starPairs)
+          .where(col("pa.id") =!= col("pb.id"))
           .select(col("pa.id").as("id_a"), col("pb.id").as("id_b"),
             round(inlineScore, 6).as("score"))
           .where(col("score") >= threshold)

@@ -61,8 +61,7 @@ object Graph {
         col(dstCol).cast("long").as("dst"))
         .persist(StorageLevel.MEMORY_AND_DISK))
     val nodes = OpCaches.register(
-      e.select(col("src").as("node"))
-        .union(e.select(col("dst").as("node"))).distinct()
+      e.select(explode(array(col("src"), col("dst"))).as("node")).distinct()
         .persist(StorageLevel.MEMORY_AND_DISK))
     val deg = OpCaches.register(
       e.groupBy(col("src")).agg(count(lit(1)).as("deg"))

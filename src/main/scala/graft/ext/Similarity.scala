@@ -295,6 +295,13 @@ object Similarity {
     * centroid. Driver-small (nlist × dim doubles), serializable into task
     * closures — fit ONCE per corpus with [[fitIvf]] and reuse across every
     * query batch; a production pipeline never retrains per query.
+    *
+    * Invariant: a one-cell model (nlist == 1 in [[fitIvf]], or a corpus
+    * sizing policy that resolves to one cell) holds the placeholder
+    * centroid `Array(0.0)`. Every vector is nearest to the only cell, so
+    * [[nearestOf]] returns cell 0 whatever the value — but its length is
+    * NOT the embedding dimension: take the dimension from the corpus,
+    * never from `centers(0).length`.
     */
   case class IvfModel(centers: Array[Array[Double]]) {
     def nlist: Int = centers.length

@@ -514,10 +514,11 @@ object TimeSeries {
     * double expression in any engine; callers that hash-compare across
     * engines should round `v`.
     *
-    * Scale shape: identical to [[resampleLocf]] plus one extra window
-    * pass in the OPPOSITE direction (following frame) for the next
-    * neighbor — still a single hash exchange on the key (both windows
-    * share partitioning; the second sort is a re-sort, not a shuffle).
+    * Scale shape: one aggregate to the latest reading per (key, bucket),
+    * then ONE `lead()` window on the key (a single hash exchange) pairs
+    * each observation with its successor, and each segment explodes its
+    * gap buckets inline, interpolating as it goes — no grid join, no
+    * second window.
     */
   def resampleInterp(events: DataFrame, keyCol: String, tsCol: String,
                      valueCol: String, bucketSeconds: Long): DataFrame = {

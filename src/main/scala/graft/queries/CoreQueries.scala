@@ -459,7 +459,7 @@ object CoreQueries {
     "agg_salted" -> { (s, d) =>
       // skew-safe two-phase salted aggregation == plain aggregation result
       graft.ext.Skew.saltedSum(
-          s.read.parquet(s"$d/lineitem.parquet")
+          ParquetEnv.read(s, s"$d/lineitem.parquet")
             .select(col("l_returnflag"),
                     round(col("l_quantity") * 100).cast("long").as("qc")),
           keys = Seq("l_returnflag"), valueCol = "qc", salts = 16)
@@ -471,8 +471,8 @@ object CoreQueries {
       // manual salted join for known-skewed keys (Skew.saltedJoin):
       // result ≡ the plain equi-join, only the shuffle partitioning
       // changes (hot keys spread over `salts` reducers)
-      val orders = s.read.parquet(s"$d/orders.parquet")
-      val cust = s.read.parquet(s"$d/customer.parquet")
+      val orders = ParquetEnv.read(s, s"$d/orders.parquet")
+      val cust = ParquetEnv.read(s, s"$d/customer.parquet")
         .withColumnRenamed("c_custkey", "o_custkey")
       graft.ext.Skew.saltedJoin(orders, cust, Seq("o_custkey"), salts = 8)
         .select(col("o_orderkey"), col("o_custkey"), col("c_name"),
@@ -485,8 +485,8 @@ object CoreQueries {
       // plain inner join — the Bloom prunes never-matching fact rows at
       // the scan (here supplier is cut to one nation, so most lineitem
       // rows drop before the shuffle); the join removes false positives
-      val li = s.read.parquet(s"$d/lineitem.parquet")
-      val sup = s.read.parquet(s"$d/supplier.parquet")
+      val li = ParquetEnv.read(s, s"$d/lineitem.parquet")
+      val sup = ParquetEnv.read(s, s"$d/supplier.parquet")
         .where(col("s_nationkey") === 3)
       graft.ext.RuntimeFilter.bloomPrunedJoin(li, sup, "l_suppkey", "s_suppkey")
         .select(col("l_orderkey"), col("l_linenumber"),

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.ext.{Dedup, Funnel, IntervalJoin, Layout, Multimodal, Pipeline, Similarity, Sketches, TextAnalysis, TimeSeries}
+import graft.compile.ParquetEnv
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import ExtShared._
@@ -22,7 +23,7 @@ private[queries] object ExtDataQueries {
       // Morton key over a 1024×1024 (partkey, suppkey) grid; per-tile
       // stats prove the interleave (the write path is spec-checked —
       // file bounding boxes shrink vs a single-column sort)
-      val li = s.read.parquet(s"$d/lineitem.parquet")
+      val li = ParquetEnv.read(s, s"$d/lineitem.parquet")
       li.select(Layout.zorderKey(
             Seq(pmod(col("l_partkey"), lit(1024L)),
                 pmod(col("l_suppkey"), lit(1024L))), 10).as("z"))
@@ -93,7 +94,7 @@ private[queries] object ExtDataQueries {
       // privacy release gate: population of every (nation, segment)
       // quasi-identifier combination, flagged where fewer than k=30
       // customers share it (re-identifiable)
-      Pipeline.kAnonymity(s.read.parquet(s"$d/customer.parquet"),
+      Pipeline.kAnonymity(ParquetEnv.read(s, s"$d/customer.parquet"),
           Seq("c_nationkey", "c_mktsegment"), k = 30L)
         .orderBy(col("c_nationkey"), col("c_mktsegment"))
     },
@@ -101,7 +102,7 @@ private[queries] object ExtDataQueries {
       // l-diversity: a nation bucket is re-identifying if its customers
       // span fewer than l=5 market segments — the sensitive-value
       // concentration leak k-anonymity alone misses
-      Pipeline.lDiversity(s.read.parquet(s"$d/customer.parquet"),
+      Pipeline.lDiversity(ParquetEnv.read(s, s"$d/customer.parquet"),
           Seq("c_nationkey"), "c_mktsegment", l = 5L)
         .orderBy(col("c_nationkey"))
     },

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.ext.{Dedup, Funnel, IntervalJoin, Layout, Multimodal, Pipeline, Similarity, Sketches, TextAnalysis, TimeSeries}
+import graft.compile.ParquetEnv
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import ExtShared._
@@ -284,7 +285,7 @@ private[queries] object ExtEventQueries {
       // SCD2/validity continuity audit: per-supplier holes in the union
       // of [shipdate, shipdate + linenumber d] activity windows, rolled
       // up per key (count / total / longest, in days)
-      val li = s.read.parquet(s"$d/lineitem.parquet")
+      val li = ParquetEnv.read(s, s"$d/lineitem.parquet")
       val day = col("l_shipdate").cast("timestamp").cast("long")
       val sd = ((day - pmod(day, lit(86400L))) / 86400L).cast("long")
       val iv = li.select(col("l_suppkey"), sd.as("s"),
@@ -303,8 +304,8 @@ private[queries] object ExtEventQueries {
       // window → explode factor ≤ 2. Window lengths chosen so the match
       // count (≈ |intervals| × window × order-rate) stays bench-lean:
       // both sides grow with sf, so matches grow ~quadratically.
-      val li = s.read.parquet(s"$d/lineitem.parquet")
-      val o = s.read.parquet(s"$d/orders.parquet")
+      val li = ParquetEnv.read(s, s"$d/lineitem.parquet")
+      val o = ParquetEnv.read(s, s"$d/orders.parquet")
       val intervals = li.where(col("l_quantity") === 50)
         .select(col("l_orderkey"), col("l_linenumber"),
           col("l_shipdate").cast("timestamp").cast("long").as("win_start"),
@@ -322,7 +323,7 @@ private[queries] object ExtEventQueries {
     "join_interval_overlap" -> { (s, d) =>
       // interval×interval overlap join per supplier; each overlapping pair
       // emits from its first shared bin only (exactly once, no dedup stage)
-      val li = s.read.parquet(s"$d/lineitem.parquet")
+      val li = ParquetEnv.read(s, s"$d/lineitem.parquet")
       def ivals(q: Int, p: String) = li.where(col("l_quantity") === q)
         .select(col("l_suppkey"), col("l_orderkey").as(s"${p}_okey"),
           col("l_linenumber").as(s"${p}_ln"),

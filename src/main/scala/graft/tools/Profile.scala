@@ -16,7 +16,9 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
   * leak hunting in one pass. Each named query (gate or bench-only) is
   * warmed once (codegen, fits, index builds), then on each rep built and
   * run to full results — every row computed, none collected — and one
-  * line printed: wall seconds (build + run), Spark jobs, stages, tasks,
+  * line printed: wall seconds of the build (the query-builder call) and of
+  * the run, Spark jobs started during the build, then over build and run
+  * together Spark jobs, stages, tasks,
   * shuffle-write MB, shuffle exchanges in the executed plan, and the
   * number of persisted RDDs that survive `OpCaches.releaseAllLeaks`, each
   * survivor followed by its lineage. Job count is the hidden per-query
@@ -65,39 +67,46 @@ object Profile extends AdaptiveSparkPlanHelper {
       }
     })
 
-    /** One build + full run; returns its wall seconds and executed plan. */
-    def run(name: String): (Double, QueryExecution) = {
+    /** One build + full run: build seconds, run seconds, jobs started
+      * during the build, and the executed plan.
+      */
+    def run(name: String): (Double, Double, Int, QueryExecution) = {
       jobs.set(0); stages.set(0); tasks.set(0); shufW.set(0)
       val t0 = System.nanoTime()
       val qe = all(name)(spark, sfDir).queryExecution
+      val t1 = System.nanoTime()
+      ListenerDrain(spark.sparkContext)
+      val buildJobs = jobs.get
+      val t2 = System.nanoTime()
       SQLExecution.withNewExecutionId(qe, Some(s"profile $name")) {
         qe.toRdd.foreach(_ => ())
       }
-      val secs = (System.nanoTime() - t0) / 1e9
+      val t3 = System.nanoTime()
       ListenerDrain(spark.sparkContext)
-      (secs, qe)
+      ((t1 - t0) / 1e9, (t3 - t2) / 1e9, buildJobs, qe)
     }
     def printLineage(leaked: Seq[RDD[_]]): Unit = leaked.foreach { r =>
       println(s"  leaked id=${r.id} ${r.getStorageLevel.description}")
       r.toDebugString.linesIterator.foreach(l => println(s"    $l"))
     }
 
-    println(f"${"query"}%-28s ${"rep"}%4s ${"sec"}%7s ${"jobs"}%5s " +
-      f"${"stages"}%6s ${"tasks"}%6s ${"shufMB"}%7s ${"exch"}%4s leaked")
+    println(f"${"query"}%-28s ${"rep"}%4s ${"build"}%6s ${"run"}%6s " +
+      f"${"bjobs"}%5s ${"jobs"}%5s ${"stages"}%6s ${"tasks"}%6s " +
+      f"${"shufMB"}%7s ${"exch"}%4s leaked")
     var failed = Seq.empty[String]
     queries.foreach { n =>
       try {
         run(n)
         printLineage(OpCaches.releaseAllLeaks(spark))
         (1 to reps).foreach { rep =>
-          val (secs, qe) = run(n)
+          val (buildS, runS, bjobs, qe) = run(n)
           val exch = collectWithSubqueries(qe.executedPlan) {
             case e: ShuffleExchangeLike => e
           }.size
           val leaked = OpCaches.releaseAllLeaks(spark)
-          println(f"$n%-28s $rep%4d $secs%7.2f ${jobs.get}%5d " +
-            f"${stages.get}%6d ${tasks.get}%6d ${shufW.get / 1e6}%7.2f " +
-            f"$exch%4d ${leaked.size}%6d")
+          println(f"$n%-28s $rep%4d $buildS%6.2f $runS%6.2f $bjobs%5d " +
+            f"${jobs.get}%5d ${stages.get}%6d ${tasks.get}%6d " +
+            f"${shufW.get / 1e6}%7.2f $exch%4d ${leaked.size}%6d")
           printLineage(leaked)
           if (rep == reps) plansDir.foreach { d =>
             Files.writeString(Paths.get(d, s"$n.txt"),
