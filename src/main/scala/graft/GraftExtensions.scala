@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-import org.apache.spark.sql.graftfn._
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.graftfn.VectorFunctions
 
 /** Cluster-wide installation point for the library's native functions:
   *
@@ -16,108 +16,12 @@ import org.apache.spark.sql.graftfn._
   * Every session built with the extension resolves the graftfn expressions
   * by name in SQL (`SELECT simhash60(text) FROM corpus`), without the
   * per-session `VectorFunctions.register` call (which remains for
-  * already-built sessions). Builders mirror register() exactly; both are
-  * spec-checked equivalent to the Column API.
+  * already-built sessions). Both install the one table,
+  * `VectorFunctions.sqlFunctions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  /** Fold a SQL argument that must be a compile-time integer (n-gram size,
-    * lane count, window). Accepts any foldable integral expression — so
-    * `char_ngrams(t, 3)`, `char_ngrams(t, CAST(2 AS BIGINT))`, and
-    * `char_ngrams(t, 1+2)` all resolve — and raises a clear analysis-time
-    * error for columns, NULLs, and non-integral literals, instead of the
-    * former bare `asInstanceOf[Int]` ClassCastException.
-    */
-  private def intArg(fn: String, e: Expression): Int = {
-    def fail(what: String): Nothing = throw new IllegalArgumentException(
-      s"$fn expects a literal integer argument, got $what: ${e.sql}")
-    if (!e.foldable) fail("a non-constant expression")
-    e.eval() match {
-      case i: java.lang.Integer => i.intValue()
-      case l: java.lang.Long =>
-        if (l >= Int.MinValue && l <= Int.MaxValue) l.intValue()
-        else fail("an out-of-range BIGINT")
-      case s: java.lang.Short => s.intValue()
-      case b: java.lang.Byte  => b.intValue()
-      case null               => fail("NULL")
-      case other              => fail(s"a ${other.getClass.getSimpleName}")
-    }
-  }
-
-  /** Fold a SQL argument that must be a literal schema DDL string (the
-    * spark-avro module's SQL face takes a schema string the same way).
-    */
-  private def schemaArg(fn: String, e: Expression): org.apache.spark.sql.types.StructType = {
-    if (!e.foldable) throw new IllegalArgumentException(
-      s"$fn expects a literal schema DDL string, got: ${e.sql}")
-    e.eval() match {
-      case s: org.apache.spark.unsafe.types.UTF8String =>
-        org.apache.spark.sql.types.StructType.fromDDL(s.toString)
-      case other => throw new IllegalArgumentException(
-        s"$fn expects a literal schema DDL string, got: $other")
-    }
-  }
-
-  private val fns: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    // Avro wire serde, schema as a DDL string literal:
-    //   SELECT from_avro(bytes, 'name STRING, x BIGINT') ...
-    "from_avro" -> (es => AvroDecode(es(0), schemaArg("from_avro", es(1)))),
-    "to_avro" -> (es => AvroEncode(es(0), schemaArg("to_avro", es(1)))),
-    "cosine_sim" -> (es => CosineSimilarity(es(0), es(1))),
-    "dot_product" -> (es => DotProduct(es(0), es(1))),
-    "simhash60" -> (es => SimHash60(es(0))),
-    "deflate_ratio" -> (es => DeflateRatio(es(0))),
-    "char_ngrams" -> (es => CharNgrams(es(0), intArg("char_ngrams", es(1)))),
-    "banded_levenshtein" -> (es => BandedLevenshtein(es(0), es(1), es(2))),
-    "dedup_segments" -> (es =>
-      DedupSegments(es(0), VectorFunctions.foldableString("dedup_segments", es(1)),
-        VectorFunctions.foldableString("dedup_segments", es(2)))),
-    "word_shingles" -> (es => WordShingles(es(0), intArg("word_shingles", es(1)))),
-    "word_shingle_hashes" -> (es =>
-      WordShingleHashes(es(0), intArg("word_shingle_hashes", es(1)))),
-    "word_ngram_hashes60" -> (es =>
-      WordNgramHashes60(es(0), intArg("word_ngram_hashes60", es(1)))),
-    "nfc_normalize" -> (es => NfcNormalize(es(0))),
-    "sorted_jaccard" -> (es => SortedJaccard(es(0), es(1))),
-    "ngram_overlap" -> (es =>
-      NgramOverlapCounts(es(0), es(1), intArg("ngram_overlap", es(2)))),
-    "minhash_lanes" -> (es => MinHashLanes(es(0), intArg("minhash_lanes", es(1)))),
-    "word_bigram_hashes" -> (es => WordBigramHashes(es(0))),
-    "word_bigrams" -> (es => WordBigrams(es(0))),
-    "word_ngrams" -> (es => WordNgrams(es(0), intArg("word_ngrams", es(1)))),
-    "span_uncorrupt" -> (es => SpanUncorrupt(es(0), es(1))),
-    "span_corrupt" -> (es =>
-      SpanCorrupt(es(0), es(1), intArg("span_corrupt", es(2)),
-        intArg("span_corrupt", es(3)),
-        VectorFunctions.foldableString("span_corrupt", es(4)))),
-    "wordpiece_encode" -> (es =>
-      WordpieceEncode(es(0),
-        VectorFunctions.foldableStrings("wordpiece_encode", es(1)),
-        VectorFunctions.foldableString("wordpiece_encode", es(2)),
-        intArg("wordpiece_encode", es(3)))),
-    "mmr_select" -> (es =>
-      MmrSelect(es(0), intArg("mmr_select", es(1)),
-        VectorFunctions.foldableDouble("mmr_select", es(2)))),
-    "bpe_encode" -> (es =>
-      BpeEncode(es(0), VectorFunctions.foldableMerges("bpe_encode", es(1)))),
-    "unigram_encode" -> (es =>
-      UnigramEncode(es(0),
-        VectorFunctions.foldableWeights("unigram_encode", es(1)))),
-    "linear_score" -> (es =>
-      LinearScore(es(0), VectorFunctions.foldableWeights("linear_score", es(1)),
-        VectorFunctions.foldableDouble("linear_score", es(2)))),
-    "linear_score_hashed" -> (es =>
-      LinearScoreHashed(es(0),
-        VectorFunctions.foldableDoubles("linear_score_hashed", es(1)),
-        VectorFunctions.foldableDouble("linear_score_hashed", es(2)))),
-    "winnow_fingerprint" -> (es =>
-      WinnowFingerprint(es(0), intArg("winnow_fingerprint", es(1)),
-        intArg("winnow_fingerprint", es(2)))),
-    "ordered_pairs" -> (es => OrderedPairs(es(0)))
-  )
-
   override def apply(ext: SparkSessionExtensions): Unit =
-    fns.foreach { case (name, builder) =>
+    VectorFunctions.sqlFunctions.foreach { case (name, builder) =>
       ext.injectFunction((
         FunctionIdentifier(name),
         new ExpressionInfo("org.apache.spark.sql.graftfn", name),

@@ -71,21 +71,20 @@ object TimestampPolicy {
 }
 
 /** State-store / materialization config (`Materialized` `eval.clj:169-173,
-  * 193-208`): name → queryable sink name; retention → watermark delay;
-  * caching → emission cadence (OutputMode/trigger); store kind → state-store
-  * provider hint (session-wide in Spark, see SURVEY §2.6).
+  * 193-208`): name → queryable store name (interactive queries); retention
+  * → watermark delay plus idle-key eviction in the state kernels. The
+  * emission cadence is the query's output mode and trigger, and the store
+  * kind is chosen per launch (`Runner.StreamsCfg.store`, see SURVEY §2.6).
   */
 final case class Materialized(
     name: Option[String] = None,
-    retention: Option[String] = None, // interval string, e.g. "24 hours"
-    cachingEnabled: Boolean = true,
-    loggingEnabled: Boolean = true,
-    store: StoreKind = StoreKind.Default
+    retention: Option[String] = None // interval string, e.g. "24 hours"
 ) extends Serializable
 
 /** `Stores` factory surface (`eval.clj:216-226`). Spark state-store choice is
-  * session config (`spark.sql.streaming.stateStore.providerClass`), so these
-  * are hints; `Persistent*` maps to RocksDBStateStoreProvider.
+  * session config (`spark.sql.streaming.stateStore.providerClass`), so the
+  * kind applies to a whole launch; `Persistent*` maps to
+  * RocksDBStateStoreProvider.
   */
 sealed trait StoreKind extends Serializable
 object StoreKind {
@@ -161,7 +160,6 @@ final case class TableSource(
 final case class GlobalTableSource(
     topic: String,
     consumed: Consumed = Consumed(),
-    materialized: Option[Materialized] = None,
     unique: Boolean = false
 ) extends KNode
 
@@ -276,25 +274,22 @@ final case class AggOp(
 ) extends KNode
 
 /** `:reduce` (`eval.clj:163-165`) with an arbitrary Scala fn over the value
-  * columns (row-typed); `:aggregate` (`eval.clj:157-159`) with
-  * initializer/aggregator/merger (`eval.clj:265-278`). Runs as a typed
-  * `Aggregator` — see graft.state.UserAggregates.
+  * columns (row-typed); `:aggregate` (`eval.clj:157-159`) with an
+  * initializer and aggregator (`eval.clj:265-278`), unwindowed — a merger
+  * only matters to session windows ([[SessionAggregateOp]]). Both run as
+  * per-key state kernels — see graft.state.UserAggregates.
   */
 final case class ReduceOp(
     grouped: KNode,
-    reducer: (Row, Row) => Row,
-    materialized: Option[Materialized] = None
+    reducer: (Row, Row) => Row
 ) extends KNode
 
 final case class AggregateOp[B](
     grouped: KNode,
     initializer: () => B,
     aggregator: (B, Row) => B,
-    merger: (B, B) => B,
     finisher: B => Row,
-    outSchema: org.apache.spark.sql.types.StructType,
-    window: Option[WindowSpec] = None,
-    materialized: Option[Materialized] = None
+    outSchema: org.apache.spark.sql.types.StructType
 ) extends KNode
 
 /** Session-windowed `:aggregate` with arbitrary user functions — the
@@ -369,12 +364,6 @@ object SinkSpec {
   final case class Foreach(action: Row => Unit) extends SinkSpec
 }
 
-/** `:process!`/`:transformer` (`eval.clj:310-338`): arbitrary keyed stateful
-  * record-at-a-time logic with a state handle — the low-level Processor API.
-  * Runs on flatMapGroupsWithState in streaming; per-key fold in batch.
-  * `state` starts at `init` per key; `process(state, row) => (newState,
-  * emitted rows)`.
-  */
 /** Ext-operator stage — the LLM-pipeline front door. Not in the reference
   * grammar: the reference's core rationale is "topology as data"
   * (`README.md:25-37`) but its operators stop at the Kafka Streams surface;
@@ -396,6 +385,12 @@ final case class TransformOp(
     keys: Seq[String] = Nil
 ) extends KNode
 
+/** `:process!`/`:transformer` (`eval.clj:310-338`): arbitrary keyed stateful
+  * record-at-a-time logic with a state handle — the low-level Processor API.
+  * Runs on flatMapGroupsWithState in streaming; per-key fold in batch.
+  * `state` starts at `init` per key; `process(state, row) => (newState,
+  * emitted rows)`.
+  */
 final case class ProcessOp(
     up: KNode,
     init: () => Array[Byte],

@@ -25,9 +25,8 @@ object dsl {
     TableSource(topic, consumed, orderBy, materialized, unique)
 
   def globalTable(topic: String, consumed: Consumed = Consumed(),
-                  materialized: Option[Materialized] = None,
                   unique: Boolean = false): GlobalTableSource =
-    GlobalTableSource(topic, consumed, materialized, unique)
+    GlobalTableSource(topic, consumed, unique)
 
   def merge(first: KNode, rest: KNode*): MergeOp = MergeOp(first +: rest)
 

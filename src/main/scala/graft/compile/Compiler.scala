@@ -296,7 +296,7 @@ object Compiler {
       } else
         KFrame(compact(df, keys, ord), keys, consumed.eventTime, isTable = true)
 
-    case GlobalTableSource(topic, consumed, _, unique) =>
+    case GlobalTableSource(topic, consumed, unique) =>
       val df = decode(env.load(topic), consumed)
       val keys = consumed.keys
       require(keys.nonEmpty, s"global table $topic needs key columns")
@@ -496,7 +496,7 @@ object Compiler {
             it.map { r =>
               val t = r.get(idx)
               if (t != null) {
-                val us = graft.state.SessionKernels.toMicrosAny(t)
+                val us = graft.Intervals.micros(t)
                 if (partRaw == null || us > partUs) { partRaw = t; partUs = us }
                 r
               } else if (partRaw != null)
@@ -608,13 +608,8 @@ object Compiler {
     // Spark — route through the co-grouped state kernel (SURVEY §2.4).
     if (env.isStreaming && lf.isTable && rf0.isTable && !j.broadcastRight &&
         j.derivedKey.isEmpty && j.window.isEmpty) {
-      val howName = j.how match {
-        case JoinHow.Inner => "inner"
-        case JoinHow.Left => "left"
-        case JoinHow.Outer => "outer"
-      }
       val joined = graft.state.TableKernels.tableTableJoin(
-        lf, rf0, howName, j.retention)
+        lf, rf0, j.how, j.retention)
       val out = if (j.projection.nonEmpty) joined.select(j.projection: _*) else joined
       return KFrame(out, lf.keys, None, isTable = true)
     }
@@ -625,15 +620,8 @@ object Compiler {
     // the latest-value state kernel instead (Kafka's point-in-time lookup).
     if (env.isStreaming && !lf.isTable && rf0.isTable && !j.broadcastRight &&
         j.derivedKey.isEmpty && j.window.isEmpty) {
-      val howName = j.how match {
-        case JoinHow.Inner => "inner"
-        case JoinHow.Left => "left"
-        case JoinHow.Outer =>
-          throw new IllegalArgumentException(
-            "stream-table joins are inner or left (Kafka defines no outer)")
-      }
       val joined = graft.state.TableKernels.streamTableJoin(
-        lf, rf0, howName, j.retention)
+        lf, rf0, j.how, j.retention)
       val out = if (j.projection.nonEmpty) joined.select(j.projection: _*) else joined
       return KFrame(out, lf.keys, lf.eventTime, isTable = false)
     }

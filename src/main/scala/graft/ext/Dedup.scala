@@ -19,20 +19,6 @@ import org.apache.spark.storage.StorageLevel
   */
 object Dedup {
 
-  private def parseIntervalMs(interval: String): Long =
-    graft.Intervals.toMillis(interval)
-
-  /** Event-time cell → epoch millis, tolerant of TIMESTAMP and
-    * TIMESTAMP_NTZ external types (the fixtures carry both).
-    */
-  private def tsMillis(v: Any): Long = v match {
-    case t: java.sql.Timestamp => t.getTime
-    case d: java.time.LocalDateTime =>
-      d.toInstant(java.time.ZoneOffset.UTC).toEpochMilli
-    case i: java.time.Instant => i.toEpochMilli
-    case _ => Long.MinValue
-  }
-
   /** Exact dedup: group identical normalized text, keep the smallest id.
     * One hash-shuffle; at 100 TB, hash first (xxhash64) so the shuffle key is
     * 8 bytes, not the document: here we group by the hash and carry min(id).
@@ -276,8 +262,7 @@ object Dedup {
                          maxBits: Int = 3, maxPerBucket: Int = 1000,
                          tsCol: Option[String] = None,
                          retention: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    import org.apache.spark.sql.streaming.GroupState
+    import org.apache.spark.sql.streaming.{GroupState, OutputMode}
     val spark = docs.sparkSession
     import spark.implicits._
     val chunks = maxBits + 1
@@ -293,20 +278,14 @@ object Dedup {
       }
       -1
     }
-    val withRet = retention.isDefined
-    require(!withRet || tsCol.isDefined,
+    require(retention.isEmpty || tsCol.isDefined,
       "retention needs tsCol (the event-time column the watermark tracks)")
-    val retMs = retention.map(parseIntervalMs).getOrElse(0L)
-    val input = (tsCol, retention) match {
-      case (Some(t), Some(r)) => docs.withWatermark(t, r)
-      case _ => docs
-    }
+    val ret = graft.state.Retention(retention, docs.isStreaming)
     // Carry the RAW watermarked column (an alias of the attribute keeps
     // the watermark metadata; any expression over it — unix_millis, cast —
     // strips it and EventTimeTimeout analysis then rejects the plan).
     val tsRaw = tsCol.map(col).getOrElse(lit(null).cast("timestamp"))
-    val isStreaming = docs.isStreaming
-    val banded = input
+    val banded = ret.watermark(docs, tsCol)
       .select(col(idCol).cast("long").as("id"), simhash(col(textCol)).as("sig"),
               tsRaw.as("ts"))
       .select(col("id"), col("sig"), col("ts"),
@@ -315,23 +294,17 @@ object Dedup {
         }: _*)))
       .toDF("id", "sig", "ts", "chunk", "bits")
       .as[(Long, Long, java.sql.Timestamp, Int, Long)]
-    val timeout =
-      if (withRet) GroupStateTimeout.EventTimeTimeout
-      else GroupStateTimeout.NoTimeout
     val paired = banded.groupByKey(r => (r._4, r._5))
-      .flatMapGroupsWithState(OutputMode.Append, timeout) {
+      .flatMapGroupsWithState(OutputMode.Append, ret.timeout) {
         (key: (Int, Long), it: Iterator[(Long, Long, java.sql.Timestamp, Int, Long)],
          state: GroupState[List[(Long, Long)]]) =>
-          if (state.hasTimedOut) { // bucket idle past retention
-            state.remove()
-            Iterator.empty
-          } else {
+          ret.unlessEvicted(state) { // bucket idle past retention
             val thisChunk = key._1
             var seen = state.getOption.getOrElse(Nil)
-            var maxTs = Long.MinValue
+            var maxTs = graft.Intervals.NoEventTime
             val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Int)]
             it.foreach { case (id, sg, ts, _, _) =>
-              if (ts != null) maxTs = math.max(maxTs, tsMillis(ts))
+              maxTs = math.max(maxTs, graft.Intervals.millis(ts))
               seen.foreach { case (oid, osig) =>
                 if (oid != id) {
                   val ham = java.lang.Long.bitCount(sg ^ osig)
@@ -342,10 +315,7 @@ object Dedup {
               seen = ((id, sg) :: seen).take(maxPerBucket)
             }
             state.update(seen)
-            if (withRet && isStreaming)
-              // evict when the watermark passes last-arrival + retention
-              state.setTimeoutTimestamp(math.max(
-                maxTs + retMs, state.getCurrentWatermarkMs() + 1L))
+            ret.arm(state, maxTs)
             out.iterator
           }
       }
@@ -379,8 +349,7 @@ object Dedup {
                          maxPerBucket: Int = 1000,
                          tsCol: Option[String] = None,
                          retention: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-    import org.apache.spark.sql.streaming.GroupState
+    import org.apache.spark.sql.streaming.{GroupState, OutputMode}
     val numHashes = bands * rowsPerBand
     val spark = docs.sparkSession
     import spark.implicits._
@@ -402,18 +371,12 @@ object Dedup {
       while (l < numHashes) { if (a(l) == b(l)) eq += 1; l += 1 }
       eq.toDouble / numHashes
     }
-    val withRet = retention.isDefined
-    require(!withRet || tsCol.isDefined,
+    require(retention.isEmpty || tsCol.isDefined,
       "retention needs tsCol (the event-time column the watermark tracks)")
-    val retMs = retention.map(parseIntervalMs).getOrElse(0L)
-    val input = (tsCol, retention) match {
-      case (Some(t), Some(r)) => docs.withWatermark(t, r)
-      case _ => docs
-    }
+    val ret = graft.state.Retention(retention, docs.isStreaming)
     // raw watermarked column: see simhashPairsStream for why no expression
     val tsRaw = tsCol.map(col).getOrElse(lit(null).cast("timestamp"))
-    val isStreaming = docs.isStreaming
-    val sig = input.select(col(idCol).cast("long").as("id"),
+    val sig = ret.watermark(docs, tsCol).select(col(idCol).cast("long").as("id"),
       graft.functions.VectorFunctions.minhash_lanes(
         graft.functions.VectorFunctions.word_shingle_hashes(col(textCol), k),
         numHashes).as("sig"),
@@ -426,24 +389,18 @@ object Dedup {
       }: _*)))
       .toDF("id", "sig", "ts", "band", "band_key")
       .as[(Long, Seq[Long], java.sql.Timestamp, Int, Long)]
-    val timeout =
-      if (withRet) GroupStateTimeout.EventTimeTimeout
-      else GroupStateTimeout.NoTimeout
     val paired = banded.groupByKey(r => (r._4, r._5))
-      .flatMapGroupsWithState(OutputMode.Append, timeout) {
+      .flatMapGroupsWithState(OutputMode.Append, ret.timeout) {
         (key: (Int, Long),
          it: Iterator[(Long, Seq[Long], java.sql.Timestamp, Int, Long)],
          state: GroupState[List[(Long, Seq[Long])]]) =>
-          if (state.hasTimedOut) { // bucket idle past retention
-            state.remove()
-            Iterator.empty
-          } else {
+          ret.unlessEvicted(state) { // bucket idle past retention
             val thisBand = key._1
             var seen = state.getOption.getOrElse(Nil)
-            var maxTs = Long.MinValue
+            var maxTs = graft.Intervals.NoEventTime
             val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
             it.foreach { case (id, sg, ts, _, _) =>
-              if (ts != null) maxTs = math.max(maxTs, tsMillis(ts))
+              maxTs = math.max(maxTs, graft.Intervals.millis(ts))
               seen.foreach { case (oid, osig) =>
                 if (oid != id && firstMatchingBand(sg, osig) == thisBand) {
                   val est = estJaccard(sg, osig)
@@ -454,9 +411,7 @@ object Dedup {
               seen = ((id, sg) :: seen).take(maxPerBucket)
             }
             state.update(seen)
-            if (withRet && isStreaming)
-              state.setTimeoutTimestamp(math.max(
-                maxTs + retMs, state.getCurrentWatermarkMs() + 1L))
+            ret.arm(state, maxTs)
             out.iterator
           }
       }
@@ -1718,10 +1673,16 @@ object Dedup {
           (fz.map { case (_, i) => col(s"fz$i") } ++
            ex.map { case (_, i) => col(s"ex$i") }): _*)
         val w = Window.partitionBy(cs.map(col): _*)
+        // a repeated id keeps one copy per block (its least payload), so
+        // each (id_a, id_b) pair is scored once: copies sort adjacent in
+        // payload order, and this window shares the block exchange
         val base = side
           .where(cs.map(c => col(c).isNotNull).reduce(_ && _) &&
             col("id").isNotNull)
           .withColumn("__p", pay)
+          .withColumn("__dup",
+            lag(col("id"), 1).over(w.orderBy(col("__p"))) <=> col("id"))
+          .where(!col("__dup"))
           .withColumn("__bn", count(lit(1)).over(w))
           .withColumn("__anchor", min(col("__p")).over(w))
         val smallPairs = base.where(col("__bn") <= maxBucketFanout)
@@ -1741,10 +1702,7 @@ object Dedup {
           ex.map { case ((_, wt), i) =>
             when(col(s"pa.ex$i") <=> col(s"pb.ex$i"), wt).otherwise(0.0) })
           .reduce(_ + _)
-        // ids are unique by contract; dirty input with a repeated id
-        // must still emit no self-pair
         return smallPairs.union(starPairs)
-          .where(col("pa.id") =!= col("pb.id"))
           .select(col("pa.id").as("id_a"), col("pb.id").as("id_b"),
             round(inlineScore, 6).as("score"))
           .where(col("score") >= threshold)

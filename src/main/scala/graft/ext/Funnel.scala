@@ -83,7 +83,7 @@ object Funnel {
                          typeCol: String, steps: Seq[String],
                          withinSeconds: Long,
                          retention: Option[String] = None): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+    import org.apache.spark.sql.streaming.{GroupState, OutputMode}
     import org.apache.spark.sql.{Encoders, Row}
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     require(steps.nonEmpty, "funnel needs at least one step")
@@ -102,70 +102,41 @@ object Funnel {
     // for unbounded-user streams (watermark + event-time timeout evicting
     // users idle past the interval — an evicted user restarts the funnel).
     val userType = events.schema(events.schema.fieldIndex(userCol)).dataType
-    val withRet = retention.isDefined && events.isStreaming
-    val input = if (withRet)
-      events.withWatermark(tsCol, retention.get) else events
-    val retMs = retention.map(graft.Intervals.toMillis).getOrElse(0L)
-    val typed = input
+    val ret = graft.state.Retention(retention, events.isStreaming)
+    val typed = ret.watermark(events, Some(tsCol))
       .where(col(typeCol).isin(steps.map(x => x: Any): _*))
       // a null event time cannot place a step in the funnel chain (and
-      // would poison the kernel's micros conversion) — drop at the scan
+      // would read as no event time in the kernel) — drop at the scan
       .where(col(tsCol).isNotNull)
       // the RAW ts attribute keeps the watermark metadata EventTimeTimeout
       // analysis requires (an expression like unix_micros strips it);
       // micros are derived in the kernel instead
       .select(col(userCol).as("user"), col(tsCol).as("ts"),
               col(typeCol).as("t"))
-    // tolerant of TIMESTAMP and TIMESTAMP_NTZ external types
-    def toMicros(v: Any): Long = v match {
-      case t: java.sql.Timestamp =>
-        Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
-      case d: java.time.LocalDateTime =>
-        d.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L + d.getNano / 1000L
-      case i: java.time.Instant =>
-        i.getEpochSecond * 1000000L + i.getNano / 1000L
-      case other => throw new IllegalArgumentException(
-        s"windowFunnelStream: unsupported event-time value $other")
-    }
     implicit val outEnc: org.apache.spark.sql.Encoder[Row] =
       Encoders.row(StructType(Seq(
         StructField("user", userType),
         StructField("depth", LongType, nullable = false))))
-    val timeout =
-      if (withRet) GroupStateTimeout.EventTimeTimeout
-      else GroupStateTimeout.NoTimeout
     // key on the NATIVE user value wrapped in a single-field Row (the
     // sampleExactPerKeyStream pattern): String.valueOf collapsed a null id
-    // and the literal string "null" into one merged funnel. Encoder passed
-    // explicitly — outEnc is the implicit Encoder[Row] for the output.
-    val keyEnc: org.apache.spark.sql.Encoder[Row] =
-      Encoders.row(StructType(Seq(StructField("user", userType))))
-    typed.groupByKey(r => Row(r.get(0)))(keyEnc)
-      .flatMapGroupsWithState(OutputMode.Append, timeout) {
+    // and the literal string "null" into one merged funnel.
+    graft.state.Keyed.byKey(typed, Seq("user"))
+      .flatMapGroupsWithState(OutputMode.Append, ret.timeout) {
         (_: Row, it: Iterator[Row], state: GroupState[Seq[Long]]) =>
-          if (state.hasTimedOut) { // user idle past retention → evict
-            state.remove()
-            Iterator.empty
-          } else {
+          ret.unlessEvicted(state) { // user idle past retention
             val rows = it.toArray // non-empty: data-driven invocation
             val userVal = rows.head.get(0)
             // Long.MinValue = depth not reached (null-free state row)
             val acc = state.getOption.getOrElse(Seq.fill(k)(Long.MinValue)).toArray
             val before = acc.count(_ != Long.MinValue)
-            rows.map(r => (toMicros(r.get(1)), stepOf(r.getString(2))))
+            rows.map(r => (graft.Intervals.micros(r.get(1)), stepOf(r.getString(2))))
               .sorted.foreach { case (ts, j) =>
                 val chainStart = if (j == 0) ts else acc(j - 1)
                 if (chainStart != Long.MinValue && ts - chainStart <= withinUs)
                   acc(j) = math.max(acc(j), chainStart)
               }
             state.update(acc.toSeq)
-            if (withRet) {
-              val maxTsMs = rows.iterator
-                .map(r => toMicros(r.get(1)) / 1000L)
-                .foldLeft(Long.MinValue)(math.max)
-              state.setTimeoutTimestamp(math.max(
-                maxTsMs + retMs, state.getCurrentWatermarkMs() + 1L))
-            }
+            ret.arm(state, rows.iterator.map(r => graft.Intervals.millis(r.get(1))).max)
             val after = acc.count(_ != Long.MinValue)
             if (after > before) Iterator(Row(userVal, after.toLong))
             else Iterator.empty

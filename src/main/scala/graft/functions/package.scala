@@ -5,5 +5,4 @@ package graft
   */
 package object functions {
   val VectorFunctions = org.apache.spark.sql.graftfn.VectorFunctions
-  type GraftExtensions = org.apache.spark.sql.graftfn.GraftExtensions
 }

@@ -278,7 +278,7 @@ object CoreQueries {
         Seq(col("user_id"))))(s, d)
     },
     "agg_aggregate" -> { (s, d) =>
-      // typed initializer/aggregator/merger kernel (eval.clj:265-278)
+      // typed initializer/aggregator kernel (eval.clj:265-278)
       val node = AggregateOp[(Long, Long, Double)](
         stream(Seq("events"), eventsConsumed)
           .mapValues(col("value")).groupByKey,
@@ -287,7 +287,6 @@ object CoreQueries {
           val v = r.getAs[Double]("value")
           (b._1 + 1, b._2 + math.round(v * 100), math.max(b._3, v))
         },
-        merger = (x, y) => (x._1 + y._1, x._2 + y._2, math.max(x._3, y._3)),
         finisher = b => Row(b._1, b._2, b._3),
         outSchema = StructType(Seq(
           StructField("n", LongType), StructField("sum_c", LongType),

@@ -3,7 +3,6 @@ package graft.state
 import graft.ast.ProcessOp
 import graft.compile.{Env, KFrame}
 import org.apache.spark.sql.{Encoders, Row}
-import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** The low-level Processor/Transformer API (`:processor-supplier`
@@ -22,10 +21,7 @@ object Processors {
   def run(p: ProcessOp, env: Env): KFrame = {
     val f = graft.compile.Compiler.compile(p.up, env)
     val keyNames = f.keys
-    val keySchema = StructType(keyNames.map(f.df.schema(_)))
-    val kEnc = Encoders.row(keySchema)
     val oEnc = Encoders.row(p.outSchema)
-    val toKey = (row: Row) => Row.fromSeq(keyNames.map(row.getAs[Any]))
     val ts = f.eventTime
     val (init, process) = (p.init, p.process)
     val out =
@@ -47,12 +43,12 @@ object Processors {
             }
         }(oEnc)
       } else {
-        val grouped = f.df.groupByKey(toKey)(kEnc)
         val ttl = p.stateTtl
         val timeoutKind =
           if (ttl.isDefined) GroupStateTimeout.ProcessingTimeTimeout
           else GroupStateTimeout.NoTimeout
-        grouped.flatMapGroupsWithState(OutputMode.Append, timeoutKind) {
+        Keyed.byKey(f.df, keyNames).flatMapGroupsWithState(
+          OutputMode.Append, timeoutKind) {
           (_: Row, it: Iterator[Row], gs: GroupState[Array[Byte]]) =>
             if (gs.hasTimedOut) {
               // lruMap approximation: evict idle key state (SURVEY §2.6)

@@ -1,9 +1,11 @@
 package graft.state
 
+import graft.Intervals
+import graft.Intervals.fromMicros
 import graft.ast.SessionAggregateOp
 import graft.compile.{Env, KFrame}
 import org.apache.spark.sql.{Encoders, Row}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, OutputMode}
 import org.apache.spark.sql.types.{StructField, StructType, TimestampType}
 
 /** Session windows over arbitrary user aggregation functions — SURVEY §7.5
@@ -22,65 +24,19 @@ import org.apache.spark.sql.types.{StructField, StructType, TimestampType}
   */
 object SessionKernels extends Serializable {
 
-  /** Timestamp ↔ microseconds (java.sql.Timestamp.getTime is millis only —
-    * the fixtures carry microsecond components).
-    */
-  private[state] def toMicros(t: java.sql.Timestamp): Long =
-    Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
-
-  /** Event-time cell → microseconds, tolerant of TIMESTAMP and
-    * TIMESTAMP_NTZ external types (parquet `isAdjustedToUTC=false` columns
-    * read as NTZ → `LocalDateTime` rows; the session timezone is UTC, so
-    * the NTZ wall-clock IS the instant — same convention as the DuckDB
-    * oracle's naive timestamps). The read happens on the row VALUE, never
-    * the plan, so watermark metadata on the column survives.
-    */
-  private[graft] def toMicrosAny(v: Any): Long = v match {
-    case t: java.sql.Timestamp => toMicros(t)
-    case d: java.time.LocalDateTime =>
-      val i = d.toInstant(java.time.ZoneOffset.UTC)
-      i.getEpochSecond * 1000000L + i.getNano / 1000L
-    case i: java.time.Instant =>
-      i.getEpochSecond * 1000000L + i.getNano / 1000L
-    case other => throw new IllegalArgumentException(
-      s"session event time must be a timestamp value, got " +
-        s"${if (other == null) "null" else other.getClass.getName}")
-  }
-  private[state] def fromMicros(us: Long): java.sql.Timestamp = {
-    val t = new java.sql.Timestamp(Math.floorDiv(us, 1000000L) * 1000L)
-    t.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
-    t
-  }
-
-  private def parseGapMs(gap: String): Long = {
-    val Array(n, unit) = gap.trim.split("\\s+")
-    val base = unit.toLowerCase.stripSuffix("s") match {
-      case "millisecond" => 1L
-      case "second" => 1000L
-      case "minute" => 60000L
-      case "hour" => 3600000L
-      case "day" => 86400000L
-      case u => throw new IllegalArgumentException(s"unsupported gap unit $u")
-    }
-    n.toLong * base
-  }
-
   def run[B](op: SessionAggregateOp[B], env: Env): KFrame = {
     val f = UserAggregates.groupedOf(op.grouped, env)
     val ts = f.eventTime.getOrElse(
       throw new IllegalArgumentException("session aggregate needs event time"))
-    val gapUs = parseGapMs(op.gap) * 1000L
+    val gapUs = Intervals.toMillis(op.gap) * 1000L
     val keyNames = f.keys
-    val keySchema = StructType(keyNames.map(f.df.schema(_)))
     val outSchema = StructType(
-      keySchema ++
+      StructType(keyNames.map(f.df.schema(_))) ++
       Seq(StructField("session_start", TimestampType),
           StructField("session_end", TimestampType)) ++
       op.outSchema)
-    val kEnc = Encoders.row(keySchema)
     val oEnc = Encoders.row(outSchema)
     val tsIdx = f.df.schema.fieldIndex(ts)
-    val toKey = (row: Row) => Row.fromSeq(keyNames.map(row.getAs[Any]))
     val (init, step, merge, finish) =
       (op.initializer, op.aggregator, op.merger, op.finisher)
 
@@ -105,6 +61,14 @@ object SessionKernels extends Serializable {
       (merged :: rest).sortBy(_.start)
     }
 
+    /** [[insert]] at the row's event time; a record without one (null)
+      * belongs to no session, as in Spark's `session_window`.
+      */
+    def add(sessions: List[Session], row: Row): List[Session] = {
+      val t = Intervals.micros(row.get(tsIdx))
+      if (t == Intervals.NoEventTime) sessions else insert(sessions, t, row)
+    }
+
     val out =
       if (!env.isStreaming) {
         // Secondary sort: per-key rows arrive in (event time, tiebreak)
@@ -115,10 +79,8 @@ object SessionKernels extends Serializable {
           col(ts) +: SecondarySort.tiebreakCols(f.df, keyNames, Seq(ts))
         SecondarySort.foldSortedGroups(f.df, keyNames, orderCols) {
           (k: Row, rows: Iterator[Row]) =>
-            val sessions = rows.foldLeft(List.empty[Session]) { (acc, r) =>
-              insert(acc, toMicrosAny(r.get(tsIdx)), r)
-            }
-            sessions.iterator.map(s => emitRow(k, s))
+            rows.foldLeft(List.empty[Session])(add).iterator
+              .map(s => emitRow(k, s))
         }(oEnc)
       } else {
         // State = array<struct<start,end,buf>> — an explicit struct row
@@ -146,28 +108,20 @@ object SessionKernels extends Serializable {
           .map(s => Session(s.getLong(0), s.getLong(1),
             OpaqueState.deser(s.getAs[Array[Byte]](2))))
           .toList
-        val withRetention = op.retention.isDefined
-        val input = op.retention match {
-          case Some(ret) => f.df.withWatermark(ts, ret)
-          case None => f.df
-        }
-        val timeout =
-          if (withRetention) GroupStateTimeout.EventTimeTimeout
-          else GroupStateTimeout.NoTimeout
-        input.groupByKey(toKey)(kEnc).flatMapGroupsWithState(
-          OutputMode.Append, timeout) {
+        // the shared watermark and timeout kind; the timer is this
+        // kernel's own (session end, not last event + retention)
+        val ret = Retention(op.retention, isStreaming = true)
+        Keyed.byKey(ret.watermark(f.df, Some(ts)), keyNames)
+          .flatMapGroupsWithState(OutputMode.Append, ret.timeout) {
           (k: Row, it: Iterator[Row], state: GroupState[Row]) =>
-            var sessions = state.getOption.map(decode).getOrElse(Nil)
-            val before = sessions.toSet
-            it.foreach { r =>
-              sessions = insert(sessions,
-                toMicrosAny(r.get(tsIdx)), r)
-            }
+            val prior = state.getOption.map(decode).getOrElse(Nil)
+            val sessions = it.foldLeft(prior)(add)
+            val before = prior.toSet
             // snapshot emissions BEFORE eviction: a session updated in this
             // batch emits its latest state even if it closes immediately
             val emitted = sessions.iterator.filterNot(before)
               .map(s => emitRow(k, s)).toList
-            if (withRetention) {
+            if (ret.active) {
               val wmUs = state.getCurrentWatermarkMs() * 1000L
               val open = sessions.filter(_.end > wmUs)
               if (open.isEmpty) state.remove()

@@ -8,20 +8,18 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
 
 /** Typed per-key state kernels — the reference's arbitrary-lambda
   * aggregation surface (`:reduce` `eval.clj:163-165,280-283`; `:aggregate`
-  * with initializer/aggregator/merger `eval.clj:157-159,265-278`). The
+  * with initializer/aggregator `eval.clj:157-159,265-278`). The
   * declarative fast path (Column aggregates → codegen) is `AggOp`; these
   * kernels exist for genuinely opaque user functions, matching SURVEY §7.5
   * item 5: expression DSL when possible, black-box closures only when not.
   *
-  * Batch: groupByKey + [map|flatMap]Groups (shuffle on the key, same as any
-  * agg). Streaming: flatMapGroupsWithState in Update mode — the running
-  * per-key emission cadence Kafka Streams has (micro-batch granularity,
-  * SURVEY §2.3 note).
+  * One flatMapGroupsWithState body per kernel serves both modes. Streaming:
+  * Update mode — the running per-key emission cadence Kafka Streams has
+  * (micro-batch granularity, SURVEY §2.3 note). Batch: Spark plans the same
+  * body as a group-map (shuffle on the key, same as any agg) and hands it
+  * empty state, so the fold starts from the initializer.
   */
 object UserAggregates {
-
-  private def keyAndValues(f: KFrame): (Seq[String], Seq[String]) =
-    (f.keys, f.valueCols)
 
   private[graft] def groupedOf(grouped: KNode, env: Env): KFrame = grouped match {
     case GroupByOp(up, keys, _) => Compiler.compile(SelectKeyOp(up, keys), env)
@@ -29,72 +27,45 @@ object UserAggregates {
     case other => Compiler.compile(other, env)
   }
 
+  private def outSchema(f: KFrame, values: StructType): StructType =
+    StructType(StructType(f.keys.map(f.df.schema(_))) ++ values)
+
   def reduce(r: ReduceOp, env: Env): KFrame = {
     val f = groupedOf(r.grouped, env)
-    val (keyNames, valNames) = keyAndValues(f)
-    val keySchema = StructType(keyNames.map(f.df.schema(_)))
+    val valNames = f.valueCols
     val valSchema = StructType(valNames.map(f.df.schema(_)))
-    val outSchema = StructType(keySchema ++ valSchema)
-    val kEnc = Encoders.row(keySchema)
-    val oEnc = Encoders.row(outSchema)
     val reducer = r.reducer
-    val toKey = (row: Row) => Row.fromSeq(keyNames.map(row.getAs[Any]))
     val toVal = (row: Row) => Row.fromSeq(valNames.map(row.getAs[Any]))
-    val grouped = f.df.groupByKey(toKey)(kEnc)
-    val out =
-      if (!env.isStreaming)
-        grouped.mapGroups { (k: Row, it: Iterator[Row]) =>
-          val v = it.map(toVal).reduce(reducer)
-          Row.fromSeq(k.toSeq ++ v.toSeq)
-        }(oEnc)
-      else
-        grouped.flatMapGroupsWithState(
-          OutputMode.Update, GroupStateTimeout.NoTimeout) {
-          (k: Row, it: Iterator[Row], state: GroupState[Row]) =>
-            val incoming = it.map(toVal)
-            val v = (state.getOption.iterator ++ incoming).reduce(reducer)
-            state.update(v)
-            Iterator.single(Row.fromSeq(k.toSeq ++ v.toSeq))
-        }(Encoders.row(valSchema), oEnc)
-    KFrame(out.toDF(), keyNames, None, isTable = true)
+    val out = Keyed.byKey(f.df, f.keys).flatMapGroupsWithState(
+      OutputMode.Update, GroupStateTimeout.NoTimeout) {
+      (k: Row, it: Iterator[Row], state: GroupState[Row]) =>
+        val v = (state.getOption.iterator ++ it.map(toVal)).reduce(reducer)
+        state.update(v)
+        Iterator.single(Row.fromSeq(k.toSeq ++ v.toSeq))
+    }(Encoders.row(valSchema), Encoders.row(outSchema(f, valSchema)))
+    KFrame(out.toDF(), f.keys, None, isTable = true)
   }
 
   def aggregate[B](a: AggregateOp[B], env: Env): KFrame = {
     val f = groupedOf(a.grouped, env)
-    val keyNames = f.keys
-    val keySchema = StructType(keyNames.map(f.df.schema(_)))
-    val outSchema = StructType(keySchema ++ a.outSchema)
-    val kEnc = Encoders.row(keySchema)
-    val oEnc = Encoders.row(outSchema)
     val (init, step, finish) = (a.initializer, a.aggregator, a.finisher)
-    val toKey = (row: Row) => Row.fromSeq(keyNames.map(row.getAs[Any]))
-    val grouped = f.df.groupByKey(toKey)(kEnc)
-    val out =
-      if (!env.isStreaming)
-        grouped.mapGroups { (k: Row, it: Iterator[Row]) =>
-          val b = it.foldLeft(init())(step)
-          Row.fromSeq(k.toSeq ++ finish(b).toSeq)
-        }(oEnc)
-      else {
-        // Streaming: state is a struct row with ONE binary field holding the
-        // serialized user accumulator. The state store sees a plain UnsafeRow
-        // (schema visible in the checkpoint, no kryo/java class baked into
-        // the encoder); only the opaque payload itself is user-serialized —
-        // the same property Kafka Streams' aggregate store has, where B
-        // round-trips through the aggregate-value serde.
-        val sEnc = Encoders.row(OpaqueState.schema)
-        grouped.flatMapGroupsWithState(
-          OutputMode.Update, GroupStateTimeout.NoTimeout) {
-          (k: Row, it: Iterator[Row], state: GroupState[Row]) =>
-            val b0 = state.getOption
-              .map(r => OpaqueState.deser(r.getAs[Array[Byte]](0)).asInstanceOf[B])
-              .getOrElse(init())
-            val b = it.foldLeft(b0)(step)
-            state.update(Row(OpaqueState.ser(b)))
-            Iterator.single(Row.fromSeq(k.toSeq ++ finish(b).toSeq))
-        }(sEnc, oEnc)
-      }
-    KFrame(out.toDF(), keyNames, None, isTable = true)
+    // State is a struct row with ONE binary field holding the serialized
+    // user accumulator. The state store sees a plain UnsafeRow (schema
+    // visible in the checkpoint, no kryo/java class baked into the
+    // encoder); only the opaque payload itself is user-serialized — the
+    // same property Kafka Streams' aggregate store has, where B
+    // round-trips through the aggregate-value serde.
+    val out = Keyed.byKey(f.df, f.keys).flatMapGroupsWithState(
+      OutputMode.Update, GroupStateTimeout.NoTimeout) {
+      (k: Row, it: Iterator[Row], state: GroupState[Row]) =>
+        val b0 = state.getOption
+          .map(r => OpaqueState.deser(r.getAs[Array[Byte]](0)).asInstanceOf[B])
+          .getOrElse(init())
+        val b = it.foldLeft(b0)(step)
+        state.update(Row(OpaqueState.ser(b)))
+        Iterator.single(Row.fromSeq(k.toSeq ++ finish(b).toSeq))
+    }(Encoders.row(OpaqueState.schema), Encoders.row(outSchema(f, a.outSchema)))
+    KFrame(out.toDF(), f.keys, None, isTable = true)
   }
 }
 

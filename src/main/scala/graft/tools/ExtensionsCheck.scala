@@ -4,7 +4,12 @@ import org.apache.spark.sql.SparkSession
 
 /** Fresh-JVM check that `spark.sql.extensions=graft.GraftExtensions`
   * resolves every native function by name in SQL (the cluster-install
-  * path; the in-suite specs cover the per-session register() path).
+  * path; the in-suite specs cover the per-session register() path): every
+  * name of `VectorFunctions.sqlFunctions` must pass `functionExists` (exit
+  * status 1 naming the misses otherwise), then a smoke query evaluates a
+  * spread of them.
+  *
+  * {{{ sbt "runMain graft.tools.ExtensionsCheck" }}}
   */
 object ExtensionsCheck {
   def main(args: Array[String]): Unit = {
@@ -15,6 +20,15 @@ object ExtensionsCheck {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val names = graft.functions.VectorFunctions.sqlFunctions.map(_._1)
+    val missing = names.filterNot(spark.catalog.functionExists)
+    if (missing.nonEmpty) {
+      System.err.println(
+        s"extension left ${missing.size} of ${names.size} functions " +
+          s"unresolved: ${missing.mkString(", ")}")
+      spark.stop()
+      sys.exit(1)
+    }
     val r = spark.sql(
       """SELECT simhash60('alpha beta') AS sh,
                 sorted_jaccard(word_shingle_hashes('a b c', 2),
@@ -62,7 +76,7 @@ object ExtensionsCheck {
             r6.getString(2) == "cafe\u00e9" && r6.getInt(3) == 3 &&
             r6.getString(4) == "ab" && r6.getString(5) == "x\ny",
       s"round-6 extension functions misbehaved: $r6")
-    println(s"extensions OK: $r / $r6")
+    println(s"extensions OK: ${names.size} functions resolve; $r / $r6")
     spark.stop()
   }
 }

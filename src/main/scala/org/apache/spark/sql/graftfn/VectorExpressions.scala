@@ -2666,87 +2666,71 @@ object VectorFunctions {
     }
   }
 
-  /** SQL registration (`SELECT cosine_sim(a, b)`). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSimilarity(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product", exprs => DotProduct(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash60", exprs => SimHash60(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "deflate_ratio", exprs => DeflateRatio(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "char_ngrams", exprs =>
-        CharNgrams(exprs(0), foldableInt("char_ngrams", exprs(1))), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "banded_levenshtein", exprs =>
-        BandedLevenshtein(exprs(0), exprs(1), exprs(2)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dedup_segments", exprs =>
-        DedupSegments(exprs(0), foldableString("dedup_segments", exprs(1)),
-          foldableString("dedup_segments", exprs(2))), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_shingles", exprs =>
-        WordShingles(exprs(0), foldableInt("word_shingles", exprs(1))), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_shingle_hashes", exprs =>
-        WordShingleHashes(exprs(0),
-          foldableInt("word_shingle_hashes", exprs(1))), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_jaccard", exprs => SortedJaccard(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "ngram_overlap", exprs =>
-        NgramOverlapCounts(exprs(0), exprs(1),
-          foldableInt("ngram_overlap", exprs(2))), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_lanes", exprs =>
-        MinHashLanes(exprs(0), foldableInt("minhash_lanes", exprs(1))), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_bigram_hashes", exprs => WordBigramHashes(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_bigrams", exprs => WordBigrams(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_ngrams", exprs =>
-        WordNgrams(exprs(0), foldableInt("word_ngrams", exprs(1))), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "span_uncorrupt", exprs =>
-        SpanUncorrupt(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "span_corrupt", exprs =>
-        SpanCorrupt(exprs(0), exprs(1),
-          foldableInt("span_corrupt", exprs(2)),
-          foldableInt("span_corrupt", exprs(3)),
-          foldableString("span_corrupt", exprs(4))), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "wordpiece_encode", exprs =>
-        WordpieceEncode(exprs(0),
-          foldableStrings("wordpiece_encode", exprs(1)),
-          foldableString("wordpiece_encode", exprs(2)),
-          foldableInt("wordpiece_encode", exprs(3))), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "mmr_select", exprs =>
-        MmrSelect(exprs(0), foldableInt("mmr_select", exprs(1)),
-          foldableDouble("mmr_select", exprs(2))), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bpe_encode", exprs =>
-        BpeEncode(exprs(0), foldableMerges("bpe_encode", exprs(1))), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "linear_score", exprs =>
-        LinearScore(exprs(0), foldableWeights("linear_score", exprs(1)),
-          foldableDouble("linear_score", exprs(2))), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "linear_score_hashed", exprs =>
-        LinearScoreHashed(exprs(0),
-          foldableDoubles("linear_score_hashed", exprs(1)),
-          foldableDouble("linear_score_hashed", exprs(2))), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "from_avro", exprs =>
-        AvroDecode(exprs(0), foldableSchema("from_avro", exprs(1))), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "to_avro", exprs =>
-        AvroEncode(exprs(0), foldableSchema("to_avro", exprs(1))), "scala_udf")
-  }
+  /** Every SQL face of the native expressions, `name -> builder` — the
+    * one table both [[register]] (an already-built session) and
+    * `graft.GraftExtensions` (`spark.sql.extensions`, every new session)
+    * install from. Literal arguments fold at analysis through the
+    * `foldable*` readers, which name the function on a bad argument.
+    */
+  val sqlFunctions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    // Avro wire serde, schema as a DDL string literal:
+    //   SELECT from_avro(bytes, 'name STRING, x BIGINT') ...
+    "from_avro" -> (es => AvroDecode(es(0), foldableSchema("from_avro", es(1)))),
+    "to_avro" -> (es => AvroEncode(es(0), foldableSchema("to_avro", es(1)))),
+    "cosine_sim" -> (es => CosineSimilarity(es(0), es(1))),
+    "dot_product" -> (es => DotProduct(es(0), es(1))),
+    "simhash60" -> (es => SimHash60(es(0))),
+    "deflate_ratio" -> (es => DeflateRatio(es(0))),
+    "char_ngrams" -> (es => CharNgrams(es(0), foldableInt("char_ngrams", es(1)))),
+    "banded_levenshtein" -> (es => BandedLevenshtein(es(0), es(1), es(2))),
+    "dedup_segments" -> (es =>
+      DedupSegments(es(0), foldableString("dedup_segments", es(1)),
+        foldableString("dedup_segments", es(2)))),
+    "word_shingles" -> (es => WordShingles(es(0), foldableInt("word_shingles", es(1)))),
+    "word_shingle_hashes" -> (es =>
+      WordShingleHashes(es(0), foldableInt("word_shingle_hashes", es(1)))),
+    "word_ngram_hashes60" -> (es =>
+      WordNgramHashes60(es(0), foldableInt("word_ngram_hashes60", es(1)))),
+    "nfc_normalize" -> (es => NfcNormalize(es(0))),
+    "sorted_jaccard" -> (es => SortedJaccard(es(0), es(1))),
+    "ngram_overlap" -> (es =>
+      NgramOverlapCounts(es(0), es(1), foldableInt("ngram_overlap", es(2)))),
+    "minhash_lanes" -> (es => MinHashLanes(es(0), foldableInt("minhash_lanes", es(1)))),
+    "word_bigram_hashes" -> (es => WordBigramHashes(es(0))),
+    "word_bigrams" -> (es => WordBigrams(es(0))),
+    "word_ngrams" -> (es => WordNgrams(es(0), foldableInt("word_ngrams", es(1)))),
+    "span_uncorrupt" -> (es => SpanUncorrupt(es(0), es(1))),
+    "span_corrupt" -> (es =>
+      SpanCorrupt(es(0), es(1), foldableInt("span_corrupt", es(2)),
+        foldableInt("span_corrupt", es(3)), foldableString("span_corrupt", es(4)))),
+    "wordpiece_encode" -> (es =>
+      WordpieceEncode(es(0), foldableStrings("wordpiece_encode", es(1)),
+        foldableString("wordpiece_encode", es(2)),
+        foldableInt("wordpiece_encode", es(3)))),
+    "mmr_select" -> (es =>
+      MmrSelect(es(0), foldableInt("mmr_select", es(1)),
+        foldableDouble("mmr_select", es(2)))),
+    "bpe_encode" -> (es => BpeEncode(es(0), foldableMerges("bpe_encode", es(1)))),
+    "unigram_encode" -> (es =>
+      UnigramEncode(es(0), foldableWeights("unigram_encode", es(1)))),
+    "linear_score" -> (es =>
+      LinearScore(es(0), foldableWeights("linear_score", es(1)),
+        foldableDouble("linear_score", es(2)))),
+    "linear_score_hashed" -> (es =>
+      LinearScoreHashed(es(0), foldableDoubles("linear_score_hashed", es(1)),
+        foldableDouble("linear_score_hashed", es(2)))),
+    "winnow_fingerprint" -> (es =>
+      WinnowFingerprint(es(0), foldableInt("winnow_fingerprint", es(1)),
+        foldableInt("winnow_fingerprint", es(2)))),
+    "ordered_pairs" -> (es => OrderedPairs(es(0)))
+  )
+
+  /** SQL registration on an already-built session (`SELECT cosine_sim(a, b)`). */
+  def register(spark: org.apache.spark.sql.SparkSession): Unit =
+    sqlFunctions.foreach { case (name, builder) =>
+      spark.sessionState.functionRegistry
+        .createOrReplaceTempFunction(name, builder, "scala_udf")
+    }
 
   /** Fold a SQL argument that must be a literal array of (left, right)
     * string pairs — the merge-table shape:
@@ -2874,24 +2858,5 @@ object VectorFunctions {
       case other => throw new IllegalArgumentException(
         s"$fn expects a literal schema DDL string, got: $other")
     }
-  }
-}
-
-/** SparkSessionExtensions wiring: attach with
-  * `.withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.functions.GraftExtensions`.
-  */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("cosine_sim"),
-       new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-         classOf[CosineSimilarity].getName, "cosine_sim"),
-       (exprs: Seq[Expression]) => CosineSimilarity(exprs(0), exprs(1))))
-    e.injectFunction(
-      (org.apache.spark.sql.catalyst.FunctionIdentifier("dot_product"),
-       new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-         classOf[DotProduct].getName, "dot_product"),
-       (exprs: Seq[Expression]) => DotProduct(exprs(0), exprs(1))))
   }
 }

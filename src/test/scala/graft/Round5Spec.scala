@@ -122,7 +122,7 @@ class Round5Spec extends SparkSpecBase {
     val rf = KFrame(tms.toDF().toDF("rts", "name"),
       keys = Seq("rts"), eventTime = Some("rts"), isTable = true)
     val out = graft.state.TableKernels.streamTableJoin(
-      sf, rf, "left", retention = Some("1 hour"))
+      sf, rf, graft.ast.JoinHow.Left, retention = Some("1 hour"))
     val q = out.writeStream.format("memory").queryName("stj_ts_key")
       .outputMode("append").start()
     try {
@@ -146,7 +146,7 @@ class Round5Spec extends SparkSpecBase {
     val rf = KFrame(rms.toDF().toDF("rts", "name"),
       keys = Seq("rts"), eventTime = Some("rts"), isTable = true)
     val out = graft.state.TableKernels.tableTableJoin(
-      lf, rf, "inner", retention = Some("1 hour"))
+      lf, rf, graft.ast.JoinHow.Inner, retention = Some("1 hour"))
     val q = out.writeStream.format("memory").queryName("ttj_ts_key")
       .outputMode("append").start()
     try {
@@ -683,7 +683,6 @@ class Round5Spec extends SparkSpecBase {
   // ---- NTZ event-time tolerance (fixture ts type changed across rounds) ----
 
   test("session kernel reads TIMESTAMP_NTZ event time (micros fixture) and LTZ alike") {
-    import graft.state.SessionKernels
     // unit: all three external timestamp types map to the same micros
     val us = 1723500000123456L
     val sqlTs = new java.sql.Timestamp(us / 1000L)
@@ -691,11 +690,11 @@ class Round5Spec extends SparkSpecBase {
     val inst = java.time.Instant.ofEpochSecond(us / 1000000L,
       (us % 1000000L) * 1000L)
     val ldt = java.time.LocalDateTime.ofInstant(inst, java.time.ZoneOffset.UTC)
-    assert(SessionKernels.toMicrosAny(sqlTs) == us)
-    assert(SessionKernels.toMicrosAny(ldt) == us)
-    assert(SessionKernels.toMicrosAny(inst) == us)
+    assert(Intervals.micros(sqlTs) == us)
+    assert(Intervals.micros(ldt) == us)
+    assert(Intervals.micros(inst) == us)
     val bad = intercept[IllegalArgumentException] {
-      SessionKernels.toMicrosAny("not a time")
+      Intervals.micros("not a time")
     }
     assert(bad.getMessage.contains("timestamp value"))
     // end-to-end: the user-merger session gate query over the raw fixture
@@ -706,7 +705,7 @@ class Round5Spec extends SparkSpecBase {
     // naive-UTC convention
     def rows3(q: String) = SparkEntry.queries(q)(spark, sfDir)
       .select(col("user_id"), col("session_start"), col("n")).collect()
-      .map(r => (r.getLong(0), SessionKernels.toMicrosAny(r.get(1)),
+      .map(r => (r.getLong(0), Intervals.micros(r.get(1)),
                  r.getLong(2))).toSet
     val userSess = rows3("agg_session_user")
     assert(userSess.nonEmpty, "session query returned nothing")

@@ -132,9 +132,8 @@ class SourceCacheSpec extends SparkSpecBase {
     val pairs = graft.ext.Dedup.recordLinkage(recs, "rid",
       blockCols = Seq("blk"), fuzzyFields = Seq("name" -> 1.0),
       exactFields = Seq.empty, threshold = 0.0).collect()
-    assert(pairs.nonEmpty)
-    assert(pairs.forall(r => r.getLong(0) != r.getLong(1)),
-      pairs.mkString(", "))
-    assert(pairs.map(r => (r.getLong(0), r.getLong(1))).toSet == Set((1L, 2L)))
+    // one scored row per pair: neither a self-pair nor a copy per repeat
+    assert(pairs.map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq ==
+      Seq((1L, 2L, 0.333333)), pairs.mkString(", "))
   }
 }
