@@ -82,8 +82,8 @@ final case class Materialized(
 ) extends Serializable
 
 /** `Stores` factory surface (`eval.clj:216-226`). Spark state-store choice is
-  * session config (`spark.sql.streaming.stateStore.providerClass`), so the
-  * kind applies to a whole launch; `Persistent*` maps to
+  * session config, which [[graft.streaming.Runner]] scopes to one query
+  * start, so the kind applies to a whole launch; `Persistent*` maps to
   * RocksDBStateStoreProvider.
   */
 sealed trait StoreKind extends Serializable

@@ -446,7 +446,8 @@ object Labels {
     */
   def majorityVoteStream(ann: DataFrame, itemCol: String = "item",
                          labelCol: String = "label"): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
+      OutputMode}
     val spark = ann.sparkSession
     import spark.implicits._
     ann.select(col(itemCol).cast("long").as("item"),
@@ -454,43 +455,20 @@ object Labels {
       .where(col("item").isNotNull && col("label").isNotNull)
       .as[(Long, Long)]
       .groupByKey(_._1)
-      .transformWithState(new MajorityVoteProcessor(),
-        TimeMode.None(), OutputMode.Update())
+      .flatMapGroupsWithState(OutputMode.Update,
+        GroupStateTimeout.NoTimeout) {
+        (item: Long, rows: Iterator[(Long, Long)],
+         state: GroupState[Map[Long, Long]]) =>
+          val tally = rows.foldLeft(state.getOption.getOrElse(
+              Map.empty[Long, Long])) { case (m, (_, label)) =>
+            m.updated(label, m.getOrElse(label, 0L) + 1L)
+          }
+          state.update(tally)
+          // batch-face tie-break: max votes, then min label
+          val (bestLabel, bestVotes) = tally.minBy { case (l, c) => (-c, l) }
+          Iterator.single((item, bestLabel, bestVotes,
+            tally.valuesIterator.sum))
+      }
       .toDF("item", "label", "votes", "n_ann")
-  }
-}
-
-/** Per-item running vote tally as transformWithState state: one
-  * ValueState cell holding the (label → count) map, rewritten per
-  * micro-batch — the map is label-alphabet-sized by contract, so a full
-  * rewrite beats per-entry MapState chatter (the MgStreamProcessor
-  * trade). Emits the post-batch consensus for the item.
-  */
-private[ext] class MajorityVoteProcessor()
-    extends org.apache.spark.sql.streaming.StatefulProcessor[
-      Long, (Long, Long), (Long, Long, Long, Long)] {
-  import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TimerValues,
-    TTLConfig, ValueState}
-
-  @transient private var tally: ValueState[Map[Long, Long]] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    tally = getHandle.getValueState[Map[Long, Long]]("votes",
-      org.apache.spark.sql.Encoders.kryo[Map[Long, Long]], TTLConfig.NONE)
-
-  override def handleInputRows(item: Long, rows: Iterator[(Long, Long)],
-      timers: TimerValues): Iterator[(Long, Long, Long, Long)] = {
-    val m = new java.util.HashMap[Long, Long]()
-    if (tally.exists())
-      tally.get().foreach { case (l, c) => m.put(l, c) }
-    rows.foreach { case (_, label) =>
-      m.merge(label, 1L, (a, b) => a + b)
-    }
-    import scala.jdk.CollectionConverters._
-    val snap = m.asScala.toMap
-    tally.update(snap)
-    // batch-face tie-break: max votes, then min label
-    val (bestLabel, bestVotes) = snap.minBy { case (l, c) => (-c, l) }
-    Iterator.single((item, bestLabel, bestVotes, snap.valuesIterator.sum))
   }
 }

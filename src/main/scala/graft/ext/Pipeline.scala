@@ -1646,19 +1646,22 @@ object Pipeline {
 
   /** The streaming face of [[driftPsi]] — the always-on corpus monitor:
     * the reference snapshot's bin shares are computed ONCE driver-side
-    * (an nBins-row collect over its histogram) and ride the processor;
-    * the stream folds each micro-batch's values into a running bin-count
-    * array (`transformWithState`, one fixed-size state cell) and emits
-    * the updated `(n, psi)` row per batch — an Update-mode changelog
-    * where the latest row is the drift of EVERYTHING ingested so far
-    * against the reference. Deterministic: equals the batch [[driftPsi]]
-    * of (reference, all rows so far) summed, which is exactly what the
-    * spec asserts. State is `nBins` longs, forever, no watermark.
+    * (an nBins-row collect over its histogram) and ride the kernel; the
+    * stream folds each micro-batch's values into a running bin-count
+    * array (one fixed-size state cell) and emits the updated `(n, psi)`
+    * row per batch — an Update-mode changelog where the latest row is
+    * the drift of EVERYTHING ingested so far against the reference. PSI
+    * is recomputed from counts on emit with the batch face's arithmetic
+    * (shares, eps floor, 9-decimal rounding), so the row equals the
+    * batch [[driftPsi]] of (reference, all rows so far) summed, which is
+    * exactly what the spec asserts. State is `nBins` longs, forever, no
+    * watermark.
     */
   def driftPsiStream(events: DataFrame, valueCol: String, ref: DataFrame,
                      lo: Double, hi: Double, nBins: Int = 20,
                      eps: Double = 1e-6): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
+      OutputMode}
     require(eps > 0 && eps < 1, s"eps must be in (0,1), got $eps")
     val refShares = new Array[Double](nBins)
     val refRows = histogram(ref, valueCol, lo, hi, nBins)
@@ -1675,8 +1678,26 @@ object Pipeline {
       .select(lit(0L).as("shard"), bin.as("bin"))
       .as[(Long, Int)]
       .groupByKey(_._1)
-      .transformWithState(new PsiStreamProcessor(refShares, eps),
-        TimeMode.None(), OutputMode.Update())
+      .flatMapGroupsWithState(OutputMode.Update,
+        GroupStateTimeout.NoTimeout) {
+        (_: Long, rows: Iterator[(Long, Int)],
+         state: GroupState[Array[Long]]) =>
+          val arr = state.getOption.getOrElse(new Array[Long](nBins))
+          rows.foreach { case (_, b) => arr(b) += 1L }
+          state.update(arr)
+          val total = arr.sum.toDouble
+          def r9(x: Double): Double = BigDecimal(x)
+            .setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
+          var psi = 0.0
+          var i = 0
+          while (i < nBins) {
+            val pr = math.max(refShares(i), eps)
+            val pc = math.max(arr(i) / total, eps)
+            psi += r9((pc - pr) * math.log(pc / pr))
+            i += 1
+          }
+          Iterator.single((total.toLong, r9(psi)))
+      }
       .toDF("n", "psi")
   }
 
@@ -2269,48 +2290,5 @@ object Pipeline {
       .select(col("id").as(idCol),
         coalesce(col("n_feats"), lit(0L)).as("n_feats"),
         coalesce(col("weight_unats"), lit(0L)).as("weight_unats"))
-  }
-}
-
-/** Running bin counts as transformWithState state: one ValueState cell
-  * holding the nBins-long count array, rewritten per micro-batch. PSI is
-  * recomputed from counts on emit — identical arithmetic to the batch
-  * face (shares, eps floor, 9-decimal rounding), so the changelog row
-  * after batch k equals the batch report over all rows so far.
-  */
-private[ext] class PsiStreamProcessor(refShares: Array[Double], eps: Double)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[
-      Long, (Long, Int), (Long, Double)] {
-  import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TimerValues,
-    TTLConfig, ValueState}
-
-  @transient private var counts: ValueState[Array[Long]] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    counts = getHandle.getValueState[Array[Long]]("psi_bins",
-      org.apache.spark.sql.Encoders.kryo[Array[Long]], TTLConfig.NONE)
-
-  override def handleInputRows(shard: Long, rows: Iterator[(Long, Int)],
-      timers: TimerValues): Iterator[(Long, Double)] = {
-    val arr =
-      if (counts.exists()) counts.get()
-      else new Array[Long](refShares.length)
-    rows.foreach { case (_, b) => arr(b) += 1L }
-    counts.update(arr)
-    val total = arr.sum.toDouble
-    if (total == 0.0) Iterator.empty
-    else {
-      def r9(x: Double): Double = BigDecimal(x)
-        .setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
-      var psi = 0.0
-      var i = 0
-      while (i < arr.length) {
-        val pr = math.max(refShares(i), eps)
-        val pc = math.max(arr(i) / total, eps)
-        psi += r9((pc - pr) * math.log(pc / pr))
-        i += 1
-      }
-      Iterator.single((total.toLong, r9(psi)))
-    }
   }
 }

@@ -259,12 +259,12 @@ object Sketches {
     KmvModel(k, kmvToArray(set))
   }
 
-  /** The streaming face of [[countMinFit]], on the Spark 4
-    * `transformWithState` API (the [[heavyHittersStream]] pattern): keys
-    * hash into `nShards` independent CMS counter arrays; each micro-batch
-    * folds its keys into its shard's array and emits the UPDATED point
-    * estimate for every distinct key seen in that batch — an Update-mode
-    * changelog where the latest (key, est) row is the running estimate.
+  /** The streaming face of [[countMinFit]] (the [[heavyHittersStream]]
+    * pattern): keys hash into `nShards` independent CMS counter arrays;
+    * each micro-batch folds its keys into its shard's array and emits the
+    * UPDATED point estimate for every distinct key seen in that batch —
+    * an Update-mode changelog where the latest (key, est) row is the
+    * running estimate. A static frame runs the same kernel as one batch.
     *
     * A key belongs to exactly one shard, so estimates never need a
     * cross-shard merge, and the per-shard fold preserves the batch CMS
@@ -275,7 +275,9 @@ object Sketches {
   def countMinStream(events: DataFrame, keyCol: String,
                      width: Int = 4096, depth: Int = 4,
                      nShards: Int = 8): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
+      OutputMode}
+    import scala.jdk.CollectionConverters._
     require(width >= 2 && depth >= 1 && nShards >= 1,
       "width >= 2, depth >= 1, nShards >= 1")
     val spark = events.sparkSession
@@ -286,15 +288,32 @@ object Sketches {
         .as("shard"), col("key"))
       .as[(Long, String)]
       .groupByKey(_._1)
-      .transformWithState(new CmsStreamProcessor(width, depth),
-        TimeMode.None(), OutputMode.Update())
+      .flatMapGroupsWithState(OutputMode.Update,
+        GroupStateTimeout.NoTimeout) {
+        (shard: Long, rows: Iterator[(Long, String)],
+         state: GroupState[Array[Long]]) =>
+          // one flat depth × width counter array per shard
+          val arr = state.getOption.getOrElse(new Array[Long](depth * width))
+          val batchKeys = new java.util.LinkedHashSet[String]()
+          rows.foreach { case (_, key) =>
+            var r = 0
+            while (r < depth) {
+              arr(r * width + CmsModel.idx(r, width, key)) += 1L
+              r += 1
+            }
+            batchKeys.add(key)
+          }
+          state.update(arr)
+          val model = CmsModel(depth, width, arr, 0L)
+          batchKeys.asScala.iterator.map(k => (shard, k, model.estimate(k)))
+      }
       .toDF("shard", "key", "est")
   }
 
-  /** The streaming face of [[kmvFit]], on the Spark 4 `transformWithState`
-    * API: keys hash into `nShards` disjoint subspaces; each shard's
-    * processor keeps the bottom-k tree of ITS OWN keys' hashes and emits
-    * one (shard, n_distinct, saturated) row per batch it touches. Shards
+  /** The streaming face of [[kmvFit]]: keys hash into `nShards` disjoint
+    * subspaces; each shard keeps the bottom-k hashes of ITS OWN keys (a
+    * sorted Long array, ≤ k by contract) and emits one
+    * (shard, n_distinct, saturated) row per batch it touches. Shards
     * partition the key space, so the GLOBAL distinct count is the SUM of
     * the latest per-shard rows — exact while every shard stays below
     * saturation, estimate-summed above. State: ≤ nShards × k Longs,
@@ -302,7 +321,8 @@ object Sketches {
     */
   def kmvStream(events: DataFrame, keyCol: String, k: Int = 4096,
                 nShards: Int = 8): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
+      OutputMode}
     require(k >= 2 && nShards >= 1, "k >= 2 and nShards >= 1")
     val spark = events.sparkSession
     import spark.implicits._
@@ -312,18 +332,29 @@ object Sketches {
         .as("shard"), col("key"))
       .as[(Long, String)]
       .groupByKey(_._1)
-      .transformWithState(new KmvStreamProcessor(k),
-        TimeMode.None(), OutputMode.Update())
+      .flatMapGroupsWithState(OutputMode.Update,
+        GroupStateTimeout.NoTimeout) {
+        (shard: Long, rows: Iterator[(Long, String)],
+         state: GroupState[Array[Long]]) =>
+          val s = new java.util.TreeSet[java.lang.Long]()
+          state.getOption.foreach(_.foreach(s.add(_)))
+          rows.foreach { case (_, key) =>
+            s.add(kmvHash60(key))
+            if (s.size > k) s.pollLast()
+          }
+          val arr = kmvToArray(s)
+          state.update(arr)
+          val model = KmvModel(k, arr)
+          Iterator.single((shard, model.estimate, model.saturated))
+      }
       .toDF("shard", "n_distinct", "saturated")
   }
 
-  /** The streaming face of [[heavyHitters]], on the Spark 4
-    * `transformWithState` arbitrary-state API (requires the RocksDB
-    * state-store provider, as the API itself does): keys hash into
-    * `nShards` independent summaries; each shard's StatefulProcessor
-    * folds its micro-batch into a capacity-bounded Misra-Gries map and
-    * emits the updated summary as an Update-mode changelog
-    * (shard, key, est).
+  /** The streaming face of [[heavyHitters]]: keys hash into `nShards`
+    * independent summaries; each shard folds its micro-batch into a
+    * capacity-bounded Misra-Gries map (one state cell, rewritten per
+    * batch — the summary is small by contract) and emits the updated
+    * summary as an Update-mode changelog (shard, key, est).
     *
     * Because a key belongs to exactly ONE shard, per-key estimates need
     * no cross-shard merge — the latest (shard, key) row IS the estimate,
@@ -335,7 +366,9 @@ object Sketches {
     */
   def heavyHittersStream(events: DataFrame, keyCol: String, capacity: Int,
                          nShards: Int = 8): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
+      OutputMode}
+    import scala.jdk.CollectionConverters._
     require(capacity >= 1 && nShards >= 1, "capacity and nShards >= 1")
     val spark = events.sparkSession
     import spark.implicits._
@@ -345,8 +378,18 @@ object Sketches {
         .as("shard"), col("key"))
       .as[(Long, String)]
       .groupByKey(_._1)
-      .transformWithState(new MgStreamProcessor(capacity),
-        TimeMode.None(), OutputMode.Update())
+      .flatMapGroupsWithState(OutputMode.Update,
+        GroupStateTimeout.NoTimeout) {
+        (shard: Long, rows: Iterator[(Long, String)],
+         state: GroupState[Map[String, Long]]) =>
+          val m = new java.util.HashMap[Any, Long](capacity * 2)
+          state.getOption.foreach(_.foreach { case (k, v) => m.put(k, v) })
+          mgFold(m, rows.map(_._2), capacity)
+          val snap = m.asScala.map { case (k, v) =>
+            k.asInstanceOf[String] -> v }.toMap
+          state.update(snap)
+          snap.iterator.map { case (k, v) => (shard, k, v) }
+      }
       .toDF("shard", "key", "est")
   }
 
@@ -604,20 +647,21 @@ object Sketches {
     udaf(new KmvDistinctAgg(k), Encoders.STRING)
   }
 
-  /** The streaming face of [[kllFit]], on the Spark 4
-    * `transformWithState` API. Unlike the CMS/KMV/MG streams, quantile
-    * estimates are NOT combinable across disjoint-key shards without the
-    * underlying models, so this face keeps ONE global sketch cell and
-    * emits the updated (q, est, n) rows per micro-batch. The state is
-    * the fixed sketch size and per-row update is O(1) amortized; at
-    * rates where a single stateful task saturates, run per-partition
-    * [[kllFit]] sketches in `foreachBatch` and [[KllModel.merge]] them
-    * instead — the batch fit is the scale path, this face is the
-    * always-on monitor.
+  /** The streaming face of [[kllFit]]. Unlike the CMS/KMV/MG streams,
+    * quantile estimates are NOT combinable across disjoint-key shards
+    * without the underlying models, so this face keeps ONE global sketch
+    * cell (the kryo'd builder, O(k log(n/k)) doubles) and emits the
+    * updated (q, est, n) rows per micro-batch. The state is the fixed
+    * sketch size and per-row update is O(1) amortized; at rates where a
+    * single stateful task saturates, run per-partition [[kllFit]]
+    * sketches in `foreachBatch` and [[KllModel.merge]] them instead —
+    * the batch fit is the scale path, this face is the always-on
+    * monitor.
     */
   def kllStream(events: DataFrame, valueCol: String, k: Int = 2048,
                 qs: Seq[Double] = Seq(0.5, 0.9, 0.99)): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
+      OutputMode}
     require(k >= 8 && qs.nonEmpty, "k >= 8 and qs non-empty")
     val spark = events.sparkSession
     import spark.implicits._
@@ -626,143 +670,17 @@ object Sketches {
       .select(lit(0L).as("shard"), col("v"))
       .as[(Long, Double)]
       .groupByKey(_._1)
-      .transformWithState(new KllStreamProcessor(k, qs),
-        TimeMode.None(), OutputMode.Update())
+      .flatMapGroupsWithState(OutputMode.Update,
+        GroupStateTimeout.NoTimeout) {
+        (_: Long, rows: Iterator[(Long, Double)],
+         state: GroupState[KllBuilder]) =>
+          val b = state.getOption.getOrElse(new KllBuilder(k))
+          rows.foreach { case (_, v) => b.update(v) }
+          state.update(b)
+          val model = b.toModel
+          qs.iterator.map(q => (q, model.quantile(q), model.n))
+      }(Encoders.kryo[KllBuilder], Encoders.product[(Double, Double, Long)])
       .toDF("q", "est", "n")
-  }
-}
-
-/** Per-GROUP KLL sketch as transformWithState state — the keyed sibling
-  * of [[Sketches.kllStream]]'s single global cell: state is one
-  * [[Sketches.KllBuilder]] per group (fixed size), each batch folds the
-  * group's new values and emits the group's updated robust summary row
-  * (g, n, p25, p50, p75). Distribution-keyed monitors (per-language
-  * quality scores, per-source lengths) read location/scale from this;
-  * group cardinality is report-sized by the same contract as
-  * [[Stats.jsCensusStream]].
-  */
-private[ext] class KllByKeyProcessor(k: Int)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[
-      String, (String, Double), (String, Long, Double, Double, Double)] {
-  import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TimerValues,
-    TTLConfig, ValueState}
-
-  @transient private var sk: ValueState[Sketches.KllBuilder] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    sk = getHandle.getValueState[Sketches.KllBuilder]("kll",
-      org.apache.spark.sql.Encoders.kryo[Sketches.KllBuilder], TTLConfig.NONE)
-
-  override def handleInputRows(g: String, rows: Iterator[(String, Double)],
-      timers: TimerValues): Iterator[(String, Long, Double, Double, Double)] = {
-    val b = if (sk.exists()) sk.get() else new Sketches.KllBuilder(k)
-    rows.foreach { case (_, v) => b.update(v) }
-    sk.update(b)
-    val m = b.toModel
-    Iterator.single((g, m.n, m.quantile(0.25), m.quantile(0.5),
-      m.quantile(0.75)))
-  }
-}
-
-/** Per-shard KMV bottom-k set as transformWithState state (sorted Long
-  * array, rewritten per batch — ≤ k Longs by contract).
-  */
-private[ext] class KmvStreamProcessor(k: Int)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[
-      Long, (Long, String), (Long, Long, Boolean)] {
-  import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TimerValues,
-    TTLConfig, ValueState}
-
-  @transient private var mins: ValueState[Array[Long]] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    mins = getHandle.getValueState[Array[Long]]("kmv",
-      org.apache.spark.sql.Encoders.kryo[Array[Long]], TTLConfig.NONE)
-
-  override def handleInputRows(shard: Long, rows: Iterator[(Long, String)],
-      timers: TimerValues): Iterator[(Long, Long, Boolean)] = {
-    val s = new java.util.TreeSet[java.lang.Long]()
-    if (mins.exists()) mins.get().foreach(s.add(_))
-    rows.foreach { case (_, key) =>
-      s.add(Sketches.kmvHash60(key))
-      if (s.size > k) s.pollLast()
-    }
-    val arr = new Array[Long](s.size)
-    val it = s.iterator()
-    var i = 0
-    while (it.hasNext) { arr(i) = it.next(); i += 1 }
-    mins.update(arr)
-    val model = Sketches.KmvModel(k, arr)
-    Iterator.single((shard, model.estimate, model.saturated))
-  }
-}
-
-/** Per-shard Count-Min counters as transformWithState state: one
-  * ValueState cell holding the flat `depth × width` Long array, rewritten
-  * per micro-batch (fixed-size by contract — a full rewrite is one
-  * RocksDB put, cheaper than width·depth MapState cells).
-  */
-private[ext] class CmsStreamProcessor(width: Int, depth: Int)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[
-      Long, (Long, String), (Long, String, Long)] {
-  import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TimerValues,
-    TTLConfig, ValueState}
-
-  @transient private var counters: ValueState[Array[Long]] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    counters = getHandle.getValueState[Array[Long]]("cms",
-      org.apache.spark.sql.Encoders.kryo[Array[Long]], TTLConfig.NONE)
-
-  override def handleInputRows(shard: Long, rows: Iterator[(Long, String)],
-      timers: TimerValues): Iterator[(Long, String, Long)] = {
-    val arr =
-      if (counters.exists()) counters.get() else new Array[Long](depth * width)
-    val batchKeys = new java.util.LinkedHashSet[String]()
-    rows.foreach { case (_, key) =>
-      var r = 0
-      while (r < depth) {
-        arr(r * width + Sketches.CmsModel.idx(r, width, key)) += 1L
-        r += 1
-      }
-      batchKeys.add(key)
-    }
-    counters.update(arr)
-    val model = Sketches.CmsModel(depth, width, arr, 0L)
-    import scala.jdk.CollectionConverters._
-    batchKeys.asScala.iterator
-      .map(k => (shard, k, model.estimate(k))).toArray.iterator
-  }
-}
-
-/** Per-shard Misra-Gries summary as transformWithState state: one
-  * ValueState cell holding the (≤ capacity)-entry map, rewritten per
-  * micro-batch — the summary is small by contract, so a full rewrite
-  * beats per-entry MapState chatter under decrement-all.
-  */
-private[ext] class MgStreamProcessor(capacity: Int)
-    extends org.apache.spark.sql.streaming.StatefulProcessor[
-      Long, (Long, String), (Long, String, Long)] {
-  import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TimerValues,
-    TTLConfig, ValueState}
-
-  @transient private var summary: ValueState[Map[String, Long]] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    summary = getHandle.getValueState[Map[String, Long]]("mg",
-      org.apache.spark.sql.Encoders.kryo[Map[String, Long]], TTLConfig.NONE)
-
-  override def handleInputRows(shard: Long, rows: Iterator[(Long, String)],
-      timers: TimerValues): Iterator[(Long, String, Long)] = {
-    val m = new java.util.HashMap[Any, Long](capacity * 2)
-    if (summary.exists())
-      summary.get().foreach { case (k, v) => m.put(k, v) }
-    Sketches.mgFold(m, rows.map(_._2), capacity)
-    import scala.jdk.CollectionConverters._
-    val snap = m.asScala.map { case (k, v) =>
-      k.asInstanceOf[String] -> v }.toMap
-    summary.update(snap)
-    snap.iterator.map { case (k, v) => (shard, k, v) }.toArray.iterator
   }
 }
 
@@ -811,37 +729,6 @@ private[ext] class KllAgg(k: Int, qs: Seq[Double])
     Encoders.kryo[Sketches.KllBuilder]
   def outputEncoder: org.apache.spark.sql.Encoder[Seq[Double]] =
     org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
-}
-
-/** The global KLL sketch as transformWithState state: one ValueState
-  * cell holding the kryo'd builder, rewritten per micro-batch (the
-  * sketch is O(k log(n/k)) doubles by contract, so a full rewrite is
-  * one RocksDB put). Emits the updated (q, est, n) row per requested
-  * quantile per batch.
-  */
-private[ext] class KllStreamProcessor(k: Int, qs: Seq[Double])
-    extends org.apache.spark.sql.streaming.StatefulProcessor[
-      Long, (Long, Double), (Double, Double, Long)] {
-  import org.apache.spark.sql.streaming.{OutputMode, TimeMode, TimerValues,
-    TTLConfig, ValueState}
-
-  @transient private var sketch: ValueState[Sketches.KllBuilder] = _
-
-  override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-    sketch = getHandle.getValueState[Sketches.KllBuilder]("kll",
-      org.apache.spark.sql.Encoders.kryo[Sketches.KllBuilder], TTLConfig.NONE)
-
-  override def handleInputRows(shard: Long, rows: Iterator[(Long, Double)],
-      timers: TimerValues): Iterator[(Double, Double, Long)] = {
-    val b = if (sketch.exists()) sketch.get() else new Sketches.KllBuilder(k)
-    rows.foreach { case (_, v) => b.update(v) }
-    sketch.update(b)
-    if (b.n == 0L) Iterator.empty
-    else {
-      val model = b.toModel
-      qs.iterator.map(q => (q, model.quantile(q), model.n)).toArray.iterator
-    }
-  }
 }
 
 /** The per-group KMV aggregator: buffer is the bottom-k tree of value

@@ -319,7 +319,7 @@ object Stats {
   /** STREAMING face of [[robustScale]]'s location/scale census — the
     * always-on per-group monitor ([[robustScale]] itself is two exact
     * percentile passes, impossible over a stream): one KLL sketch of
-    * state per group (`transformWithState`, fixed size), emitting each
+    * state per group (fixed size), emitting each
     * touched group's updated `(g, n, p25_milli, med_milli, p75_milli,
     * iqr_milli)` every micro-batch. Values quantize to milli-units
     * BEFORE sketching (the [[robustScale]] grid); with `k ≥` the
@@ -332,7 +332,10 @@ object Stats {
     */
   def robustScaleStream(df: DataFrame, valueCol: String, groupCol: String,
                         k: Int = 2048): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
+    import org.apache.spark.sql.Encoders
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
+      OutputMode}
+    import Sketches.KllBuilder
     require(k >= 8, s"k must be >= 8, got $k")
     val spark = df.sparkSession
     import spark.implicits._
@@ -341,8 +344,18 @@ object Stats {
         round(col(valueCol).cast("double") * 1000).as("vm"))
       .as[(String, Double)]
       .groupByKey(_._1)
-      .transformWithState(new KllByKeyProcessor(k),
-        TimeMode.None(), OutputMode.Update())
+      .flatMapGroupsWithState(OutputMode.Update,
+        GroupStateTimeout.NoTimeout) {
+        (g: String, rows: Iterator[(String, Double)],
+         state: GroupState[KllBuilder]) =>
+          val b = state.getOption.getOrElse(new KllBuilder(k))
+          rows.foreach { case (_, v) => b.update(v) }
+          state.update(b)
+          val m = b.toModel
+          Iterator.single((g, m.n, m.quantile(0.25), m.quantile(0.5),
+            m.quantile(0.75)))
+      }(Encoders.kryo[KllBuilder],
+        Encoders.product[(String, Long, Double, Double, Double)])
       .toDF("g", "n", "p25", "med", "p75")
       .select(col("g"), col("n"),
         col("p25").cast("long").as("p25_milli"),

@@ -1153,17 +1153,19 @@ object TextAnalysis {
     * psiDriftStream monitor pattern): scores and labels arrive in
     * micro-batches, each batch folds into the running per-bin cells
     * (n, positives, Σ score_ppm) and emits the UPDATED reliability row
-    * for every bin it touched — an Update-mode changelog whose latest
-    * row per bin is the cumulative diagram. Cross-bin ECE is a
-    * consumer-side fold over the latest row per bin (cross-key state
-    * is not a transformWithState shape — the per-shard KMV-sum
+    * for every bin it touched, with the batch face's exact arithmetic
+    * (trunc-toward-zero confidence) — an Update-mode changelog whose
+    * latest row per bin is the cumulative diagram. Cross-bin ECE is a
+    * consumer-side fold over the latest row per bin (state is keyed by
+    * bin, so no cross-bin total lives in it — the per-shard KMV-sum
     * adjudication). State: one Long triple per bin, forever — bounded
     * by the bin count by construction.
     */
   def calibrationStream(scored: DataFrame, scoreCol: String,
                         labelCol: String, bins: Int = 8, lo: Double = 0.0,
                         hi: Double = 1.0): DataFrame = {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
+      OutputMode}
     require(bins >= 1, s"bins must be >= 1, got $bins")
     require(hi > lo, s"need hi > lo, got [$lo, $hi)")
     val spark = scored.sparkSession
@@ -1176,8 +1178,18 @@ object TextAnalysis {
         when(col(labelCol), 1L).otherwise(0L).as("y"))
       .as[(Long, Long, Long)]
       .groupByKey(_._1)
-      .transformWithState(new CalibrationStreamProcessor(),
-        TimeMode.None(), OutputMode.Update())
+      .flatMapGroupsWithState(OutputMode.Update,
+        GroupStateTimeout.NoTimeout) {
+        (bin: Long, rows: Iterator[(Long, Long, Long)],
+         state: GroupState[(Long, Long, Long)]) =>
+          var (n, pos, ssp) = state.getOption.getOrElse((0L, 0L, 0L))
+          rows.foreach { case (_, sp, y) => n += 1; pos += y; ssp += sp }
+          state.update((n, pos, ssp))
+          val conf = ssp / n // JVM Long division truncates toward zero —
+                             // exactly the batch face's truncDiv
+          val acc = (pos * 1000000L) / n
+          Iterator.single((bin, n, pos, conf, acc, Math.abs(conf - acc)))
+      }
       .toDF("bin", "n", "n_pos", "conf_ppm", "acc_ppm", "gap_ppm")
   }
 
@@ -1231,39 +1243,6 @@ object TextAnalysis {
       .select(col("bin"), col("n"), col("n_pos"), col("conf_ppm"),
         col("acc_ppm"), col("gap_ppm"),
         floorDivNN(col("wg"), col("nn")).as("ece_ppm"))
-  }
-
-  /** Per-bin running calibration cells as transformWithState state (the
-    * PsiStreamProcessor pattern): one ValueState triple (n, positives,
-    * Σ score_ppm) per bin, rewritten per micro-batch. Emits the bin's
-    * refreshed confidence/accuracy/gap row with the batch face's exact
-    * arithmetic (trunc-toward-zero confidence).
-    */
-  private[ext] class CalibrationStreamProcessor()
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        Long, (Long, Long, Long), (Long, Long, Long, Long, Long, Long)] {
-    import org.apache.spark.sql.streaming.{OutputMode, TimeMode,
-      TimerValues, TTLConfig, ValueState}
-
-    @transient private var cell: ValueState[(Long, Long, Long)] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      cell = getHandle.getValueState[(Long, Long, Long)]("cal",
-        org.apache.spark.sql.Encoders.kryo[(Long, Long, Long)],
-        TTLConfig.NONE)
-
-    override def handleInputRows(bin: Long,
-        rows: Iterator[(Long, Long, Long)], timers: TimerValues)
-        : Iterator[(Long, Long, Long, Long, Long, Long)] = {
-      var (n, pos, ssp) =
-        if (cell.exists()) cell.get() else (0L, 0L, 0L)
-      rows.foreach { case (_, sp, y) => n += 1; pos += y; ssp += sp }
-      cell.update((n, pos, ssp))
-      val conf = ssp / n // JVM Long division truncates toward zero —
-                         // exactly the batch face's truncDiv
-      val acc = (pos * 1000000L) / n
-      Iterator.single((bin, n, pos, conf, acc, Math.abs(conf - acc)))
-    }
   }
 
   /** Script classes for [[scriptProfile]], in the FIXED priority order

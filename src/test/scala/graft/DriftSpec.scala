@@ -71,43 +71,32 @@ class DriftSpec extends SparkSpecBase {
     "batch driftPsi over everything ingested so far") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val ref = (0 until 1000).map(i => (i % 100).toDouble).toDF("v")
+    val ms = MemoryStream[Double]
+    val out = Pipeline.driftPsiStream(ms.toDF().toDF("v"), "v", ref,
+      0.0, 100.0, nBins = 10)
+    val q = out.writeStream.format("memory").queryName("psi_stream")
+      .outputMode("update").start()
     try {
-      val ref = (0 until 1000).map(i => (i % 100).toDouble).toDF("v")
-      val ms = MemoryStream[Double]
-      val out = Pipeline.driftPsiStream(ms.toDF().toDF("v"), "v", ref,
-        0.0, 100.0, nBins = 10)
-      val q = out.writeStream.format("memory").queryName("psi_stream")
-        .outputMode("update").start()
-      try {
-        val b1 = (0 until 300).map(i => (i % 50).toDouble)
-        ms.addData(b1: _*)
-        q.processAllAvailable()
-        val b2 = (0 until 200).map(i => (50 + i % 50).toDouble)
-        ms.addData(b2: _*)
-        q.processAllAvailable()
-        val rows = spark.table("psi_stream").collect()
-          .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-        def batchPsi(cur: Seq[Double]): Double =
-          psiTotal(Pipeline.driftPsi(ref, cur.toDF("v"), "v",
-            0.0, 100.0, 10))
-        def r9(x: Double) = BigDecimal(x).setScale(9,
-          BigDecimal.RoundingMode.HALF_UP).toDouble
-        assert(rows.keySet == Set(300L, 500L))
-        assert(rows(300L) == r9(batchPsi(b1)), "batch-1 row diverges")
-        assert(rows(500L) == r9(batchPsi(b1 ++ b2)), "batch-2 row diverges")
-        // batch 2 evens the halves back toward the reference mix
-        assert(rows(500L) < rows(300L))
-      } finally q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
+      val b1 = (0 until 300).map(i => (i % 50).toDouble)
+      ms.addData(b1: _*)
+      q.processAllAvailable()
+      val b2 = (0 until 200).map(i => (50 + i % 50).toDouble)
+      ms.addData(b2: _*)
+      q.processAllAvailable()
+      val rows = spark.table("psi_stream").collect()
+        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      def batchPsi(cur: Seq[Double]): Double =
+        psiTotal(Pipeline.driftPsi(ref, cur.toDF("v"), "v",
+          0.0, 100.0, 10))
+      def r9(x: Double) = BigDecimal(x).setScale(9,
+        BigDecimal.RoundingMode.HALF_UP).toDouble
+      assert(rows.keySet == Set(300L, 500L))
+      assert(rows(300L) == r9(batchPsi(b1)), "batch-1 row diverges")
+      assert(rows(500L) == r9(batchPsi(b1 ++ b2)), "batch-2 row diverges")
+      // batch 2 evens the halves back toward the reference mix
+      assert(rows(500L) < rows(300L))
+    } finally q.stop()
   }
 
   test("ksCensusStream: per-cell latest census across batches feeds " +
@@ -188,51 +177,40 @@ class DriftSpec extends SparkSpecBase {
     "matches the batch robustScale median on the union (exact-mode k)") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    // odd count per group so the ceil-rank median is interpolation-free
+    def mk(lo: Int, n: Int, g: String): Seq[(String, Double)] =
+      (0 until n).map(i => (g, (lo + (i * 37) % 101).toDouble))
+    val b1 = mk(10, 101, "en") ++ mk(500, 51, "de")
+    val b2 = mk(40, 100, "en") ++ mk(520, 50, "de")
+    val ms = MemoryStream[(String, Double)]
+    val out = graft.ext.Stats.robustScaleStream(
+      ms.toDF().toDF("lang", "score"), "score", "lang", k = 4096)
+    val q = out.writeStream.format("memory").queryName("rs_stream")
+      .outputMode("update").start()
     try {
-      // odd count per group so the ceil-rank median is interpolation-free
-      def mk(lo: Int, n: Int, g: String): Seq[(String, Double)] =
-        (0 until n).map(i => (g, (lo + (i * 37) % 101).toDouble))
-      val b1 = mk(10, 101, "en") ++ mk(500, 51, "de")
-      val b2 = mk(40, 100, "en") ++ mk(520, 50, "de")
-      val ms = MemoryStream[(String, Double)]
-      val out = graft.ext.Stats.robustScaleStream(
-        ms.toDF().toDF("lang", "score"), "score", "lang", k = 4096)
-      val q = out.writeStream.format("memory").queryName("rs_stream")
-        .outputMode("update").start()
-      try {
-        ms.addData(b1: _*); q.processAllAvailable()
-        ms.addData(b2: _*); q.processAllAvailable()
-      } finally q.stop()
-      // update mode: the latest row per group (max n) is the census
-      val live = spark.table("rs_stream").collect()
-        .groupBy(_.getString(0))
-        .map { case (g, rs) =>
-          val last = rs.maxBy(_.getLong(1))
-          g -> (last.getLong(1), last.getAs[Long]("med_milli"),
-            last.getAs[Long]("iqr_milli"))
-        }
-      val union = (b1 ++ b2).toDF("lang", "score")
-      val batch = graft.ext.Stats.robustScale(union, "score", "lang")
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n"), max(col("med_milli")).as("m"))
-        .collect().map(r => r.getString(0) ->
-          (r.getLong(1), r.getLong(2))).toMap
-      assert(live.keySet == Set("en", "de"))
-      live.foreach { case (g, (n, med, iqr)) =>
-        assert(n == batch(g)._1, s"$g count")
-        assert(med == batch(g)._2,
-          s"$g sketch median $med != batch ${batch(g)._2}")
-        assert(iqr > 0L)
+      ms.addData(b1: _*); q.processAllAvailable()
+      ms.addData(b2: _*); q.processAllAvailable()
+    } finally q.stop()
+    // update mode: the latest row per group (max n) is the census
+    val live = spark.table("rs_stream").collect()
+      .groupBy(_.getString(0))
+      .map { case (g, rs) =>
+        val last = rs.maxBy(_.getLong(1))
+        g -> (last.getLong(1), last.getAs[Long]("med_milli"),
+          last.getAs[Long]("iqr_milli"))
       }
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
+    val union = (b1 ++ b2).toDF("lang", "score")
+    val batch = graft.ext.Stats.robustScale(union, "score", "lang")
+      .groupBy(col("lang"))
+      .agg(count(lit(1)).as("n"), max(col("med_milli")).as("m"))
+      .collect().map(r => r.getString(0) ->
+        (r.getLong(1), r.getLong(2))).toMap
+    assert(live.keySet == Set("en", "de"))
+    live.foreach { case (g, (n, med, iqr)) =>
+      assert(n == batch(g)._1, s"$g count")
+      assert(med == batch(g)._2,
+        s"$g sketch median $med != batch ${batch(g)._2}")
+      assert(iqr > 0L)
     }
   }
 }

@@ -128,37 +128,26 @@ class KllSpec extends SparkSpecBase {
   test("kllStream: running quantiles across micro-batches, exact in " +
     "gate mode (k >= n)") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val ms = MemoryStream[Double]
+    val out = Sketches.kllStream(ms.toDF().toDF("v"), "v", k = 1024,
+      qs = Seq(0.5, 0.9))
+    val q = out.writeStream.format("memory").queryName("kll_stream")
+      .outputMode("update").start()
     try {
-      val ms = MemoryStream[Double]
-      val out = Sketches.kllStream(ms.toDF().toDF("v"), "v", k = 1024,
-        qs = Seq(0.5, 0.9))
-      val q = out.writeStream.format("memory").queryName("kll_stream")
-        .outputMode("update").start()
-      try {
-        val b1 = (1 to 100).map(_.toDouble)
-        ms.addData(b1: _*)
-        q.processAllAvailable()
-        val b2 = (101 to 200).map(_.toDouble)
-        ms.addData(b2: _*)
-        q.processAllAvailable()
-        // latest row per q is the running estimate over BOTH batches
-        val all = b1 ++ b2
-        val got = spark.table("kll_stream").collect()
-          .map(r => (r.getDouble(0), r.getDouble(1), r.getLong(2)))
-        val latest = got.groupBy(_._1).map { case (qq, vs) =>
-          qq -> vs.maxBy(_._3)._2 }
-        assert(latest == Map(0.5 -> exactQ(all, 0.5),
-          0.9 -> exactQ(all, 0.9)), s"got $latest")
-      } finally q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
+      val b1 = (1 to 100).map(_.toDouble)
+      ms.addData(b1: _*)
+      q.processAllAvailable()
+      val b2 = (101 to 200).map(_.toDouble)
+      ms.addData(b2: _*)
+      q.processAllAvailable()
+      // latest row per q is the running estimate over BOTH batches
+      val all = b1 ++ b2
+      val got = spark.table("kll_stream").collect()
+        .map(r => (r.getDouble(0), r.getDouble(1), r.getLong(2)))
+      val latest = got.groupBy(_._1).map { case (qq, vs) =>
+        qq -> vs.maxBy(_._3)._2 }
+      assert(latest == Map(0.5 -> exactQ(all, 0.5),
+        0.9 -> exactQ(all, 0.9)), s"got $latest")
+    } finally q.stop()
   }
 }

@@ -198,49 +198,40 @@ class Round12Spec extends SparkSpecBase {
   test("monitor node streaming: robust-scale (per-group KLL) topology " +
     "node over a MemoryStream; latest summary across two batches equals " +
     "the batch robustScale median on the union") {
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey, "org.apache.spark.sql.execution." +
-      "streaming.state.RocksDBStateStoreProvider")
+    val ms = MemoryStream[(Long, String, Double)]
+    val env = new StreamEnv(spark,
+      Map("scores_live" -> ms.toDF().toDF("doc_id", "lang", "score")))
+    val ast = stream(Seq("scores_live"), Consumed(keys = Seq("doc_id")))
+      .monitorRobustScale("score", "lang", k = 4096)
+    val frame = Compiler.compile(ast, env)
+    assert(frame.keys == Seq("g"))
+    val q = frame.df.writeStream.format("memory")
+      .queryName("r12_rs_census").outputMode("update").start()
+    // odd count per group so the ceil-rank median is interpolation-free
+    def mk(lo: Int, n: Int, g: String): Seq[(Long, String, Double)] =
+      (0 until n).map(i => (i.toLong, g, (lo + (i * 37) % 101).toDouble))
+    val b1 = mk(10, 101, "en") ++ mk(500, 51, "de")
+    val b2 = mk(40, 100, "en") ++ mk(520, 50, "de")
     try {
-      val ms = MemoryStream[(Long, String, Double)]
-      val env = new StreamEnv(spark,
-        Map("scores_live" -> ms.toDF().toDF("doc_id", "lang", "score")))
-      val ast = stream(Seq("scores_live"), Consumed(keys = Seq("doc_id")))
-        .monitorRobustScale("score", "lang", k = 4096)
-      val frame = Compiler.compile(ast, env)
-      assert(frame.keys == Seq("g"))
-      val q = frame.df.writeStream.format("memory")
-        .queryName("r12_rs_census").outputMode("update").start()
-      // odd count per group so the ceil-rank median is interpolation-free
-      def mk(lo: Int, n: Int, g: String): Seq[(Long, String, Double)] =
-        (0 until n).map(i => (i.toLong, g, (lo + (i * 37) % 101).toDouble))
-      val b1 = mk(10, 101, "en") ++ mk(500, 51, "de")
-      val b2 = mk(40, 100, "en") ++ mk(520, 50, "de")
-      try {
-        ms.addData(b1: _*); q.processAllAvailable()
-        ms.addData(b2: _*); q.processAllAvailable()
-      } finally q.stop()
-      val live = spark.table("r12_rs_census").collect()
-        .groupBy(_.getString(0))
-        .map { case (g, rs) =>
-          val last = rs.maxBy(_.getLong(1))
-          g -> (last.getLong(1), last.getAs[Long]("med_milli"))
-        }
-      val union = (b1 ++ b2).map(t => (t._2, t._3)).toDF("lang", "score")
-      val batch = graft.ext.Stats.robustScale(union, "score", "lang")
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n"), max(col("med_milli")).as("m"))
-        .collect().map(r => r.getString(0) ->
-          (r.getLong(1), r.getLong(2))).toMap
-      assert(live.keySet == Set("en", "de"))
-      live.foreach { case (g, (n, med)) =>
-        assert(n == batch(g)._1 && med == batch(g)._2,
-          s"$g: node census ($n, $med) != batch ${batch(g)}")
+      ms.addData(b1: _*); q.processAllAvailable()
+      ms.addData(b2: _*); q.processAllAvailable()
+    } finally q.stop()
+    val live = spark.table("r12_rs_census").collect()
+      .groupBy(_.getString(0))
+      .map { case (g, rs) =>
+        val last = rs.maxBy(_.getLong(1))
+        g -> (last.getLong(1), last.getAs[Long]("med_milli"))
       }
-    } finally prev match {
-      case Some(v) => spark.conf.set(providerKey, v)
-      case None    => spark.conf.unset(providerKey)
+    val union = (b1 ++ b2).map(t => (t._2, t._3)).toDF("lang", "score")
+    val batch = graft.ext.Stats.robustScale(union, "score", "lang")
+      .groupBy(col("lang"))
+      .agg(count(lit(1)).as("n"), max(col("med_milli")).as("m"))
+      .collect().map(r => r.getString(0) ->
+        (r.getLong(1), r.getLong(2))).toMap
+    assert(live.keySet == Set("en", "de"))
+    live.foreach { case (g, (n, med)) =>
+      assert(n == batch(g)._1 && med == batch(g)._2,
+        s"$g: node census ($n, $med) != batch ${batch(g)}")
     }
   }
 }

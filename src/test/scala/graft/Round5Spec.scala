@@ -1221,54 +1221,43 @@ class Round5Spec extends SparkSpecBase {
       s"missing guaranteed heavy keys: ${mustHave -- est.keySet}")
   }
 
-  test("heavyHittersStream: transformWithState summary is exact across " +
+  test("heavyHittersStream: the per-shard summary is exact across " +
        "batches at covering capacity and stays capacity-bounded") {
     import graft.ext.Sketches
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val ms = MemoryStream[String]
+    val out = Sketches.heavyHittersStream(ms.toDF().toDF("k"), "k",
+      capacity = 16, nShards = 4)
+    val q = out.writeStream.format("memory").queryName("mg_stream")
+      .outputMode("update").start()
     try {
-      val ms = MemoryStream[String]
-      val out = Sketches.heavyHittersStream(ms.toDF().toDF("k"), "k",
-        capacity = 16, nShards = 4)
-      val q = out.writeStream.format("memory").queryName("mg_stream")
-        .outputMode("update").start()
-      try {
-        ms.addData("a", "b", "a", "c", "a", "b")
-        q.processAllAvailable()
-        ms.addData("a", "c", "c", "d")
-        q.processAllAvailable()
-        // capacity >= distinct: estimates are exact counts; in update
-        // mode the LATEST row per key is the state, and exact-mode
-        // estimates only grow -> max per key
-        val got = spark.table("mg_stream").collect()
-          .map(r => (r.getString(1), r.getLong(2)))
-          .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).max }
-        assert(got == Map("a" -> 4L, "b" -> 2L, "c" -> 3L, "d" -> 1L),
-          s"got $got")
-      } finally q.stop()
-      // bounded state: many distinct keys, tiny capacity -> each batch
-      // emits at most capacity rows per shard
-      val ms2 = MemoryStream[String]
-      val out2 = Sketches.heavyHittersStream(ms2.toDF().toDF("k"), "k",
-        capacity = 4, nShards = 2)
-      val q2 = out2.writeStream.format("memory").queryName("mg_stream2")
-        .outputMode("update").start()
-      try {
-        ms2.addData((1 to 500).map(i => s"k$i"): _*)
-        q2.processAllAvailable()
-        val perShard = spark.table("mg_stream2").collect()
-          .groupBy(_.getLong(0)).map { case (s, rows) => s -> rows.length }
-        assert(perShard.values.forall(_ <= 4),
-          s"summary exceeded capacity: $perShard")
-      } finally q2.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
+      ms.addData("a", "b", "a", "c", "a", "b")
+      q.processAllAvailable()
+      ms.addData("a", "c", "c", "d")
+      q.processAllAvailable()
+      // capacity >= distinct: estimates are exact counts; in update
+      // mode the LATEST row per key is the state, and exact-mode
+      // estimates only grow -> max per key
+      val got = spark.table("mg_stream").collect()
+        .map(r => (r.getString(1), r.getLong(2)))
+        .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).max }
+      assert(got == Map("a" -> 4L, "b" -> 2L, "c" -> 3L, "d" -> 1L),
+        s"got $got")
+    } finally q.stop()
+    // bounded state: many distinct keys, tiny capacity -> each batch
+    // emits at most capacity rows per shard
+    val ms2 = MemoryStream[String]
+    val out2 = Sketches.heavyHittersStream(ms2.toDF().toDF("k"), "k",
+      capacity = 4, nShards = 2)
+    val q2 = out2.writeStream.format("memory").queryName("mg_stream2")
+      .outputMode("update").start()
+    try {
+      ms2.addData((1 to 500).map(i => s"k$i"): _*)
+      q2.processAllAvailable()
+      val perShard = spark.table("mg_stream2").collect()
+        .groupBy(_.getLong(0)).map { case (s, rows) => s -> rows.length }
+      assert(perShard.values.forall(_ <= 4),
+        s"summary exceeded capacity: $perShard")
+    } finally q2.stop()
   }
 
   test("heavyHitters: null keys are not tracked; key type is preserved") {

@@ -799,35 +799,24 @@ class Round5bSpec extends SparkSpecBase {
     "collision-free width") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import graft.ext.Sketches
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val ms = MemoryStream[String]
+    val out = Sketches.countMinStream(ms.toDF().toDF("k"), "k",
+      width = 256, depth = 2, nShards = 4)
+    val q = out.writeStream.format("memory").queryName("cms_stream")
+      .outputMode("update").start()
     try {
-      val ms = MemoryStream[String]
-      val out = Sketches.countMinStream(ms.toDF().toDF("k"), "k",
-        width = 256, depth = 2, nShards = 4)
-      val q = out.writeStream.format("memory").queryName("cms_stream")
-        .outputMode("update").start()
-      try {
-        ms.addData("a", "b", "a", "c")
-        q.processAllAvailable()
-        ms.addData("a", "c", "c", "d")
-        q.processAllAvailable()
-        // update-mode changelog: estimates only grow; max per key is the
-        // running count — exact at collision-free width
-        val got = spark.table("cms_stream").collect()
-          .map(r => (r.getString(1), r.getLong(2)))
-          .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).max }
-        assert(got == Map("a" -> 3L, "b" -> 1L, "c" -> 3L, "d" -> 1L),
-          s"got $got")
-      } finally q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
+      ms.addData("a", "b", "a", "c")
+      q.processAllAvailable()
+      ms.addData("a", "c", "c", "d")
+      q.processAllAvailable()
+      // update-mode changelog: estimates only grow; max per key is the
+      // running count — exact at collision-free width
+      val got = spark.table("cms_stream").collect()
+        .map(r => (r.getString(1), r.getLong(2)))
+        .groupBy(_._1).map { case (k, vs) => k -> vs.map(_._2).max }
+      assert(got == Map("a" -> 3L, "b" -> 1L, "c" -> 3L, "d" -> 1L),
+        s"got $got")
+    } finally q.stop()
   }
 
   test("kmv: exact below saturation, bounded error above, merge ≡ " +
@@ -866,35 +855,24 @@ class Round5bSpec extends SparkSpecBase {
     "distinct count below saturation") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import graft.ext.Sketches
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val ms = MemoryStream[String]
+    val out = Sketches.kmvStream(ms.toDF().toDF("k"), "k",
+      k = 64, nShards = 4)
+    val q = out.writeStream.format("memory").queryName("kmv_stream")
+      .outputMode("update").start()
     try {
-      val ms = MemoryStream[String]
-      val out = Sketches.kmvStream(ms.toDF().toDF("k"), "k",
-        k = 64, nShards = 4)
-      val q = out.writeStream.format("memory").queryName("kmv_stream")
-        .outputMode("update").start()
-      try {
-        ms.addData("a", "b", "a", "c")
-        q.processAllAvailable()
-        ms.addData("c", "d", "e", "a")
-        q.processAllAvailable()
-        // latest row per shard, summed = 5 distinct keys; none saturated
-        // below saturation the per-shard count only grows → max = latest
-        val latest = spark.table("kmv_stream").collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
-          .groupBy(_._1).map { case (_, vs) => vs.maxBy(_._2) }
-        assert(latest.forall(!_._3))
-        assert(latest.map(_._2).sum == 5L, s"got $latest")
-      } finally q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
+      ms.addData("a", "b", "a", "c")
+      q.processAllAvailable()
+      ms.addData("c", "d", "e", "a")
+      q.processAllAvailable()
+      // latest row per shard, summed = 5 distinct keys; none saturated
+      // below saturation the per-shard count only grows → max = latest
+      val latest = spark.table("kmv_stream").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
+        .groupBy(_._1).map { case (_, vs) => vs.maxBy(_._2) }
+      assert(latest.forall(!_._3))
+      assert(latest.map(_._2).sum == 5L, s"got $latest")
+    } finally q.stop()
   }
 
   test("countMin: dimension mismatch fails loud on merge") {

@@ -556,48 +556,36 @@ class Round8dSpec extends SparkSpecBase {
     "batch face across micro-batches") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import graft.ext.TextAnalysis
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
+    val ms = MemoryStream[(Double, Boolean)]
+    val out = TextAnalysis.calibrationStream(
+      ms.toDF().toDF("p", "y"), "p", "y", bins = 4)
+    val q = out.writeStream.format("memory").queryName("cal_stream")
+      .outputMode("update").start()
     try {
-      val ms = MemoryStream[(Double, Boolean)]
-      val out = TextAnalysis.calibrationStream(
-        ms.toDF().toDF("p", "y"), "p", "y", bins = 4)
-      val q = out.writeStream.format("memory").queryName("cal_stream")
-        .outputMode("update").start()
-      try {
-        val b1 = Seq((0.1, true), (0.1, false), (0.6, true))
-        val b2 = Seq((0.1, true), (0.9, false))
-        ms.addData(b1: _*)
-        q.processAllAvailable()
-        ms.addData(b2: _*)
-        q.processAllAvailable()
-        // latest changelog row per bin vs the batch face on all rows
-        val latest = spark.table("cal_stream").collect()
-          .groupBy(_.getLong(0))
-          .map { case (bin, rows) => bin -> rows.maxBy(_.getLong(1)) }
-        val batch = TextAnalysis.calibrationReport(
-            (b1 ++ b2).toDF("p", "y"), "p", "y", bins = 4)
-          .collect().map(r => r.getAs[Long]("bin") -> r).toMap
-        assert(latest.keySet == batch.keySet)
-        batch.foreach { case (bin, br) =>
-          val sr = latest(bin)
-          assert(sr.getLong(1) == br.getAs[Long]("n") &&
-            sr.getLong(2) == br.getAs[Long]("n_pos") &&
-            sr.getLong(3) == br.getAs[Long]("conf_ppm") &&
-            sr.getLong(4) == br.getAs[Long]("acc_ppm") &&
-            sr.getLong(5) == br.getAs[Long]("gap_ppm"),
-            s"bin $bin stream $sr != batch $br")
-        }
-      } finally q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
+      val b1 = Seq((0.1, true), (0.1, false), (0.6, true))
+      val b2 = Seq((0.1, true), (0.9, false))
+      ms.addData(b1: _*)
+      q.processAllAvailable()
+      ms.addData(b2: _*)
+      q.processAllAvailable()
+      // latest changelog row per bin vs the batch face on all rows
+      val latest = spark.table("cal_stream").collect()
+        .groupBy(_.getLong(0))
+        .map { case (bin, rows) => bin -> rows.maxBy(_.getLong(1)) }
+      val batch = TextAnalysis.calibrationReport(
+          (b1 ++ b2).toDF("p", "y"), "p", "y", bins = 4)
+        .collect().map(r => r.getAs[Long]("bin") -> r).toMap
+      assert(latest.keySet == batch.keySet)
+      batch.foreach { case (bin, br) =>
+        val sr = latest(bin)
+        assert(sr.getLong(1) == br.getAs[Long]("n") &&
+          sr.getLong(2) == br.getAs[Long]("n_pos") &&
+          sr.getLong(3) == br.getAs[Long]("conf_ppm") &&
+          sr.getLong(4) == br.getAs[Long]("acc_ppm") &&
+          sr.getLong(5) == br.getAs[Long]("gap_ppm"),
+          s"bin $bin stream $sr != batch $br")
       }
-    }
+    } finally q.stop()
   }
 
   test("containmentPairs: asymmetric inclusion found where Jaccard " +
@@ -657,50 +645,38 @@ class Round8dSpec extends SparkSpecBase {
   test("majorityVoteStream: cross-batch tallies converge to the batch " +
     "face (a late relabel flips the consensus)") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(providerKey)
-    spark.conf.set(providerKey,
-      "org.apache.spark.sql.execution.streaming.state." +
-        "RocksDBStateStoreProvider")
+    val ms = MemoryStream[(Long, Long)]
+    val out = Labels.majorityVoteStream(
+      ms.toDF().toDF("item", "label"))
+    val q = out.writeStream.format("memory").queryName("mv_stream")
+      .outputMode("update").start()
     try {
-      val ms = MemoryStream[(Long, Long)]
-      val out = Labels.majorityVoteStream(
-        ms.toDF().toDF("item", "label"))
-      val q = out.writeStream.format("memory").queryName("mv_stream")
-        .outputMode("update").start()
-      try {
-        // batch 1: item 1 leans label 5; item 2 ties 3-vs-9 (min wins)
-        ms.addData((1L, 5L), (1L, 5L), (1L, 7L), (2L, 9L), (2L, 3L))
-        q.processAllAvailable()
-        val b1 = spark.table("mv_stream").collect()
-          .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2),
-            r.getLong(3)))).toMap
-        assert(b1(1L) == ((5L, 2L, 3L)))
-        assert(b1(2L) == ((3L, 1L, 2L))) // tie -> min label
-        // batch 2: two late 7-votes flip item 1; item 2 untouched
-        ms.addData((1L, 7L), (1L, 7L))
-        q.processAllAvailable()
-        val rows = spark.table("mv_stream").collect()
-          .filter(_.getLong(0) == 1L)
-        val latest = rows.maxBy(_.getLong(3)) // n_ann only grows
-        assert((latest.getLong(1), latest.getLong(2), latest.getLong(3))
-          == ((7L, 3L, 5L)))
-        // convergence: the final changelog row per item equals the
-        // batch face over the full annotation set
-        val all = Seq((1L, 5L), (1L, 5L), (1L, 7L), (2L, 9L), (2L, 3L),
-          (1L, 7L), (1L, 7L)).toDF("item", "label")
-        val batch = Labels.majorityVote(all).collect()
-          .map(r => r.getAs[Long]("item") ->
-            ((r.getAs[Long]("label"), r.getAs[Long]("votes"),
-              r.getAs[Long]("n_ann")))).toMap
-        assert(batch(1L) == ((7L, 3L, 5L)))
-        assert(batch(2L) == ((3L, 1L, 2L)))
-      } finally q.stop()
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(providerKey, v)
-        case None => spark.conf.unset(providerKey)
-      }
-    }
+      // batch 1: item 1 leans label 5; item 2 ties 3-vs-9 (min wins)
+      ms.addData((1L, 5L), (1L, 5L), (1L, 7L), (2L, 9L), (2L, 3L))
+      q.processAllAvailable()
+      val b1 = spark.table("mv_stream").collect()
+        .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2),
+          r.getLong(3)))).toMap
+      assert(b1(1L) == ((5L, 2L, 3L)))
+      assert(b1(2L) == ((3L, 1L, 2L))) // tie -> min label
+      // batch 2: two late 7-votes flip item 1; item 2 untouched
+      ms.addData((1L, 7L), (1L, 7L))
+      q.processAllAvailable()
+      val rows = spark.table("mv_stream").collect()
+        .filter(_.getLong(0) == 1L)
+      val latest = rows.maxBy(_.getLong(3)) // n_ann only grows
+      assert((latest.getLong(1), latest.getLong(2), latest.getLong(3))
+        == ((7L, 3L, 5L)))
+      // convergence: the final changelog row per item equals the
+      // batch face over the full annotation set
+      val all = Seq((1L, 5L), (1L, 5L), (1L, 7L), (2L, 9L), (2L, 3L),
+        (1L, 7L), (1L, 7L)).toDF("item", "label")
+      val batch = Labels.majorityVote(all).collect()
+        .map(r => r.getAs[Long]("item") ->
+          ((r.getAs[Long]("label"), r.getAs[Long]("votes"),
+            r.getAs[Long]("n_ann")))).toMap
+      assert(batch(1L) == ((7L, 3L, 5L)))
+      assert(batch(2L) == ((3L, 1L, 2L)))
+    } finally q.stop()
   }
 }
