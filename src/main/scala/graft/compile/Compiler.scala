@@ -582,8 +582,8 @@ object Compiler {
     }
     // Named materialization (`Materialized.as`, eval.clj:169-173): register
     // the state view for interactive queries (graft.iq). Batch registers a
-    // temp view; streaming queryable state goes through a memory sink
-    // (Runner + SinkSpec.Memory).
+    // temp view; streaming queryable state goes through Runner +
+    // SinkSpec.Memory (a keyed store for an update-mode table).
     if (!env.isStreaming)
       mat.flatMap(_.name).foreach(n => result.df.createOrReplaceTempView(n))
     result

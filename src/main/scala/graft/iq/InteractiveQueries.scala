@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions.col
 /** Interactive queries over materialized state — the analog of
   * `src/cddr/ksml/ring.clj`: the reference routes an HTTP point-lookup to
   * whichever Kafka Streams instance owns the key's state shard
-  * (`ring.clj:20-53`). In Spark, state materialized through a memory sink
-  * (or any table sink) is queryable on the driver with plain SQL, so the
+  * (`ring.clj:20-53`). In Spark, state materialized on the driver — a
+  * [[KeyedStore]] for an update-mode KTable, Spark's memory sink for any
+  * other output, or any temp view — is queryable by name, so the
   * shard-routing layer collapses; we keep the reference's handler shape
   * (findHost / remote / local) as a façade for multi-driver deployments.
   *
@@ -17,13 +18,19 @@ import org.apache.spark.sql.functions.col
   */
 object InteractiveQueries {
 
-  /** All rows of a materialized store (memory-sink query name or temp view). */
+  /** All rows of a materialized store (its temp view). */
   def store(spark: SparkSession, name: String): DataFrame = spark.table(name)
 
-  /** Point lookup by key — the `ReadOnlyKeyValueStore.get` analog. */
+  /** Point lookup by key — the `ReadOnlyKeyValueStore.get` analog: the
+    * rows where `col(keyCol) === key`. A keyed store answers from its
+    * driver map with no Spark job; any other view is filtered.
+    */
   def lookup(spark: SparkSession, name: String, keyCol: String,
              key: Any): Array[Row] =
-    store(spark, name).where(col(keyCol) === key).collect()
+    KeyedStore.named(spark, name) match {
+      case Some(s) => s.toRows(s.lookup(keyCol, key))
+      case None => store(spark, name).where(col(keyCol) === key).collect()
+    }
 
   /** State of a CHECKPOINTED streaming query read straight from its
     * checkpoint via Spark's state data source
@@ -36,9 +43,10 @@ object InteractiveQueries {
     * carry the OPERATOR's internal buffer names (`sum`, `count`, …), not
     * the sink projection's aliases — the state precedes the projection.
     *
-    * Prefer the memory-sink path ([[store]]) when the query already
-    * materializes a queryable view (no checkpoint file I/O per lookup,
-    * driver-local); prefer THIS face when the query writes to an
+    * Prefer [[store]] and [[lookup]] when the query already materializes
+    * a queryable view through `SinkSpec.Memory` (driver-local, no
+    * checkpoint file I/O per lookup, and no Spark job at all for a keyed
+    * store); prefer THIS face when the query writes to an
     * external sink only, when state must be inspected offline
     * (post-mortem of a stopped/failed job), or when replaying a specific
     * `batchId`'s state.
@@ -56,7 +64,7 @@ object InteractiveQueries {
   }
 
   /** Register a checkpoint's state as a temp view so the existing
-    * [[HttpStateServer]] routes serve it like any memory-sink store.
+    * [[HttpStateServer]] routes serve it like any other store.
     * The view re-reads the checkpoint per query, so a running query's
     * later commits become visible on subsequent lookups.
     */

@@ -2,9 +2,9 @@ package graft.streaming
 
 import graft.ast._
 import graft.compile.{Compiler, Env}
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery, Trigger}
-import org.apache.spark.sql.Row
+import graft.iq.KeyedStore
+import org.apache.spark.sql.{Dataset, Row}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
 /** Execution entry points — the analog of the reference's `streams` +
   * `.start` (`src/cddr/ksml/core.clj:39-41`, `README.md:70-73`): compile a
@@ -30,14 +30,18 @@ object Runner {
       store: StoreKind = StoreKind.Default
   )
 
-  /** Compile against a (streaming) env — `ksml*` analog (`core.clj:18-23`). */
-  def build(node: KNode, env: Env): DataFrame = Compiler.compile(node, env).df
-
   private val rocksDbProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
   private val providerKey = "spark.sql.streaming.stateStore.providerClass"
 
   /** Compile + start — `streams` + `.start` analog.
+    *
+    * `SinkSpec.Memory(name)` names the query and the session temp view that
+    * interactive queries read. An update-mode KTable with key columns fills
+    * a [[KeyedStore]]: one current row per key (per window for a windowed
+    * table), tombstones deleting, read with no Spark job. Any other output
+    * (append or complete mode, a KStream, no keys) goes to Spark's memory
+    * sink, which keeps every emitted row.
     *
     * State-store provider scoping: Spark reads `providerClass` once, at
     * query start, so the conf only needs to hold the right value across the
@@ -56,13 +60,23 @@ object Runner {
         env.spark.conf.unset(providerKey)
     }
     try {
-      val df = build(node, env)
-      val w0 = df.writeStream
+      val f = Compiler.compile(node, env)
+      val w0 = f.df.writeStream
         .queryName(cfg.queryName)
         .outputMode(cfg.outputMode)
         .trigger(Trigger.ProcessingTime(cfg.triggerMs))
       val w1 = cfg.checkpointLocation.fold(w0)(p => w0.option("checkpointLocation", p))
-      configureSink(w1, sink, cfg).start()
+      sink match {
+        case SinkSpec.Memory(name)
+            if f.isTable && f.keys.nonEmpty && cfg.outputMode.equalsIgnoreCase("update") =>
+          val store = new KeyedStore(env.spark, name, f.df.schema, f.keys, f.valueCols)
+          val q = w1.queryName(name).foreachBatch((batch: Dataset[Row], _: Long) =>
+            store.upsert(batch.queryExecution.executedPlan.executeCollect())).start()
+          // once the query has started, as the memory sink registers its view
+          store.register()
+          q
+        case _ => configureSink(w1, sink, cfg).start()
+      }
     } finally prevProvider match {
       case Some(p) => env.spark.conf.set(providerKey, p)
       case None => env.spark.conf.unset(providerKey)
@@ -86,7 +100,7 @@ object Runner {
     case SinkSpec.Memory(name) => w.format("memory").queryName(name)
     case SinkSpec.Foreach(action) => // `:foreach` terminal side effect
       // executed distributed, per record, on the executors (never collect)
-      w.foreachBatch((batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
+      w.foreachBatch((batch: Dataset[Row], _: Long) =>
         batch.foreach(action(_)))
   }
 }
