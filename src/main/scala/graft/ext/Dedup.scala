@@ -1053,9 +1053,7 @@ object Dedup {
     * (AQE broadcasts it when small) to mark removable positions; per-doc
     * reduce + codegen'd linear rebuild as in the batch face. Corpus TEXT
     * never participates. For a no-shuffle index probe at extreme scale,
-    * Bloom the index hashes and route positives through this exact join
-    * ([[incrementalExactBloomVerified]] pattern) — not implemented until
-    * a workload needs it.
+    * see [[dedupSubstringsIncrementalBloom]].
     */
   def dedupSubstringsIncremental(incoming: DataFrame, corpusIndex: DataFrame,
                                  textCol: String = "text",
@@ -1108,12 +1106,10 @@ object Dedup {
     * an ≤ fpp sliver — confirm EXACTLY against the index, so the index
     * join's probe side shrinks from the batch's full distinct-hash set
     * to the flagged sliver (for a mostly-novel batch, almost nothing).
-    * The filter itself costs ~1.2·n·ln(1/fpp)/ln²2 bits over the index's
-    * distinct windows and is built ONCE per index version — reuse it
-    * across every batch of an ingest run, exactly like the index table.
-    * With the default `expectedItems` (≤ 0) the sizing `index.count()`
-    * adds one cheap extra index pass; production loops pass the known
-    * cardinality from the previous append's bookkeeping.
+    * The filter is built inside the query ([[RuntimeFilter.mightContain]]
+    * sizes and caps it); pass the index's distinct-window count as
+    * `expectedItems` when known. An undersized or capped filter only sends
+    * more hashes through the confirm join, never changes the answer.
     */
   def dedupSubstringsIncrementalBloom(incoming: DataFrame,
                                       corpusIndex: DataFrame,
@@ -1125,15 +1121,6 @@ object Dedup {
     require(minTokens >= 2, s"minTokens must be >= 2, got $minTokens")
     val k = minTokens
     val idx = corpusIndex.select(col("h")).distinct()
-    val sized =
-      if (expectedItems > 0L) expectedItems
-      else math.max(1000L, idx.count())
-    val bloom = idx.stat.bloomFilter(col("h"), sized, fpp)
-    // codegen'd probe (graftfn.BloomFunctions): the filter rides the
-    // stage's broadcast task binary as a plan reference object, and the
-    // membership test stays inside whole-stage codegen
-    val mightHave = (c: Column) => org.apache.spark.sql.graftfn
-      .BloomFunctions.bloom_might_contain_long(c, bloom)
     val base = incoming.select(col(idCol).as("id"), col(textCol).as("__t"))
     val wins = base.select(col("id"),
         posexplode(graft.functions.VectorFunctions
@@ -1142,7 +1129,8 @@ object Dedup {
     val perH = wins.groupBy(col("h"))
       .agg(count(lit(1)).as("__occ"),
         min(struct(col("id"), col("pos"))).as("__keep"))
-      .withColumn("__maybe", mightHave(col("h")))
+      .withColumn("__maybe", RuntimeFilter.mightContain(
+        corpusIndex, col("h"), col("h"), fpp, expectedItems))
     val confirmed = perH.where(col("__maybe"))
       .join(idx.withColumn("__in", lit(true)), Seq("h"), "left")
       .select(col("h"), coalesce(col("__in"), lit(false)).as("__hit"),
@@ -1274,6 +1262,9 @@ object Dedup {
     * genuinely new documents without any error. Callers who know the
     * corpus cardinality (e.g. from the previous ingest round's bookkeeping)
     * pass it explicitly and skip the count.
+    * The filter stays driver-built: this answer depends on the false
+    * positives, and Spark's in-query aggregate ([[RuntimeFilter.mightContain]])
+    * silently caps its size, while a plan literal prints it whole.
     */
   def incrementalExactBloom(incoming: DataFrame, corpus: DataFrame,
                             textCol: String = "text",
@@ -1309,29 +1300,23 @@ object Dedup {
     * Scale shape: the corpus streams once through the Bloom build and
     * once through a hash equi-join against the (small) flagged-hash set;
     * incoming text never shuffles except the flagged sliver's confirm
-    * anti-join. With the default `expectedItems` (≤ 0) there is a THIRD
-    * corpus pass — the sizing `corpus.count()` (a metadata-cheap count
-    * job, but a full scan on a non-parquet source); production ingest
-    * loops should pass the cardinality from the previous round's
-    * bookkeeping so the corpus really does stream just twice.
+    * anti-join. The Bloom build runs inside the query, shared by both
+    * probes ([[RuntimeFilter.mightContain]] sizes and caps it): an
+    * undersized or capped filter only flags more docs for the confirm.
     */
   def incrementalExactBloomVerified(incoming: DataFrame, corpus: DataFrame,
                                     textCol: String = "text",
                                     idCol: String = "doc_id",
                                     expectedItems: Long = -1L,
                                     fpp: Double = 0.001): DataFrame = {
-    val sized =
-      if (expectedItems > 0L) expectedItems
-      else math.max(1000L, corpus.count())
-    val bloom = corpus.stat.bloomFilter(xxhash64(col(textCol)), sized, fpp)
-    val seen = (c: Column) => org.apache.spark.sql.graftfn
-      .BloomFunctions.bloom_might_contain_long(c, bloom)
+    val seen = RuntimeFilter.mightContain(corpus, xxhash64(col(textCol)),
+      col("__h"), fpp, expectedItems)
     val inBatch = incoming.withColumn("__h", xxhash64(col(textCol)))
     val batchReps = inBatch
       .groupBy(col("__h")).agg(min(col(idCol)).as(idCol))
     val reps = inBatch.join(batchReps, Seq("__h", idCol)).distinct()
-    val clean = reps.where(!seen(col("__h")))
-    val flagged = reps.where(seen(col("__h")))
+    val clean = reps.where(!seen)
+    val flagged = reps.where(seen)
     // corpus shard = texts whose hash the flagged batch carries (tiny at
     // low fpp); equi-join on the 8-byte hash, then exact text anti-join
     val shardTexts = corpus
@@ -1964,6 +1949,8 @@ object Dedup {
     * tolerate over-dropping re-check flagged docs with the exact
     * [[contaminationPairs]] join — flagged docs are few, so the exact
     * pass runs on a sliver of the corpus.
+    * The filter stays driver-built, for [[incrementalExactBloom]]'s
+    * reason: the flag depends on the false positives.
     */
   def contaminationFlag(docs: DataFrame, evalSet: DataFrame,
                         textCol: String, idCol: String, n: Int = 13,

@@ -4,19 +4,16 @@ package org.apache.spark.sql.graftfn
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, ExpectsInputTypes, Expression, Literal, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.types.{AbstractDataType, BooleanType, DataType, LongType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.{AbstractDataType, BooleanType, DataType, LongType}
 import org.apache.spark.util.sketch.BloomFilter
 
-/** Codegen'd Bloom membership probe over a long column — the scan-side
-  * half of every broadcast-Bloom pattern (runtime-filter joins,
-  * incremental Bloom dedup): the filter rides into generated code as one
-  * reference object, so the probe stays inside whole-stage codegen where
-  * a Scala UDF would box the key and break the codegen span. No false
-  * negatives by construction; `true` may be a false positive — callers
-  * must treat it as "candidate", never "member".
+/** Codegen'd Bloom probe of a long column against a DRIVER-built filter,
+  * riding into generated code as one reference object. Only for answers
+  * that depend on the false positives (`Dedup.incrementalExactBloom`);
+  * prefilters build theirs in the query with [[BloomFunctions.might_contain]].
   */
 case class BloomMightContainLong(child: Expression, filter: BloomFilter)
     extends UnaryExpression with ExpectsInputTypes {
@@ -37,39 +34,22 @@ case class BloomMightContainLong(child: Expression, filter: BloomFilter)
     copy(child = newChild)
 }
 
-/** String twin of [[BloomMightContainLong]], probing via the UTF-8 bytes
-  * directly (`mightContainBinary` — `BloomFilter.putString` inserts the
-  * UTF-8 byte form, so this is equivalent to `mightContainString` without
-  * the per-row String decode).
-  */
-case class BloomMightContainString(child: Expression, filter: BloomFilter)
-    extends UnaryExpression with ExpectsInputTypes {
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-  override def dataType: DataType = BooleanType
-  override def prettyName: String = "bloom_might_contain_string"
-
-  override def nullSafeEval(input: Any): Any =
-    filter.mightContainBinary(input.asInstanceOf[UTF8String].getBytes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("bloomFilter", filter,
-      classOf[BloomFilter].getName)
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = $ref.mightContainBinary($c.getBytes());")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
 object BloomFunctions {
   /** Column face of [[BloomMightContainLong]]. */
   def bloom_might_contain_long(key: Column, filter: BloomFilter): Column =
     ExpressionUtils.column(
       BloomMightContainLong(ExpressionUtils.expression(key), filter))
 
-  /** Column face of [[BloomMightContainString]]. */
-  def bloom_might_contain_string(key: Column, filter: BloomFilter): Column =
-    ExpressionUtils.column(
-      BloomMightContainString(ExpressionUtils.expression(key), filter))
+  /** Spark's `BloomFilterAggregate` over a long column (capped at the
+    * `runtime.bloomFilter.maxNumItems`/`maxNumBits` confs); null if empty.
+    */
+  def bloom_filter_agg(key: Column, expectedItems: Long, numBits: Long): Column =
+    ExpressionUtils.column(new BloomFilterAggregate(ExpressionUtils.expression(key),
+      Literal(expectedItems), Literal(numBits)).toAggregateExpression())
+
+  /** Spark's `BloomFilterMightContain`: `filter` a constant or scalar
+    * subquery over [[bloom_filter_agg]]; null if either side is null. */
+  def might_contain(filter: Column, key: Column): Column =
+    ExpressionUtils.column(BloomFilterMightContain(
+      ExpressionUtils.expression(filter), ExpressionUtils.expression(key)))
 }

@@ -3,13 +3,10 @@ package graft
 import graft.ast._
 import graft.ast.dsl._
 import graft.compile.{Compiler, ParquetEnv}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftfn.ListenerDrain
 import java.io.File
 import java.nio.file.{Files, StandardCopyOption}
-import java.util.concurrent.atomic.AtomicInteger
 
 /** The parquet source-metadata cache: a warm build reads cached schemas
   * and footer counts (no Spark job), a changed file is re-inferred, and a
@@ -23,21 +20,6 @@ class SourceCacheSpec extends SparkSpecBase {
     "op_filter", "op_map", "op_flat_map_values", "op_branch",
     "agg_count_windowed", "join_stream_table", "join_bloom_prune",
     "q1_pricing", "q3_revenue")
-
-  /** Spark jobs started while `body` runs. */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val n = new AtomicInteger
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    ListenerDrain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val out = body
-      ListenerDrain(spark.sparkContext)
-      (out, n.get)
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
 
   private def build(name: String): DataFrame =
     SparkEntry.queries(name)(spark, sfDir)
