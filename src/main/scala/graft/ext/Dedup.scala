@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.floorDiv
 import org.apache.spark.storage.StorageLevel
 
 /** Document deduplication operators for LLM-data pipelines (BASELINE.json
@@ -453,12 +454,10 @@ object Dedup {
     // is integral (IEEE 1−0.8 = 0.19999…), silently dropping
     // exactly-at-threshold pairs whose only shared shingle is the last
     // prefix slot. ⌈n·tPpm/1e6⌉ in the same ppm base the verify uses.
-    def floorDivNN(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     val tPpm = math.round(threshold * 1000000)
     val nSh = size(col("sh")).cast("long")
     val prefixLen =
-      (nSh - floorDivNN(nSh * tPpm + lit(999999L), lit(1000000L)) + 1)
+      (nSh - floorDiv(nSh * tPpm + lit(999999L), lit(1000000L)) + 1)
         .cast("int")
     val posting = sh.select(col("id"),
       explode(slice(col("sh"), lit(1), prefixLen)).as("shingle"))
@@ -500,8 +499,6 @@ object Dedup {
                        threshold: Double = 0.8): DataFrame = {
     require(threshold > 0 && threshold <= 1,
       s"threshold must be in (0, 1], got $threshold")
-    def floorDivNN(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     val tPpm = math.round(threshold * 1000000)
     val sh = OpCaches.register(docs.select(col(idCol).as("id"),
       graft.functions.VectorFunctions.word_shingle_hashes(col(textCol), k)
@@ -516,7 +513,7 @@ object Dedup {
     // integer base the final filter uses.
     val nSh = size(col("sh")).cast("long")
     val prefixLen =
-      (nSh - floorDivNN(nSh * tPpm + lit(999999L), lit(1000000L)) + 1)
+      (nSh - floorDiv(nSh * tPpm + lit(999999L), lit(1000000L)) + 1)
         .cast("int")
     val pref = sh.select(col("id").as("id_a"),
       explode(slice(col("sh"), lit(1), prefixLen)).as("shingle"))
@@ -543,7 +540,7 @@ object Dedup {
           col("sh_a"), col("sh_b")).as("inter"),
         size(col("sh_a")).cast("long").as("n_a"))
       .withColumn("containment_ppm",
-        floorDivNN(col("inter") * 1000000L, col("n_a")))
+        floorDiv(col("inter") * 1000000L, col("n_a")))
       .where(col("containment_ppm") >= tPpm)
   }
 
@@ -615,12 +612,6 @@ object Dedup {
       .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // Size the loop's shuffles from the measured edge count: the edge set
-    // is the dup-pair graph — orders of magnitude smaller than the corpus —
-    // and the iteration cost is dominated by per-stage task overhead when
-    // the session-wide partition count (sized for corpus scans) is applied
-    // to a few thousand edge rows. ~500k edges per partition, capped at
-    // the session default so a 100 TB pair graph still fans out fully.
     // Hybrid execution: below `maxDriverEdges` the whole graph fits on the
     // driver comfortably (5M edges ≈ 80 MB of longs) and a single
     // union-find pass replaces O(diameter) shuffle rounds — the pair graph
@@ -631,8 +622,7 @@ object Dedup {
     // (cluster_id = min member id; spec-checked against each other).
     // The limit guard makes the probe ONE action: it returns at most
     // maxDriverEdges+1 rows, so an over-threshold graph costs a bounded
-    // collect before falling through to the distributed loop (which then
-    // counts the persisted frame it would have materialized anyway).
+    // collect before falling through to the distributed loop.
     val probe = maxDriverEdges.min(Int.MaxValue - 1L).toInt
     val e = edges.limit(probe + 1).collect()
     if (e.length <= maxDriverEdges) {
@@ -667,76 +657,63 @@ object Dedup {
         spark.sparkContext.parallelize(rows, math.max(1, rows.size / 500000 + 1)),
         schema)
     }
-    val nEdges = edges.count() // exact size; materializes the persist fully
-    val defaultPar =
-      spark.conf.getOption("spark.sql.shuffle.partitions").map(_.toInt).getOrElse(200)
-    val loopPar = math.max(1L, math.min(defaultPar.toLong, nEdges / 500000L + 1L)).toInt
-    val prevPar = spark.conf.getOption("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", loopPar)
-    try {
-      // Per-round barrier is localCheckpoint(true), NOT persist: each
-      // round reads `labels` twice (neighbor-min join + pointer jump), so
-      // a persisted-but-unbarriered loop doubles the logical tree per
-      // round — the measured iterative-self-join analysis blowup. The
-      // eager checkpoint truncates lineage to a LogicalRDD (blocks are
-      // weak-referenced; the ContextCleaner reclaims superseded rounds).
-      // Stated trade: truncated lineage is NOT recomputable — on a
-      // cluster, losing an executor holding checkpoint blocks fails the
-      // query instead of recomputing (rerun-on-failure, the standard
-      // localCheckpoint contract). The driver union-find path above
-      // covers every graph ≤ maxDriverEdges with no such exposure; this
-      // loop is the >5M-edge escape where O(log d) rounds beat both the
-      // recompute risk and the exponential analysis tree.
-      var labels = edges.select(col("src").as("id")).distinct()
-        .withColumn("lbl", col("id"))
-        .localCheckpoint(true)
-      var changed = 1L
-      var iter = 0
-      while (changed > 0 && iter < maxIters) {
-        val nbMin = edges
-          .join(labels.select(col("id").as("dst"), col("lbl").as("nlbl")), Seq("dst"))
-          .groupBy(col("src").as("id"))
-          .agg(min(col("nlbl")).as("nmin"))
-        // carry the old label through, so the convergence check is a filter
-        // on the checkpointed next frame rather than a second join per round
-        val hop = labels.join(nbMin, Seq("id"), "left")
-          .select(col("id"),
-            least(col("lbl"), coalesce(col("nmin"), col("lbl"))).as("lbl"),
-            col("lbl").as("old"))
-        // POINTER JUMP (path halving): also adopt the current label's own
-        // label. One-hop propagation alone converges in O(diameter)
-        // rounds — a >maxIters-diameter chain (10⁶ near-identical docs
-        // linked pairwise is exactly that shape) would previously exit
-        // the round cap SILENTLY MISLABELED (the fixed-cap defect class,
-        // caught by this round's cap audit). With the jump, label chains
-        // halve per round: maxIters = 20 covers diameter ~2²⁰, and the
-        // convergence require below turns any residue loud.
-        val jumped = hop.join(
-            labels.select(col("id").as("lbl"), col("lbl").as("jlbl")),
-            Seq("lbl"), "left")
-          .select(col("id"),
-            least(col("lbl"), coalesce(col("jlbl"), col("lbl"))).as("lbl"),
-            col("old"))
-        val next = jumped.localCheckpoint(true)
-        changed = next.where(col("lbl") =!= col("old")).count()
-        labels = next.select(col("id"), col("lbl"))
-        iter += 1
-      }
-      edges.unpersist()
-      require(changed == 0,
-        s"clusters: min-label loop did not converge in $maxIters rounds " +
-          s"($changed labels still moving) — component diameter exceeds " +
-          s"2^$maxIters; raise maxIters")
-      labels.select(col("id"), col("lbl").as("cluster_id"))
-    } finally {
-      // every loop shuffle has executed (each iteration ends in a count on
-      // the persisted frame), so restoring the session conf here cannot
-      // retroactively re-plan them; the returned frame reads the persist
-      prevPar match {
-        case Some(p) => spark.conf.set("spark.sql.shuffle.partitions", p)
-        case None    => spark.conf.unset("spark.sql.shuffle.partitions")
-      }
+    // The loop's shuffles read the dup-pair graph — orders of magnitude
+    // smaller than the corpus — and adaptive execution coalesces their
+    // partitions to its size.
+    // Per-round barrier is localCheckpoint(true), NOT persist: each
+    // round reads `labels` twice (neighbor-min join + pointer jump), so
+    // a persisted-but-unbarriered loop doubles the logical tree per
+    // round — the measured iterative-self-join analysis blowup. The
+    // eager checkpoint truncates lineage to a LogicalRDD (blocks are
+    // weak-referenced; the ContextCleaner reclaims superseded rounds).
+    // Stated trade: truncated lineage is NOT recomputable — on a
+    // cluster, losing an executor holding checkpoint blocks fails the
+    // query instead of recomputing (rerun-on-failure, the standard
+    // localCheckpoint contract). The driver union-find path above
+    // covers every graph ≤ maxDriverEdges with no such exposure; this
+    // loop is the >5M-edge escape where O(log d) rounds beat both the
+    // recompute risk and the exponential analysis tree.
+    var labels = edges.select(col("src").as("id")).distinct()
+      .withColumn("lbl", col("id"))
+      .localCheckpoint(true)
+    var changed = 1L
+    var iter = 0
+    while (changed > 0 && iter < maxIters) {
+      val nbMin = edges
+        .join(labels.select(col("id").as("dst"), col("lbl").as("nlbl")), Seq("dst"))
+        .groupBy(col("src").as("id"))
+        .agg(min(col("nlbl")).as("nmin"))
+      // carry the old label through, so the convergence check is a filter
+      // on the checkpointed next frame rather than a second join per round
+      val hop = labels.join(nbMin, Seq("id"), "left")
+        .select(col("id"),
+          least(col("lbl"), coalesce(col("nmin"), col("lbl"))).as("lbl"),
+          col("lbl").as("old"))
+      // POINTER JUMP (path halving): also adopt the current label's own
+      // label. One-hop propagation alone converges in O(diameter)
+      // rounds — a >maxIters-diameter chain (10⁶ near-identical docs
+      // linked pairwise is exactly that shape) would previously exit
+      // the round cap SILENTLY MISLABELED (the fixed-cap defect class,
+      // caught by this round's cap audit). With the jump, label chains
+      // halve per round: maxIters = 20 covers diameter ~2²⁰, and the
+      // convergence require below turns any residue loud.
+      val jumped = hop.join(
+          labels.select(col("id").as("lbl"), col("lbl").as("jlbl")),
+          Seq("lbl"), "left")
+        .select(col("id"),
+          least(col("lbl"), coalesce(col("jlbl"), col("lbl"))).as("lbl"),
+          col("old"))
+      val next = jumped.localCheckpoint(true)
+      changed = next.where(col("lbl") =!= col("old")).count()
+      labels = next.select(col("id"), col("lbl"))
+      iter += 1
     }
+    edges.unpersist()
+    require(changed == 0,
+      s"clusters: min-label loop did not converge in $maxIters rounds " +
+        s"($changed labels still moving) — component diameter exceeds " +
+        s"2^$maxIters; raise maxIters")
+    labels.select(col("id"), col("lbl").as("cluster_id"))
   }
 
   /** End-to-end near-dup removal: given the corpus and its near-dup pairs

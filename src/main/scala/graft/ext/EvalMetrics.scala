@@ -2,7 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.functions.VectorFunctions
+import graft.functions.{VectorFunctions, div, floorDiv}
 
 /** Reference-vs-candidate text evaluation metrics — the scoring half of
   * an eval pipeline (the data half being contamination/decontamination):
@@ -10,18 +10,16 @@ import graft.functions.VectorFunctions
   * corpus-level BLEU, both from the shared clipped n-gram overlap kernel
   * (`graftfn.NgramOverlapCounts`, Papineni 2002 clipping) and both in
   * exact integer units so scores are engine-portable and
-  * aggregation-order-independent.
+  * aggregation-order-independent. Ratios divide with
+  * [[graft.functions.floorDiv]], and possibly-negative numerators with
+  * [[graft.functions.div]], which truncates toward zero like DuckDB's
+  * `//`.
   *
   * Scale shape: the kernel is a codegen'd NARROW map — per-pair metrics
   * ride the scan with zero shuffle; corpus BLEU adds one partial-agg'd
   * reduction of 2+2·maxN Longs. A 10⁹-pair eval set costs one pass.
   */
 object EvalMetrics {
-
-  private def floorDivNN(a: Column, b: Column): Column =
-    ((a - pmod(a, b)) / b).cast("long")
-  private def truncDiv(a: Column, b: Column): Column =
-    when(a >= 0, floorDivNN(a, b)).otherwise(-floorDivNN(-a, b))
 
   /** Per-pair ROUGE-N in exact ppm: clipped n-gram matches over the
     * reference gram count (recall — the ROUGE headline number), over the
@@ -39,7 +37,7 @@ object EvalMetrics {
     val tCand = col("__c").getItem(3 + 2 * (n - 1))
     val tRef = greatest(col("__c").getItem(0) - (n - 1), lit(0L))
     def ratioPpm(num: Column, den: Column): Column =
-      when(den > 0, floorDivNN(num * 1000000L, den)).otherwise(0L)
+      when(den > 0, floorDiv(num * 1000000L, den)).otherwise(0L)
     df.select(col(idCol).as("id"), c.as("__c"))
       .select(col("id"),
         col("__c").getItem(0).as("n_ref"),
@@ -78,7 +76,7 @@ object EvalMetrics {
       .agg(count(lit(1)).as("n_pairs"), sums: _*)
     val bp = when(col("cand_len") >= col("ref_len") || col("cand_len") === 0,
         lit(0L))
-      .otherwise(truncDiv((col("cand_len") - col("ref_len")) * 1000L,
+      .otherwise(div((col("cand_len") - col("ref_len")) * 1000L,
         col("cand_len")))
     val logPrecs = (1 to maxN).map(n =>
       when(col(s"m_$n") > 0,
@@ -88,7 +86,7 @@ object EvalMetrics {
     agg.select((col("n_pairs") +: col("ref_len") +: col("cand_len") +:
       (1 to maxN).flatMap(n => Seq(col(s"m_$n"), col(s"t_$n")))) :+
       bp.as("bp_milli") :+
-      (bp + truncDiv(logSum, lit(maxN.toLong))).as("log_bleu_milli"): _*)
+      (bp + div(logSum, lit(maxN.toLong))).as("log_bleu_milli"): _*)
   }
 
   /** BLEU as a double in [0, 1] appended to the [[bleuCorpus]] row —
@@ -168,13 +166,13 @@ object EvalMetrics {
       .join(ideal, Seq("q"), "left")
       .select(col("q").as(queryCol), col("n_rel"),
         coalesce(col("hits"), lit(0L)).as("hits"),
-        floorDivNN(coalesce(col("hits"), lit(0L)) * 1000000L,
+        floorDiv(coalesce(col("hits"), lit(0L)) * 1000000L,
           col("n_rel")).as("recall_ppm"),
-        coalesce(floorDivNN(lit(1000000L), col("first_rel")), lit(0L))
+        coalesce(floorDiv(lit(1000000L), col("first_rel")), lit(0L))
           .as("rr_ppm"),
         coalesce(col("dcg_micro"), lit(0L)).as("dcg_micro"),
         col("idcg_micro"),
-        floorDivNN(coalesce(col("dcg_micro"), lit(0L)) * 1000000L,
+        floorDiv(coalesce(col("dcg_micro"), lit(0L)) * 1000000L,
           col("idcg_micro")).as("ndcg_ppm"))
   }
 }

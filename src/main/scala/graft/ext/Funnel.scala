@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.floorDiv
 
 /** Ordered event-sequence (funnel) analysis — the windowFunnel of
   * ClickHouse / the MATCH_RECOGNIZE subset every product-analytics
@@ -242,9 +243,6 @@ object Funnel {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     import org.apache.spark.sql.expressions.Window
     val R = 1000000L
-    def floorDivNN(a: org.apache.spark.sql.Column,
-                   b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      ((a - pmod(a, b)) / b).cast("long")
     val w = Window.partitionBy(col(userCol))
       .orderBy(col(tsCol), col(tieCol))
     val pairs = graft.ext.OpCaches.register(events
@@ -269,7 +267,7 @@ object Funnel {
       val contrib = m
         .join(pi.select(col("state").as("f"), col("pi")), Seq("f"))
         .select(col("t").as("state"),
-          floorDivNN(col("pi") * col("n"), col("tot")).as("c"))
+          floorDiv(col("pi") * col("n"), col("tot")).as("c"))
         .groupBy(col("state")).agg(sum(col("c")).as("mass"))
       // Zero-mass guard (ADVICE r8): when every unit of π sits in
       // absorbing states (no outgoing transitions — terminal funnel
@@ -283,7 +281,7 @@ object Funnel {
         .select(col("state"), coalesce(col("mass"), lit(0L)).as("mass"))
         .select(col("state"),
           when(massTot === 0L, lit(R))
-            .otherwise(floorDivNN(col("mass") * k * R, massTot)).as("pi"))
+            .otherwise(floorDiv(col("mass") * k * R, massTot)).as("pi"))
       it += 1
     }
     pi.select(col("state").as(typeCol), col("pi").as("pi_ppm"))
@@ -411,8 +409,7 @@ object Funnel {
       .agg(min(us).as("__first"), max(us).as("__last"))
     val span = col("__last") - col("__first")
     val bucketUs = bucketSeconds * 1000000L
-    val lifetime = ((span - pmod(span, lit(bucketUs))) / bucketUs)
-      .cast("long")
+    val lifetime = floorDiv(span, lit(bucketUs))
     val d = perUser.select(lifetime.as("t"))
       .groupBy(col("t")).agg(count(lit(1)).cast("long").as("churned"))
     val suffix = Window.orderBy(col("t").desc)
@@ -557,11 +554,8 @@ object Funnel {
     // the input column's own type (casting NTZ → LTZ would change the
     // written parquet logical type out from under the caller)
     val ts = col(tsCol).cast("timestamp")
-    // exact integer seconds: strip the sub-second remainder BEFORE the
-    // (double) division so the quotient is an exact integer in both
-    // engines (Spark's `/` has no integral form on Columns)
-    val diff = unix_micros(max(ts)) - unix_micros(min(ts))
-    val durS = ((diff - pmod(diff, lit(1000000L))) / 1000000).cast("long")
+    val durS = floorDiv(unix_micros(max(ts)) - unix_micros(min(ts)),
+      lit(1000000L))
     sessions.groupBy((keyCols :+ "session_idx").map(col): _*)
       .agg(count(lit(1)).as("n_events"),
         min(col(tsCol)).as("start_ts"), max(col(tsCol)).as("end_ts"),

@@ -1,7 +1,8 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.floorDiv
 
 /** Link-graph analytics for crawl curation: PageRank-family centrality is
   * the classic page/domain quality prior (Common Crawl ships harmonic
@@ -9,7 +10,8 @@ import org.apache.spark.sql.functions._
   * weights consume it).
   *
   * Ranks are integer ppm (2⁻²⁰-ish grid: 1.0 ≡ 1 000 000) and every step
-  * is exact Long arithmetic — floor-divided shares and damped sums — so
+  * is exact Long arithmetic — shares floor-divided by
+  * [[graft.functions.floorDiv]] and damped sums — so
   * the whole iteration is aggregation-order-independent and replayable in
   * any engine (the kmeansFitQ / fitLinearHashed contract): the gate
   * oracle re-runs ALL iterations in DuckDB and must match bit-for-bit.
@@ -25,23 +27,21 @@ object Graph {
 
   private val R = 1000000L // one unit of rank, in ppm
 
-  /** Exact floor division of two non-negative Long columns: strip the
-    * remainder first so the (double) quotient is an exact integer —
-    * engine-identical, no last-ulp truncation hazard.
-    */
-  private def floorDiv(a: Column, b: Column): Column =
-    ((a - pmod(a, b)) / b).cast("long")
-
   /** `iters` rounds of damped PageRank over `(srcCol, dstCol)` edges.
     * Damping is the exact rational dampNum/dampDen (default 85/100).
     * Returns (node, rank_ppm) for every node that appears as a source or
     * a target; all nodes start at rank 1.0 (= 1e6 ppm).
     *
-    * Depth shape: `edges`/`nodes`/`deg` are computed once, persisted
-    * (OpCaches lifecycle — released by the caller after its terminal
-    * action), and re-read by every iteration instead of re-deriving the
-    * whole prefix each pass; `ranks` lineage is truncated by an eager
-    * `localCheckpoint` every `checkpointEvery` iterations so a realistic
+    * Depth shape: `e`, `nodes` and `deg` are plain frames whose
+    * exchanges the iterations of one query share, so the prefix is
+    * derived once per query, not once per pass. They are deliberately
+    * NOT persisted:
+    * adaptive execution gives every scan of a not-yet-built cache its
+    * own building job, and each iteration scans them, so a persist
+    * would rebuild the same blocks once per reference. Materialize an
+    * expensive `edges` input upstream (an eager `localCheckpoint`).
+    * `ranks` lineage is truncated by an eager `localCheckpoint` every
+    * `checkpointEvery` iterations so a realistic
     * 20-50 iteration run keeps a flat per-iteration plan instead of a
     * superlinearly growing one. Checkpoint results are exact — lineage
     * truncation cannot change integer arithmetic — so the gate oracle's
@@ -55,17 +55,11 @@ object Graph {
       s"damping $dampNum/$dampDen must be a fraction in [0, 1]")
     require(checkpointEvery >= 1,
       s"checkpointEvery must be >= 1, got $checkpointEvery")
-    import org.apache.spark.storage.StorageLevel
-    val e = OpCaches.register(
-      edges.select(col(srcCol).cast("long").as("src"),
-        col(dstCol).cast("long").as("dst"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    val nodes = OpCaches.register(
+    val e = edges.select(col(srcCol).cast("long").as("src"),
+      col(dstCol).cast("long").as("dst"))
+    val nodes =
       e.select(explode(array(col("src"), col("dst"))).as("node")).distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    val deg = OpCaches.register(
-      e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+    val deg = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
     val base = (dampDen - dampNum) * R / dampDen // exact Long floor
     var ranks = nodes.withColumn("rank_ppm", lit(R))
     var it = 0

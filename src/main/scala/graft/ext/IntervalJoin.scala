@@ -1,7 +1,8 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.functions.floorDiv
 
 /** Range/interval joins — `point BETWEEN start AND end` and
   * interval-overlap — as shuffle equi-joins on coarse bins instead of the
@@ -26,18 +27,10 @@ import org.apache.spark.sql.functions._
   * the TYPICAL interval length: explode factor ≈ 2 while a bin holds few
   * enough points to probe. A pathological interval (span ≫ binWidth)
   * degrades gracefully into many bin rows rather than a cross product;
-  * cap it upstream if the domain allows. Bin arithmetic is exact floor
-  * division in long space (values `< 2^53` after the divisibility
-  * subtraction — any epoch time fits).
+  * cap it upstream if the domain allows. Bins come from
+  * [[graft.functions.floorDiv]], exact for every long bound.
   */
 object IntervalJoin {
-
-  /** Exact floor division for longs via pmod (non-negative remainder):
-    * `(c - pmod(c, w)) / w` — the numerator is exactly divisible, so the
-    * double division is integer-exact for |c| < 2^53.
-    */
-  private def floorDiv(c: Column, w: Long): Column =
-    ((c - pmod(c, lit(w))) / lit(w)).cast("long")
 
   /** For each interval row, every point row with
     * `start <= point <= end` (closed on both ends) and equal `keys`.
@@ -55,10 +48,11 @@ object IntervalJoin {
                       pointCol: String, startCol: String, endCol: String,
                       binWidth: Long, keys: Seq[String] = Nil): DataFrame = {
     require(binWidth > 0, s"binWidth must be positive, got $binWidth")
-    val p = points.withColumn("__bin", floorDiv(col(pointCol), binWidth))
+    val p = points.withColumn("__bin",
+      floorDiv(col(pointCol), lit(binWidth)))
     val iv = intervals.withColumn("__bin",
-      explode(sequence(floorDiv(col(startCol), binWidth),
-                       floorDiv(col(endCol), binWidth))))
+      explode(sequence(floorDiv(col(startCol), lit(binWidth)),
+                       floorDiv(col(endCol), lit(binWidth)))))
     iv.join(p, keys :+ "__bin")
       .where(col(pointCol).between(col(startCol), col(endCol)))
       .drop("__bin")
@@ -76,15 +70,15 @@ object IntervalJoin {
                       binWidth: Long, keys: Seq[String] = Nil): DataFrame = {
     require(binWidth > 0, s"binWidth must be positive, got $binWidth")
     val l = left.withColumn("__bin",
-      explode(sequence(floorDiv(col(lStart), binWidth),
-                       floorDiv(col(lEnd), binWidth))))
+      explode(sequence(floorDiv(col(lStart), lit(binWidth)),
+                       floorDiv(col(lEnd), lit(binWidth)))))
     val r = right.withColumn("__bin",
-      explode(sequence(floorDiv(col(rStart), binWidth),
-                       floorDiv(col(rEnd), binWidth))))
+      explode(sequence(floorDiv(col(rStart), lit(binWidth)),
+                       floorDiv(col(rEnd), lit(binWidth)))))
     l.join(r, keys :+ "__bin")
       .where(col(lStart) <= col(rEnd) && col(rStart) <= col(lEnd) &&
-        col("__bin") === greatest(floorDiv(col(lStart), binWidth),
-                                  floorDiv(col(rStart), binWidth)))
+        col("__bin") === greatest(floorDiv(col(lStart), lit(binWidth)),
+                                  floorDiv(col(rStart), lit(binWidth))))
       .drop("__bin")
   }
 

@@ -1,8 +1,9 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.{div, floorDiv}
 
 /** Label & preference aggregation — the annotation-side operators of an
   * LLM training-data pipeline (RLHF preference data, quality labels,
@@ -15,11 +16,14 @@ import org.apache.spark.sql.functions._
   * (1952) strengths with Hunter's (2004) MM iteration — the standard
   * model behind chat-arena ratings and reward-model data curation.
   *
-  * All scores are integer ppm (1.0 ≡ 1 000 000) computed with
-  * truncating Long division, so every result is aggregation-order
-  * independent and bit-replayable in any engine (the Graph.pageRank
-  * contract — the gate oracles re-run ALL iterations in DuckDB, whose
-  * `//` truncates toward zero like Java Long division).
+  * All scores are integer ppm (1.0 ≡ 1 000 000) computed with exact
+  * Long division, so every result is aggregation-order independent and
+  * bit-replayable in any engine (the Graph.pageRank contract — the gate
+  * oracles re-run ALL iterations in DuckDB). A possibly-negative
+  * numerator divides with [[graft.functions.div]], which truncates
+  * toward zero like DuckDB's `//` and Java's Long `/`; floor division
+  * would differ by 1 there. Non-negative ones use
+  * [[graft.functions.floorDiv]], equal to both on that range.
   *
   * Scale shape: everything is groupBy/join on (item|annotator|player)
   * keys. The annotator and player dimensions are tiny (they broadcast);
@@ -30,20 +34,6 @@ import org.apache.spark.sql.functions._
 object Labels {
 
   private val R = 1000000L // one unit, in ppm
-
-  /** Exact floor division for non-negative Longs (pmod strips the
-    * remainder first, so the double quotient is integral — no ulp
-    * hazard). For non-negative inputs floor == trunc == DuckDB `//`.
-    */
-  private def floorDivNN(a: Column, b: Column): Column =
-    ((a - pmod(a, b)) / b).cast("long")
-
-  /** Truncate-toward-zero division for a possibly-negative numerator and
-    * positive divisor — matches DuckDB's `//` and Java's Long `/` exactly
-    * (floor division would differ by 1 on negatives).
-    */
-  private def truncDiv(a: Column, b: Column): Column =
-    when(a >= 0, floorDivNN(a, b)).otherwise(-floorDivNN(-a, b))
 
   /** Plurality consensus per item with deterministic min-label
     * tie-break. Returns (item, label, votes, n_ann). One (item, label)
@@ -84,7 +74,7 @@ object Labels {
         sum(when(col("label") === col("cons"), 1L).otherwise(0L))
           .as("agree"))
       .select(col("annotator"), col("n_items"), col("agree"),
-        floorDivNN(col("agree") * R, col("n_items")).as("acc_ppm"))
+        floorDiv(col("agree") * R, col("n_items")).as("acc_ppm"))
   }
 
   /** Reliability-weighted relabeling — one Dawid-Skene round with
@@ -181,7 +171,7 @@ object Labels {
       // aggregate-once; measured r13: dawid_skene_deep 46 → 37 jobs)
       val conf = cells
         .select(col("annotator"), col("t"), col("label"),
-          floorDivNN(col("n") * R,
+          floorDiv(col("n") * R,
             sum(col("n")).over(Window.partitionBy(
               col("annotator"), col("t")))).as("w"))
       // no broadcast HINT on conf: it is |annotators|·|labels|² — tiny
@@ -253,18 +243,18 @@ object Labels {
     val pe = pa.join(pc, Seq("annotator", "c"))
       .join(base.select(col("annotator"), col("n_items")), Seq("annotator"))
       .select(col("annotator"),
-        floorDivNN(
-          floorDivNN(col("na") * R, col("n_items")) *
-          floorDivNN(col("nc") * R, col("n_items")), lit(R)).as("term"))
+        floorDiv(
+          floorDiv(col("na") * R, col("n_items")) *
+          floorDiv(col("nc") * R, col("n_items")), lit(R)).as("term"))
       .groupBy(col("annotator"))
       .agg(sum(col("term")).as("pe_ppm"))
     base.join(pe, Seq("annotator"))
       .select(col("annotator"), col("n_items"),
-        floorDivNN(col("agree") * R, col("n_items")).as("po_ppm"),
+        floorDiv(col("agree") * R, col("n_items")).as("po_ppm"),
         col("pe_ppm"))
       .withColumn("kappa_ppm",
         when(col("pe_ppm") >= R, lit(R)).otherwise(
-          truncDiv((col("po_ppm") - col("pe_ppm")) * R,
+          div((col("po_ppm") - col("pe_ppm")) * R,
             lit(R) - col("pe_ppm"))))
   }
 
@@ -306,7 +296,7 @@ object Labels {
       .where(col("ni") >= 2)
     val items = OpCaches.register(perItem
       .select(col("item"), col("ni"),
-        floorDivNN(
+        floorDiv(
           (col("ni") * (col("ni") - 1) - col("agreePairs")) * 1000L,
           col("ni") - 1).as("doMilli"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
@@ -317,14 +307,14 @@ object Labels {
     val de = labelTot.agg(sum(col("nc") * col("nc")).as("sq"))
     tot.crossJoin(broadcast(de))
       .select(col("n_items_paired"), col("nn").as("n_annotations"),
-        floorDivNN(col("doSum") * 1000000L, col("nn") * 1000L)
+        floorDiv(col("doSum") * 1000000L, col("nn") * 1000L)
           .as("do_ppm"),
-        floorDivNN((col("nn") * col("nn") - col("sq")) * 1000000L,
+        floorDiv((col("nn") * col("nn") - col("sq")) * 1000000L,
           col("nn") * (col("nn") - 1)).as("de_ppm"))
       .withColumn("alpha_ppm",
         when(col("de_ppm") === 0,
           when(col("do_ppm") === 0, lit(R)).otherwise(lit(null)))
-        .otherwise(truncDiv((col("de_ppm") - col("do_ppm")) * 1000000L,
+        .otherwise(div((col("de_ppm") - col("do_ppm")) * 1000000L,
           col("de_ppm"))))
   }
 
@@ -392,12 +382,12 @@ object Labels {
         .join(ranks.select(col("player").as("j"), col("r").as("rj")),
           Seq("j"))
         .select(col("i"),
-          floorDivNN(col("n") * R * R, col("ri") + col("rj")).as("term"))
+          floorDiv(col("n") * R * R, col("ri") + col("rj")).as("term"))
         .groupBy(col("i")).agg(sum(col("term")).as("dd"))
       val praw = wins.join(d.withColumnRenamed("i", "player"),
           Seq("player"))
         .select(col("player"),
-          floorDivNN(col("wins") * R * R, col("dd")).as("pr"))
+          floorDiv(col("wins") * R * R, col("dd")).as("pr"))
       // normalizer as a GLOBAL window over praw: the frame is
       // |players|-sized by contract (a preference program rates a small
       // model/policy set), so the single-partition window is bounded —
@@ -421,7 +411,7 @@ object Labels {
       // WindowExec computes both aggregates, identical integers
       ranks = OpCaches.registerCheckpoint(praw
         .select(col("player"),
-          floorDivNN(
+          floorDiv(
             col("pr") * count(lit(1)).over(Window.partitionBy()) * R,
             sum(col("pr")).over(Window.partitionBy())).as("r"))
         .localCheckpoint(true))

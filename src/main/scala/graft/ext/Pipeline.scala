@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.{div, floorDiv}
 
 /** Corpus-management operators every large-scale training-data pipeline
   * needs around the dedup/quality core: deterministic dataset splits,
@@ -463,9 +464,8 @@ object Pipeline {
   /** Curriculum staging (Bengio et al. 2009): rank every row by a
     * difficulty/quality score (ties broken by id — total, deterministic)
     * and cut the ranking into `nStages` EXACT quantile stages,
-    * `stage = rank·nStages ÷ n + 1` ∈ [1, nStages] (integer-exact in
-    * both engines: ranks stay far below 2^53, so the double quotient
-    * floors identically to integer division). `curriculum_key` is the
+    * `stage = rank·nStages // n + 1` ∈ [1, nStages] (exact integer
+    * division in both engines). `curriculum_key` is the
     * [[epochShuffle]] portable hash, so training reads stages in order
     * but shuffled WITHIN each stage — sort by (stage, curriculum_key,
     * id). Early stages = lowest scores; pass a negated score column for
@@ -494,7 +494,7 @@ object Pipeline {
     val n = math.max(1L, ranked.count())
     ranked
       .withColumn("stage",
-        (floor(col("__rank") * nStages / n) + 1).cast("int"))
+        (floorDiv(col("__rank") * nStages, lit(n)) + 1).cast("int"))
       .withColumn("curriculum_key",
         portableHash60(concat(col(idCol).cast("string"), lit(s":cur:$salt"))))
       .drop("__rank")
@@ -637,8 +637,8 @@ object Pipeline {
       // remainder to the first (budget mod k) strata by name — so the
       // Σ alloc = budget invariant holds with or without signal.
       .withColumn("__q", when(col("__tw") > 0,
-        floorDivNN0(col("w") * budget, col("__tw")))
-        .otherwise(floorDivNN0(lit(budget), col("__k"))))
+        floorDiv(col("w") * budget, col("__tw")))
+        .otherwise(floorDiv(lit(budget), col("__k"))))
       .withColumn("__r", when(col("__tw") > 0,
         pmod(col("w") * budget, col("__tw"))).otherwise(0L))
       .withColumn("__left",
@@ -650,9 +650,6 @@ object Pipeline {
           .otherwise(0L)).as("alloc"))
       .withColumn("alloc_capped", least(col("alloc"), col("n")))
   }
-
-  private def floorDivNN0(a: Column, b: Column): Column =
-    ((a - pmod(a, b)) / b).cast("long")
 
   /** Downsample to a token budget: rows of each weighted key survive at
     * the integer ppm rate [[allocateBudget]] derived, by the same
@@ -1486,13 +1483,6 @@ object Pipeline {
           greatest(col("n_total"), lit(1L)), 6).as("survival_rate"))
   }
 
-  /** Exact integer floor division of non-negative Long columns (strip the
-    * remainder first so the double quotient is an exact integer —
-    * engine-identical).
-    */
-  private def exactFloorDiv(a: Column, b: Column): Column =
-    ((a - pmod(a, b)) / b).cast("long")
-
   /** Sentence-aware context chunking: split on sentence boundaries
     * (`sentRegex` — RE2/Java-portable, default `[^.!?]+[.!?]*`), then bin
     * whole sentences by cumulative character offset: a sentence starting
@@ -1524,7 +1514,7 @@ object Pipeline {
       .withColumn("__cb",
         sum(length(col("sent")).cast("long")).over(w) -
           length(col("sent")).cast("long"))
-      .withColumn("chunk_idx", exactFloorDiv(col("__cb"), lit(chunkChars.toLong)))
+      .withColumn("chunk_idx", floorDiv(col("__cb"), lit(chunkChars.toLong)))
     withBin.groupBy(col(idCol), col("chunk_idx"))
       .agg(array_join(transform(
           array_sort(collect_list(struct(col("pos"), col("sent")))),
@@ -1548,7 +1538,7 @@ object Pipeline {
     counts
       .withColumn("__total", sum(col("n")).over(all))
       .withColumn("share_ppm",
-        exactFloorDiv(col("n") * 1000000L, col("__total")))
+        floorDiv(col("n") * 1000000L, col("__total")))
       .drop("__total")
       .orderBy(col("n").desc +: keyCols.map(col(_).asc): _*)
       .limit(topN)
@@ -1880,8 +1870,6 @@ object Pipeline {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val offsets = ranked.groupBy(col("bucket"))
       .agg(min(col("__grk")).as("__off"))
-    def floorDiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     ranked.join(broadcast(offsets), Seq("bucket"))
       .select(col(idCol), col("n_tokens"), col("bucket"),
         floorDiv(col("__grk") - col("__off"), lit(batchSize.toLong))
@@ -2002,12 +1990,8 @@ object Pipeline {
   def bootstrapCi(df: DataFrame, idCol: String, metricCol: String,
                   b: Int = 64, salt: String = ""): DataFrame = {
     require(b >= 4, s"need b >= 4 replicates, got $b")
-    def floorDivNN(a: Column, bb: Column): Column =
-      ((a - pmod(a, bb)) / bb).cast("long")
-    // negative metrics are legal (a margin, a log-ratio): truncate
-    // toward zero like DuckDB's `//`, never pmod-floor
-    def truncDiv(a: Column, bb: Column): Column =
-      when(a >= 0, floorDivNN(a, bb)).otherwise(-floorDivNN(-a, bb))
+    // negative metrics are legal (a margin, a log-ratio): `div` truncates
+    // toward zero like DuckDB's `//`, never floors
     // Poisson(1) CDF · 1e6, floored — the fixed grid both engines share
     val cdf = Seq(367879L, 735759L, 919699L, 981012L, 996340L, 999406L,
       999917L, 999990L)
@@ -2029,7 +2013,7 @@ object Pipeline {
       .agg(sum(col("wv")).as("swv"), sum(col("w")).as("sw"))
       .where(col("sw") > 0) // an all-zero replicate (P ~ e^-n) drops
       .select(col("rep"),
-        truncDiv(col("swv") * 1000000L, col("sw")).as("m"))
+        div(col("swv") * 1000000L, col("sw")).as("m"))
     // rank statistics over the B-row replicate frame (bounded by
     // contract — the global window is over n_replicates rows, never n)
     val ranked = means.withColumn("rk",
@@ -2046,7 +2030,7 @@ object Pipeline {
     val point = df.agg(count(lit(1)).as("n_items"),
       sum(col(metricCol).cast("long")).as("sv"))
       .select(col("n_items"),
-        truncDiv(col("sv") * 1000000L, col("n_items")).as("point_micro"))
+        div(col("sv") * 1000000L, col("n_items")).as("point_micro"))
     point.crossJoin(broadcast(bounds))
       .select(col("n_items"), col("point_micro"), col("ci_lo_micro"),
         col("ci_hi_micro"), col("n_replicates"))
@@ -2067,10 +2051,6 @@ object Pipeline {
                          metricCol: String, b: Int = 64,
                          salt: String = ""): DataFrame = {
     require(b >= 4, s"need b >= 4 replicates, got $b")
-    def floorDivNN(a: Column, bb: Column): Column =
-      ((a - pmod(a, bb)) / bb).cast("long")
-    def truncDiv(a: Column, bb: Column): Column =
-      when(a >= 0, floorDivNN(a, bb)).otherwise(-floorDivNN(-a, bb))
     val cdf = Seq(367879L, 735759L, 919699L, 981012L, 996340L, 999406L,
       999917L, 999990L)
     // same pre-explode fan-out as the global face
@@ -2090,7 +2070,7 @@ object Pipeline {
       .agg(sum(col("wv")).as("swv"), sum(col("w")).as("sw"))
       .where(col("sw") > 0)
       .select(col("g"), col("rep"),
-        truncDiv(col("swv") * 1000000L, col("sw")).as("m"))
+        div(col("swv") * 1000000L, col("sw")).as("m"))
     val ranked = means.withColumn("rk",
       row_number().over(org.apache.spark.sql.expressions.Window
         .partitionBy(col("g")).orderBy(col("m"), col("rep"))))
@@ -2104,7 +2084,7 @@ object Pipeline {
       .agg(count(lit(1)).as("n_items"),
         sum(col(metricCol).cast("long")).as("sv"))
       .select(col("g"), col("n_items"),
-        truncDiv(col("sv") * 1000000L, col("n_items")).as("point_micro"))
+        div(col("sv") * 1000000L, col("n_items")).as("point_micro"))
     point.join(bounds, Seq("g"))
       .select(col("g").as(groupCol), col("n_items"), col("point_micro"),
         col("ci_lo_micro"), col("ci_hi_micro"), col("n_replicates"))
@@ -2128,10 +2108,6 @@ object Pipeline {
     */
   def kendallTau(df: DataFrame, idCol: String, xCol: String,
                  yCol: String): DataFrame = {
-    def floorDivNN(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
-    def truncDiv(a: Column, b: Column): Column =
-      when(a >= 0, floorDivNN(a, b)).otherwise(-floorDivNN(-a, b))
     val base = OpCaches.register(df.select(col(idCol).as("id"),
         col(xCol).cast("long").as("x"), col(yCol).cast("long").as("y"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
@@ -2149,7 +2125,7 @@ object Pipeline {
       .crossJoin(broadcast(base.agg(count(lit(1)).as("n"))))
       .select(col("n"), col("n_pairs"), col("concordant"),
         col("discordant"),
-        truncDiv((col("concordant") - col("discordant")) * 1000000L,
+        div((col("concordant") - col("discordant")) * 1000000L,
           col("n_pairs")).as("tau_ppm"))
   }
 
@@ -2173,8 +2149,6 @@ object Pipeline {
                      loQ: Double = 0.05, hiQ: Double = 0.95): DataFrame = {
     require(loQ >= 0 && hiQ <= 1 && loQ < hiQ,
       s"need 0 <= loQ < hiQ <= 1, got [$loQ, $hiQ]")
-    def floorDivNN(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     val bounds = df.groupBy(col(groupCol).as("g"))
       .agg(percentile(col(valueCol), lit(loQ)).as("lo"),
            percentile(col(valueCol), lit(hiQ)).as("hi"))
@@ -2187,7 +2161,7 @@ object Pipeline {
       .agg(count(lit(1)).as("n"), sum(col("cm")).as("scm"))
       .select(col("g").as(groupCol), col("n"),
         round(col("lo"), 6).as("lo"), round(col("hi"), 6).as("hi"),
-        floorDivNN(col("scm") * 1000L, col("n")).as("wins_mean_micro"))
+        floorDiv(col("scm") * 1000L, col("n")).as("wins_mean_micro"))
   }
 
   /** Pearson chi-square homogeneity test over a two-way categorical
@@ -2210,8 +2184,6 @@ object Pipeline {
     */
   def chiSquareHomogeneity(df: DataFrame, rowCol: String,
                            colCol: String): DataFrame = {
-    def floorDivNN(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     val cells = OpCaches.register(df
       .groupBy(col(rowCol).as("r"), col(colCol).as("c"))
       .agg(count(lit(1)).as("o"))
@@ -2229,7 +2201,7 @@ object Pipeline {
       .withColumn("o", coalesce(col("o"), lit(0L)))
       .crossJoin(broadcast(tot))
       .select(col("n"), col("n_rows"), col("n_cols"),
-        floorDivNN(
+        floorDiv(
           (col("o") * col("n") - col("rt") * col("ct")) *
           (col("o") * col("n") - col("rt") * col("ct")) * 1000L,
           col("n") * col("rt") * col("ct")).as("term"))

@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.floorDiv
 
 /** Approximate/exact nearest-neighbor search over an embedding column
   * (BASELINE.json north-star). Two tiers:
@@ -1612,8 +1613,6 @@ object Similarity {
                   cellCol: String = "cell"): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val spark = assign.sparkSession
-    def floorDiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     val counts = assign.groupBy(col(cellCol).cast("int").as("cell"))
       .agg(count(lit(1)).as("n"))
     // total as a broadcast one-row frame (a global window over the

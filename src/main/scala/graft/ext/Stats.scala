@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import graft.functions.{div, floorDiv}
 
 /** Two-sample distribution-comparison statistics — the hypothesis-test
   * companions to the drift report family ([[Pipeline.driftPsi]] buckets,
@@ -20,8 +21,10 @@ import org.apache.spark.sql.functions._
   *   bounded by ln 2, defined even where one side has zero mass (unlike
   *   raw KL, which PSI's smoothing papers over).
   *
-  * Everything reports in exact integer units (ppm / milli-nats, trunc
-  * division — DuckDB `//` semantics) over exact Long counts, so results
+  * Everything reports in exact integer units (ppm / milli-nats,
+  * [[graft.functions.div]] truncating division — DuckDB `//` semantics,
+  * [[graft.functions.floorDiv]] for non-negative ratios) over exact Long
+  * counts, so results
   * are aggregation-order-independent and engine-portable; the only
   * doubles are single IEEE divisions and `round(ln·1000)` milli-nat
   * quantizations (the [[TextAnalysis.zipfSlope]] precedent).
@@ -37,11 +40,6 @@ import org.apache.spark.sql.functions._
   * category-sized arithmetic after.
   */
 object Stats {
-
-  private def floorDivNN(a: Column, b: Column): Column =
-    ((a - pmod(a, b)) / b).cast("long")
-  private def truncDiv(a: Column, b: Column): Column =
-    when(a >= 0, floorDivNN(a, b)).otherwise(-floorDivNN(-a, b))
 
   /** Distinct-value cumulative side counts: for each distinct `v` (a
     * Long — quantize doubles upstream), the per-side counts at v and the
@@ -127,7 +125,7 @@ object Stats {
       .groupBy(col("n_a"), col("n_b"))
       .agg(max(struct(col("gap"), (-col("v")).as("nv"))).as("m"))
       .select(col("n_a"), col("n_b"),
-        floorDivNN(col("m.gap") * 1000000L, col("n_a") * col("n_b"))
+        floorDiv(col("m.gap") * 1000000L, col("n_a") * col("n_b"))
           .as("d_ppm"),
         (-col("m.nv")).as("at_v"))
   }
@@ -162,7 +160,7 @@ object Stats {
         (col("r_a_x2") - col("n_a") * (col("n_a") + 1L)).as("u_a_x2"))
       .select(col("n_a"), col("n_b"), col("u_a_x2"),
         (col("n_a") * col("n_b") * 2L - col("u_a_x2")).as("u_b_x2"),
-        floorDivNN(col("u_a_x2") * 1000000L,
+        floorDiv(col("u_a_x2") * 1000000L,
           col("n_a") * col("n_b") * 2L).as("cles_ppm"))
   }
 
@@ -216,7 +214,7 @@ object Stats {
       .groupBy(col("g"), col("n_a"), col("n_b"))
       .agg(max(struct(col("gap"), (-col("v")).as("nv"))).as("m"))
       .select(col("g"), col("n_a"), col("n_b"),
-        floorDivNN(col("m.gap") * 1000000L, col("n_a") * col("n_b"))
+        floorDiv(col("m.gap") * 1000000L, col("n_a") * col("n_b"))
           .as("d_ppm"),
         (-col("m.nv")).as("at_v"))
   }
@@ -309,7 +307,7 @@ object Stats {
         col(groupCol).as("__g") :+ vMilli.as("__vm"): _*)
       .join(broadcast(med.withColumnRenamed("g", "__g")), Seq("__g"))
       .join(broadcast(mad.withColumnRenamed("g", "__g")), Seq("__g"))
-      .withColumn("z_milli", truncDiv(
+      .withColumn("z_milli", div(
         (col("__vm") - col("med_milli")) * 1000L,
         greatest(col("mad_milli"), lit(1L))))
       .withColumn("mad_zero", col("mad_milli") === 0L)
@@ -412,10 +410,10 @@ object Stats {
       .groupBy(col("n_p"), col("n_q"), col("n_cats"))
       .agg(sum(col("tp")).as("sp"), sum(col("tq")).as("sq"))
       .select(col("n_p"), col("n_q"), col("n_cats"),
-        truncDiv(col("sp"), col("n_p")).as("kl_p_milli"),
-        truncDiv(col("sq"), col("n_q")).as("kl_q_milli"),
-        truncDiv(truncDiv(col("sp"), col("n_p")) +
-          truncDiv(col("sq"), col("n_q")), lit(2L)).as("jsd_milli"))
+        div(col("sp"), col("n_p")).as("kl_p_milli"),
+        div(col("sq"), col("n_q")).as("kl_q_milli"),
+        div(div(col("sp"), col("n_p")) +
+          div(col("sq"), col("n_q")), lit(2L)).as("jsd_milli"))
   }
 
   /** STREAMING categorical side-count census for the JSD / mix-drift

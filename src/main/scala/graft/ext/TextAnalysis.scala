@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.{div, floorDiv}
 
 /** Text-analysis operators for LLM-data pipelines: language ID, quality
   * scoring, token counting, document fingerprinting. All pure Column
@@ -958,10 +959,6 @@ object TextAnalysis {
                 topN: Int = 64): DataFrame = {
     require(topN >= 2, s"topN must be >= 2, got $topN")
     import org.apache.spark.sql.expressions.Window
-    def floorDivNN(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
-    def truncDiv(a: Column, b: Column): Column =
-      when(a >= 0, floorDivNN(a, b)).otherwise(-floorDivNN(-a, b))
     val counts = df
       .select(col(langCol).as("lang"),
         explode(split(col(textCol), " ")).as("w"))
@@ -981,7 +978,7 @@ object TextAnalysis {
         sum(col("x") * col("x")).as("sxx"))
       .where(col("n") >= 2)
       .select(col("lang"), col("n").as("n_terms"),
-        truncDiv((col("n") * col("sxy") - col("sx") * col("sy")) * 1000000L,
+        div((col("n") * col("sxy") - col("sx") * col("sy")) * 1000000L,
           col("n") * col("sxx") - col("sx") * col("sx")).as("slope_ppm"))
   }
 
@@ -999,8 +996,6 @@ object TextAnalysis {
   def giniConcentration(df: DataFrame, textCol: String,
                         langCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    def floorDivNN(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     val counts = df
       .select(col(langCol).as("lang"),
         explode(split(col(textCol), " ")).as("w"))
@@ -1014,7 +1009,7 @@ object TextAnalysis {
       .agg(count(lit(1)).as("n_types"), sum(col("c")).as("n_tokens"),
         sum(col("rk") * col("c")).as("rc"))
       .select(col("lang"), col("n_types"), col("n_tokens"),
-        floorDivNN(
+        floorDiv(
           (lit(2L) * col("rc") - (col("n_types") + 1) * col("n_tokens")) *
             1000000L,
           col("n_types") * col("n_tokens")).as("gini_ppm"))
@@ -1038,8 +1033,6 @@ object TextAnalysis {
   def burstiness(df: DataFrame, textCol: String, idCol: String,
                  topN: Int = 32): DataFrame = {
     require(topN >= 1, s"topN must be >= 1, got $topN")
-    def floorDivNN(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     val nDocs = df.count() // bounded meta-collect (one scalar)
     val dtc = OpCaches.register(df
       .select(col(idCol).as("id"),
@@ -1054,7 +1047,7 @@ object TextAnalysis {
       .groupBy(col("w"), col("total"), col("n_docs"))
       .agg(sum(col("c") * col("c")).as("sc2"))
       .select(col("w"), col("n_docs"), col("total"),
-        floorDivNN(
+        floorDiv(
           (lit(nDocs) * col("sc2") - col("total") * col("total")) *
             1000000L,
           lit(nDocs) * col("total")).as("vmr_ppm"))
@@ -1091,8 +1084,6 @@ object TextAnalysis {
   def distinctNgrams(df: DataFrame, textCol: String, groupCol: String,
                      n: Int = 2): DataFrame = {
     require(n >= 1, s"n must be >= 1, got $n")
-    def floorDivNN(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     val toks = split(col("__t"), " ")
     // guard short texts explicitly: Spark's sequence(0, -1) would emit a
     // DESCENDING [0, -1], not an empty list
@@ -1118,7 +1109,7 @@ object TextAnalysis {
       .groupBy(col("g"))
       .agg(sum(col("c")).as("total"), count(lit(1)).as("distinct"))
       .select(col("g").as(groupCol), col("total"), col("distinct"),
-        floorDivNN(col("distinct") * 1000000L, col("total"))
+        floorDiv(col("distinct") * 1000000L, col("total"))
           .as("distinct_ppm"))
   }
 
@@ -1136,14 +1127,12 @@ object TextAnalysis {
     * dense jargon (longs subtract, divisions stay non-negative).
     */
   def readability(textCol: Column): Column = {
-    def floorDivNN(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     val words = regexp_count(textCol, lit("[^ ]+")).cast("long")
     val sentences = greatest(
       regexp_count(textCol, lit("[.!?]+")).cast("long"), lit(1L))
     val syl = regexp_count(textCol, lit("[aeiouyAEIOUY]+")).cast("long")
-    val score = lit(206835L) - floorDivNN(lit(1015L) * words, sentences) -
-      floorDivNN(lit(84600L) * syl, words)
+    val score = lit(206835L) - floorDiv(lit(1015L) * words, sentences) -
+      floorDiv(lit(84600L) * syl, words)
     struct(words.as("words"), sentences.as("sentences"),
       syl.as("syllables"),
       when(words > 0, score).as("flesch_milli"))
@@ -1186,7 +1175,7 @@ object TextAnalysis {
           rows.foreach { case (_, sp, y) => n += 1; pos += y; ssp += sp }
           state.update((n, pos, ssp))
           val conf = ssp / n // JVM Long division truncates toward zero —
-                             // exactly the batch face's truncDiv
+                             // exactly the batch face's div
           val acc = (pos * 1000000L) / n
           Iterator.single((bin, n, pos, conf, acc, Math.abs(conf - acc)))
       }
@@ -1220,10 +1209,6 @@ object TextAnalysis {
                         hi: Double = 1.0): DataFrame = {
     require(bins >= 1, s"bins must be >= 1, got $bins")
     require(hi > lo, s"need hi > lo, got [$lo, $hi)")
-    def floorDivNN(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
-    def truncDiv(a: Column, b: Column): Column =
-      when(a >= 0, floorDivNN(a, b)).otherwise(-floorDivNN(-a, b))
     val binCol = least(greatest(
       floor((col(scoreCol) - lo) * bins / (hi - lo)), lit(0.0)),
       lit((bins - 1).toDouble)).cast("long")
@@ -1234,15 +1219,15 @@ object TextAnalysis {
       .agg(count(lit(1)).as("n"), sum(col("y")).as("n_pos"),
         sum(col("sp")).as("ssp"))
       .select(col("bin"), col("n"), col("n_pos"),
-        truncDiv(col("ssp"), col("n")).as("conf_ppm"),
-        floorDivNN(col("n_pos") * 1000000L, col("n")).as("acc_ppm"))
+        div(col("ssp"), col("n")).as("conf_ppm"),
+        floorDiv(col("n_pos") * 1000000L, col("n")).as("acc_ppm"))
       .withColumn("gap_ppm", abs(col("conf_ppm") - col("acc_ppm")))
     val tot = g.agg(sum(col("n")).as("nn"),
       sum(col("n") * col("gap_ppm")).as("wg"))
     g.crossJoin(broadcast(tot))
       .select(col("bin"), col("n"), col("n_pos"), col("conf_ppm"),
         col("acc_ppm"), col("gap_ppm"),
-        floorDivNN(col("wg"), col("nn")).as("ece_ppm"))
+        floorDiv(col("wg"), col("nn")).as("ece_ppm"))
   }
 
   /** Script classes for [[scriptProfile]], in the FIXED priority order
@@ -1843,8 +1828,6 @@ object TextAnalysis {
     */
   def fertilityByGroup(docs: DataFrame, textCol: String,
                        byCol: String): DataFrame = {
-    def floorDiv(a: Column, b: Column): Column =
-      ((a - pmod(a, b)) / b).cast("long")
     docs.groupBy(col(byCol))
       .agg(count(lit(1)).cast("long").as("n_docs"),
         sum(length(col(textCol))).cast("long").as("n_chars"),
@@ -2097,8 +2080,7 @@ object TextAnalysis {
     val u = lists.map(_.select(col("query_id"), col("doc_id"),
       col("rank").cast("long").as("rank"))).reduce(_ unionAll _)
     val denom = col("rank") + c
-    val contrib = ((lit(scale) - pmod(lit(scale), denom)) / denom)
-      .cast("long")
+    val contrib = floorDiv(lit(scale), denom)
     u.withColumn("__c", contrib)
       .groupBy(col("query_id"), col("doc_id"))
       .agg(sum(col("__c")).as("rrf"))

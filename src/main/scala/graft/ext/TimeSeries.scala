@@ -3,6 +3,7 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.floorDiv
 
 /** Time-series operators over event streams: regular resampling with gap
   * fill, and rolling aggregates over the regularized series — the shape
@@ -492,9 +493,7 @@ object TimeSeries {
     require(period > 1, s"period must be > 1, got $period")
     // orderCol is in seconds when it's a resample grid's bucket_start —
     // divide back to bucket index first (exact integer floor division)
-    val o = col(orderCol).cast("long")
-    val idx = ((o - pmod(o, lit(bucketSeconds))) / bucketSeconds)
-      .cast("long")
+    val idx = floorDiv(col(orderCol).cast("long"), lit(bucketSeconds))
     val withPhase = series.withColumn("phase",
       pmod(idx, lit(period.toLong)))
     val prof = withPhase.groupBy(col(keyCol), col("phase"))

@@ -4,6 +4,7 @@ import graft.ext.{Dedup, Funnel, IntervalJoin, Layout, Multimodal, Pipeline, Sim
 import graft.compile.ParquetEnv
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.floorDiv
 import ExtShared._
 
 /** Event/time family: funnels, sessionization, retention, Markov
@@ -286,8 +287,8 @@ private[queries] object ExtEventQueries {
       // of [shipdate, shipdate + linenumber d] activity windows, rolled
       // up per key (count / total / longest, in days)
       val li = ParquetEnv.read(s, s"$d/lineitem.parquet")
-      val day = col("l_shipdate").cast("timestamp").cast("long")
-      val sd = ((day - pmod(day, lit(86400L))) / 86400L).cast("long")
+      val sd = floorDiv(col("l_shipdate").cast("timestamp").cast("long"),
+        lit(86400L))
       val iv = li.select(col("l_suppkey"), sd.as("s"),
         (sd + col("l_linenumber")).as("e"))
       IntervalJoin.coverageGaps(iv, Seq("l_suppkey"), "s", "e")

@@ -3,6 +3,7 @@ package graft.queries
 import graft.ext.{Dedup, Funnel, IntervalJoin, Layout, Multimodal, Pipeline, Similarity, Sketches, TextAnalysis, TimeSeries}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.floorDiv
 import ExtShared._
 
 /** Text-analysis family: quality battery, language-ID, tokenizers
@@ -710,8 +711,7 @@ private[queries] object ExtTextQueries {
       : org.apache.spark.sql.DataFrame = {
     val toks = filter(split(col("text"), " "), w => w =!= "")
     val n = size(toks).cast("long")
-    val k = greatest(((n * 4L - pmod(n * 4L, lit(5L))) / 5L).cast("long"),
-      least(n, lit(1L)))
+    val k = greatest(floorDiv(n * 4L, lit(5L)), least(n, lit(1L)))
     val cand = array_join(
       transform(slice(toks, lit(1), k.cast("int")),
         (w, i) => when(pmod(i, lit(7)) === 0, lit("the")).otherwise(w)),
