@@ -2,7 +2,6 @@ package graft.ast
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 import graft.ext.{Dedup, OpCaches, Similarity, Stats, TextAnalysis}
 
 /** Named [[TransformOp]] wrappers for the pipeline-shaped graft.ext
@@ -158,8 +157,7 @@ object pipeline {
         // barrier: the pair kernel and the survivor anti-join both read
         // the input — persist so the upstream pipeline executes once
         // (minhashPairs' internal persist covers only its shingle frame)
-        val cached = OpCaches.register(
-          df.persist(StorageLevel.MEMORY_AND_DISK))
+        val cached = OpCaches.persist(df)
         Dedup.survivors(cached,
           Dedup.minhashPairs(cached, textCol, idCol,
             threshold = threshold),
@@ -198,8 +196,7 @@ object pipeline {
         // of the pair verify + the survivor anti-join) — without the
         // persist the whole upstream pipeline lineage re-executes per
         // reference (and the fit's sample/count add two more)
-        val cached = OpCaches.register(
-          df.persist(StorageLevel.MEMORY_AND_DISK))
+        val cached = OpCaches.persist(df)
         Dedup.survivors(cached,
           Dedup.semanticPairs(cached,
             Similarity.fitIvfAuto(cached, targetCellSize, vecCol,
@@ -235,8 +232,7 @@ object pipeline {
             s" the input already carries ${clash.mkString(", ")} —" +
             " rename the upstream column(s) before packing")
         // barrier: df feeds the two-pass prefix-sum AND the join back
-        val cached = OpCaches.register(
-          df.persist(StorageLevel.MEMORY_AND_DISK))
+        val cached = OpCaches.persist(df)
         val packed = graft.ext.Pipeline.packSequences(cached, idCol,
             coalesce(TextAnalysis.tokenCount(col(textCol)), lit(0L)),
             budget)
@@ -275,8 +271,7 @@ object pipeline {
             " foreachBatch in streaming topologies")
         // barrier: df feeds both the probe side of the knn join and
         // the enrichment join back onto itself
-        val cached = OpCaches.register(
-          df.persist(StorageLevel.MEMORY_AND_DISK))
+        val cached = OpCaches.persist(df)
         val model = Similarity.fitIvfAuto(corpus, targetCellSize, vecCol)
         // excludeSelf treats equal id VALUES as the same entity — right
         // when the corpus IS the flowing table (self-enrichment), a

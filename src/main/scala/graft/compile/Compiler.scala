@@ -42,12 +42,6 @@ trait Env {
   * only cached metadata: no schema-inference job, no footer read.
   */
 final class ParquetEnv(val spark: SparkSession, dir: String) extends Env {
-  // Some fixtures carry INT64 TIMESTAMP(NANOS) columns, which Spark's parquet
-  // reader rejects (no nanosecond TimestampType). Read them as longs and
-  // convert to microsecond timestamps; nano columns are detected from the
-  // parquet footer so the convention is data-driven, not name-driven.
-  spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-
   private def path(topic: String): String = s"$dir/$topic.parquet"
 
   def load(topic: String): DataFrame = ParquetEnv.read(spark, path(topic))
@@ -98,14 +92,21 @@ object ParquetEnv {
 
   /** `spark.read.parquet(path)` with nano-timestamp columns converted to
     * microsecond timestamps, through the metadata cache.
+    *
+    * Spark's parquet reader has no nanosecond TimestampType: it rejects an
+    * INT64 TIMESTAMP(NANOS) column unless the session sets
+    * `spark.sql.legacy.parquet.nanosAsLong=true` (as `graft.Sessions.local`
+    * does), which reads it as a long. Such columns are found from the
+    * parquet footer, so the conversion is data-driven, not name-driven.
     */
   def read(spark: SparkSession, path: String): DataFrame =
     resolve(spark, path) match {
       case None => spark.read.parquet(path)
       case Some((e, inferred)) =>
         val df = inferred.getOrElse(spark.read.schema(e.schema).parquet(path))
-        e.nanoCols.foldLeft(df)((d, c) =>
-          d.withColumn(c, expr(s"timestamp_micros(`$c` div 1000)")))
+        // floored, so a pre-1970 instant rounds down as `Instant` does
+        e.nanoCols.foldLeft(df)((d, c) => d.withColumn(c,
+          timestamp_micros(graft.functions.floorDiv(col(s"`$c`"), lit(1000L)))))
     }
 
   private[compile] def footerRows(spark: SparkSession, path: String): Option[Long] =

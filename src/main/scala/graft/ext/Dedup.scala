@@ -71,9 +71,8 @@ object Dedup {
     // (WordShingleHashes) so verification can run the fused sorted-merge
     // Jaccard. Materialized once: reused by the signature build and both
     // verify joins (Spark recomputes lineage per use otherwise).
-    val shDf = OpCaches.register(docs.select(col(idCol).as("id"),
-      graft.functions.VectorFunctions.word_shingle_hashes(col(textCol), k).as("sh"))
-      .persist(StorageLevel.MEMORY_AND_DISK))
+    val shDf = OpCaches.persist(docs.select(col(idCol).as("id"),
+      graft.functions.VectorFunctions.word_shingle_hashes(col(textCol), k).as("sh")))
     // Whole signature in one native pass (MinHashLanes): no explode, no
     // aggregation buffers, no exchange — each doc's 32 lanes are computed
     // where its shingle set already sits. (Round 2 exploded the set and ran
@@ -207,9 +206,9 @@ object Dedup {
                    cap: Int = maxBucketFanout): DataFrame = {
     val chunks = maxBits + 1
     val width = 60 / chunks
-    val sig = OpCaches.register(
-      docs.select(col(idCol).as("id"), simhash(col(textCol)).as("sig"))
-        .persist(StorageLevel.MEMORY_AND_DISK)) // reused: banding + 2 verify joins
+    // reused: banding + 2 verify joins
+    val sig = OpCaches.persist(
+      docs.select(col(idCol).as("id"), simhash(col(textCol)).as("sig")))
     val banded = sig.select(col("id"), col("sig"),
       posexplode(array((0 until chunks).map { c =>
         shiftright(col("sig"), c * width).bitwiseAND(lit((1L << width) - 1))
@@ -445,9 +444,9 @@ object Dedup {
     // shingle sets as sorted distinct 64-bit hashes throughout (see
     // minhashPairs): the persisted working set, the posting explode, and
     // the verify joins all carry longs, never shingle strings
-    val sh = OpCaches.register(docs.select(col(idCol).as("id"),
-      graft.functions.VectorFunctions.word_shingle_hashes(col(textCol), k).as("sh"))
-      .persist(StorageLevel.MEMORY_AND_DISK)) // reused: posting + 2 verify joins
+    // reused: posting + 2 verify joins
+    val sh = OpCaches.persist(docs.select(col(idCol).as("id"),
+      graft.functions.VectorFunctions.word_shingle_hashes(col(textCol), k).as("sh")))
     // Tight prefix bound in EXACT integer arithmetic (the containmentPairs
     // form, ADVICE r9): ⌊n·(1−t)⌋+1 ≡ n − ⌈t·n⌉ + 1 in exact math, but the
     // floating form floor(n·(1−t))+1 loses one prefix slot whenever n·(1−t)
@@ -500,10 +499,9 @@ object Dedup {
     require(threshold > 0 && threshold <= 1,
       s"threshold must be in (0, 1], got $threshold")
     val tPpm = math.round(threshold * 1000000)
-    val sh = OpCaches.register(docs.select(col(idCol).as("id"),
+    val sh = OpCaches.persist(docs.select(col(idCol).as("id"),
       graft.functions.VectorFunctions.word_shingle_hashes(col(textCol), k)
-        .as("sh"))
-      .persist(StorageLevel.MEMORY_AND_DISK))
+        .as("sh")))
     // Tight prefix bound in EXACT integer arithmetic (ADVICE r8): a pair
     // at containment ≥ t must share one of A's first n − ⌈t·n⌉ + 1 sorted
     // shingles. The former floor(n·(1−t))+1 form lost one slot whenever
@@ -800,8 +798,7 @@ object Dedup {
       .select(col(idCol).as("id"), posexplode(spanArr))
       .toDF("id", "pos", "span")
       .withColumn("h", Pipeline.portableHash60(col("span")))
-      .persist(StorageLevel.MEMORY_AND_DISK) // reused: freq count + rebuild
-      .transform(OpCaches.register)
+      .transform(OpCaches.persist) // reused: freq count + rebuild
     val frequent = spans
       .groupBy(col("h"))
       .agg(count_distinct(col("id")).as("df"))
@@ -1139,9 +1136,8 @@ object Dedup {
                          textCol: String = "text", idCol: String = "doc_id",
                          k: Int = 3, bands: Int = 16, rowsPerBand: Int = 2,
                          threshold: Double = 0.7): DataFrame = {
-    val idx = OpCaches.register(
-      minhashIndex(corpus, textCol, idCol, k, bands * rowsPerBand)
-        .persist(StorageLevel.MEMORY_AND_DISK))
+    val idx = OpCaches.persist(
+      minhashIndex(corpus, textCol, idCol, k, bands * rowsPerBand))
     incrementalMinhashIndexed(incoming, idx, textCol, idCol, k,
       bands, rowsPerBand, threshold)
   }
@@ -1197,9 +1193,8 @@ object Dedup {
                                 k: Int = 3, bands: Int = 16,
                                 rowsPerBand: Int = 2,
                                 threshold: Double = 0.7): DataFrame = {
-    val shIn = OpCaches.register(
-      minhashIndex(incoming, textCol, idCol, k, bands * rowsPerBand)
-        .persist(StorageLevel.MEMORY_AND_DISK))
+    val shIn = OpCaches.persist(
+      minhashIndex(incoming, textCol, idCol, k, bands * rowsPerBand))
     val cand = bandKeysFromSig(shIn, bands, rowsPerBand).toDF("id_a", "band_key")
       .join(bandKeysFromSig(index, bands, rowsPerBand).toDF("id_b", "band_key"),
             Seq("band_key"))
@@ -1489,11 +1484,10 @@ object Dedup {
     // (an RDD job, outside codegen) runs once, not once per side. The
     // RDD-backed frame defeats Catalyst column pruning, so unused key
     // columns are dropped HERE, before materialization.
-    val ranked = OpCaches.register(spark.createDataFrame(
+    val ranked = OpCaches.persist(spark.createDataFrame(
       sorted.rdd.zipWithIndex.map { case (r, i) =>
         val base = if (includeKeys) r.toSeq else r.toSeq.take(1)
-        org.apache.spark.sql.Row.fromSeq(base :+ i) }, schema)
-      .persist(StorageLevel.MEMORY_AND_DISK))
+        org.apache.spark.sql.Row.fromSeq(base :+ i) }, schema))
     val probeCols =
       col(idCol).as("id_a") +:
         (if (includeKeys) Seq(col(sortKeyCol).as("key_a")) else Nil) :+
@@ -1670,8 +1664,7 @@ object Dedup {
           .where(col("score") >= threshold)
       case _ => ()
     }
-    val sidePruned = OpCaches.register(
-      side.persist(StorageLevel.MEMORY_AND_DISK))
+    val sidePruned = OpCaches.persist(side)
     val candByPass = passes.map {
       case KeyBlocking(cs) =>
         // null blocking keys match nothing; without the filter Spark's

@@ -132,11 +132,10 @@ object EvalMetrics {
                        relCol: String, k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     import org.apache.spark.sql.expressions.Window
-    val lb = OpCaches.register(labels
+    val lb = OpCaches.persist(labels
       .select(col(queryCol).as("q"), col(docCol).as("doc"),
         col(relCol).cast("long").as("rel"))
-      .where(col("rel") > 0)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      .where(col("rel") > 0))
     val dcgTerm = (rel: Column, pos: Column) =>
       round(rel.cast("double") * 1000000L / log2(pos.cast("double") + 1))
         .cast("long")

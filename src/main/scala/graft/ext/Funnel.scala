@@ -203,13 +203,12 @@ object Funnel {
     // the counts table is state-cardinality-sized and has two consumers
     // (from-totals and the final join) — persist so the event-volume
     // window scan runs once (OpCaches lifecycle)
-    val pairs = graft.ext.OpCaches.register(events
+    val pairs = graft.ext.OpCaches.persist(events
       .select(col(typeCol).as("from_type"),
         lead(col(typeCol), 1).over(w).as("to_type"))
       .where(col("to_type").isNotNull)
       .groupBy(col("from_type"), col("to_type"))
-      .agg(count(lit(1)).cast("long").as("n"))
-      .persist())
+      .agg(count(lit(1)).cast("long").as("n")))
     val totals = pairs.groupBy(col("from_type"))
       .agg(sum(col("n")).cast("long").as("__tot"))
     pairs.join(totals, Seq("from_type"))
@@ -245,21 +244,19 @@ object Funnel {
     val R = 1000000L
     val w = Window.partitionBy(col(userCol))
       .orderBy(col(tsCol), col(tieCol))
-    val pairs = graft.ext.OpCaches.register(events
+    val pairs = graft.ext.OpCaches.persist(events
       .select(col(typeCol).as("f"),
         lead(col(typeCol), 1).over(w).as("t"))
       .where(col("t").isNotNull)
       .groupBy(col("f"), col("t"))
-      .agg(count(lit(1)).cast("long").as("n"))
-      .persist())
+      .agg(count(lit(1)).cast("long").as("n")))
     val totals = pairs.groupBy(col("f"))
       .agg(sum(col("n")).as("tot"))
-    val m = graft.ext.OpCaches.register(
-      pairs.join(totals, Seq("f")).persist())
-    val states = graft.ext.OpCaches.register(
+    val m = graft.ext.OpCaches.persist(
+      pairs.join(totals, Seq("f")))
+    val states = graft.ext.OpCaches.persist(
       pairs.select(col("f").as("state"))
-        .union(pairs.select(col("t").as("state"))).distinct()
-        .persist())
+        .union(pairs.select(col("t").as("state"))).distinct())
     val k = states.count() // state alphabet — tiny by construction
     var pi = states.withColumn("pi", lit(R))
     var it = 0
@@ -310,11 +307,10 @@ object Funnel {
     // sub-second precision; whole-second truncation would diverge from
     // the oracle's epoch_us)
     val sec = unix_micros(col(tsCol).cast("timestamp"))
-    val exposed = graft.ext.OpCaches.register(events
+    val exposed = graft.ext.OpCaches.persist(events
       .where(col(typeCol) === fromType)
       .groupBy(col(userCol).as("user"))
-      .agg(min(sec).as("t0"))
-      .persist())
+      .agg(min(sec).as("t0")))
     val converted = events
       .where(col(typeCol) === toType)
       .select(col(userCol).as("user"), sec.as("t1"))

@@ -80,7 +80,7 @@ object Graph {
       if (it % checkpointEvery == 0 && it < iters)
         // registered so releaseAll reclaims the block (CacheManager
         // never tracks localCheckpoint persists)
-        ranks = OpCaches.registerCheckpoint(ranks.localCheckpoint(true))
+        ranks = OpCaches.checkpoint(ranks)
     }
     ranks
   }

@@ -149,11 +149,10 @@ object Labels {
                  annotatorCol: String = "annotator",
                  labelCol: String = "label"): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    val a = OpCaches.register(ann.select(col(itemCol).as("item"),
-        col(annotatorCol).as("annotator"), col(labelCol).as("label"))
-      .persist())
-    val alphabet = OpCaches.register(
-      a.select(col("label").as("t")).distinct().persist())
+    val a = OpCaches.persist(ann.select(col(itemCol).as("item"),
+        col(annotatorCol).as("annotator"), col(labelCol).as("label")))
+    val alphabet = OpCaches.persist(
+      a.select(col("label").as("t")).distinct())
     var assign = majorityVote(a).select(col("item"), col("label"))
     var out: DataFrame = null
     var it = 0
@@ -202,8 +201,8 @@ object Labels {
       // The final round skips the barrier: `out` is returned lazily and
       // a checkpoint would eagerly execute it inside the operator.
       if (it < iters - 1)
-        assign = OpCaches.registerCheckpoint(
-          out.select(col("item"), col("label")).localCheckpoint(true))
+        assign = OpCaches.checkpoint(
+          out.select(col("item"), col("label")))
       it += 1
     }
     out
@@ -294,12 +293,11 @@ object Labels {
       .agg(sum(col("nic")).as("ni"),
         sum(col("nic") * (col("nic") - 1)).as("agreePairs"))
       .where(col("ni") >= 2)
-    val items = OpCaches.register(perItem
+    val items = OpCaches.persist(perItem
       .select(col("item"), col("ni"),
         floorDiv(
           (col("ni") * (col("ni") - 1) - col("agreePairs")) * 1000L,
-          col("ni") - 1).as("doMilli"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          col("ni") - 1).as("doMilli")))
     val labelTot = nic.join(items.select(col("item")), Seq("item"))
       .groupBy(col("label")).agg(sum(col("nic")).as("nc"))
     val tot = items.agg(count(lit(1)).as("n_items_paired"),
@@ -344,33 +342,29 @@ object Labels {
                    loserCol: String = "loser",
                    iters: Int = 3): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    import org.apache.spark.storage.StorageLevel
     val c = comparisons.select(col(winnerCol).cast("long").as("w"),
       col(loserCol).cast("long").as("l"))
-    val directed = OpCaches.register(
-      c.groupBy(col("w"), col("l")).agg(count(lit(1)).as("n"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+    val directed = OpCaches.persist(
+      c.groupBy(col("w"), col("l")).agg(count(lit(1)).as("n")))
     // symmetrize via one explode pass over the directed aggregate (the
     // Dedup.clusters shape — no second scan of the comparison volume)
-    val sym = OpCaches.register(
+    val sym = OpCaches.persist(
       directed.select(explode(array(
           struct(col("w").as("i"), col("l").as("j"), col("n")),
           struct(col("l").as("i"), col("w").as("j"), col("n"))))
           .as("e"))
         .select(col("e.i").as("i"), col("e.j").as("j"), col("e.n").as("n"))
-        .groupBy(col("i"), col("j")).agg(sum(col("n")).as("n"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+        .groupBy(col("i"), col("j")).agg(sum(col("n")).as("n")))
     // the player set rides the sym aggregate (every player appears as an
     // `i`), so wins is ONE join off sym's distinct keys — the separate
     // persisted `players` frame and its materialization job are gone, and
     // the rank seed derives from wins (same key set) for free (r13: part
     // of the 37 → ~30 job cut on this operator)
-    val wins = OpCaches.register(
+    val wins = OpCaches.persist(
       sym.select(col("i").as("player")).distinct()
         .join(directed.groupBy(col("w").as("player"))
           .agg(sum(col("n")).as("wins")), Seq("player"), "left")
-        .select(col("player"), coalesce(col("wins"), lit(0L)).as("wins"))
-        .persist(StorageLevel.MEMORY_AND_DISK))
+        .select(col("player"), coalesce(col("wins"), lit(0L)).as("wins")))
     val nComps = sym.groupBy(col("i").as("player"))
       .agg(sum(col("n")).as("n_comps"))
     var ranks = wins.select(col("player"), lit(R).as("r"))
@@ -401,7 +395,7 @@ object Labels {
       // ~2 s at 64 players × 3 iterations). The eager localCheckpoint
       // truncates the plan to a LogicalRDD per round (exact — lineage
       // truncation cannot change integer arithmetic).
-      // registerCheckpoint: the checkpoint block lives outside the
+      // OpCaches.checkpoint: the checkpoint block lives outside the
       // CacheManager; without registration the final round's block
       // outlives the query (bench cache_leaked_blocks, VERDICT r8 #2)
       // k = |players| = praw's own row count (wins ⋈ d covers every
@@ -409,12 +403,11 @@ object Labels {
       // an `i`); counting it in the SAME global window as the normalizer
       // replaces the up-front players.count() driver job — one
       // WindowExec computes both aggregates, identical integers
-      ranks = OpCaches.registerCheckpoint(praw
+      ranks = OpCaches.checkpoint(praw
         .select(col("player"),
           floorDiv(
             col("pr") * count(lit(1)).over(Window.partitionBy()) * R,
-            sum(col("pr")).over(Window.partitionBy())).as("r"))
-        .localCheckpoint(true))
+            sum(col("pr")).over(Window.partitionBy())).as("r")))
       it += 1
     }
     wins.join(nComps, Seq("player"))

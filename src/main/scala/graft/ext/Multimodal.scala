@@ -800,11 +800,10 @@ object Multimodal {
                  idCol: String = "media_id"): DataFrame = {
     require(maxBits >= 0 && maxBits < PhashBandCount,
       s"pigeonhole recall needs maxBits < $PhashBandCount bands, got $maxBits")
-    val sig = OpCaches.register(
+    val sig = OpCaches.persist(
       phash(media, payloadCol, idCol)
         .where(col("phash").isNotNull)
-        .select(col(idCol).as("id"), col("phash").as("sig"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        .select(col(idCol).as("id"), col("phash").as("sig")))
     val banded = sig.select(col("id"), posexplode(phashBands(col("sig"))))
       .withColumnRenamed("pos", "chunk").withColumnRenamed("col", "bits")
     Dedup.bucketPairs(banded, Seq("chunk", "bits"))

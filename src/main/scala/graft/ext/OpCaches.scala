@@ -12,7 +12,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * still references the cached lineage, so an eager unpersist would defeat
   * the reuse — and silently pinning MEMORY_AND_DISK blocks for the life of
   * the session is a leak. Ownership therefore transfers to the caller:
-  * every such persist self-registers here, and after the terminal action
+  * every such persist goes through [[persist]] (or [[checkpoint]]) and
+  * registers here, and after the terminal action
   * on an operator's result the caller calls [[releaseAll]] (idempotent,
   * non-blocking unpersist of everything registered since the last call).
   *
@@ -26,16 +27,24 @@ object OpCaches {
   private val rddReg =
     new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[_]]()
 
-  /** Register an operator-internal persisted frame; returns it unchanged. */
-  private[graft] def register(df: DataFrame): DataFrame = { reg.add(df); df }
+  /** Persist an operator-internal frame at the session's default cache
+    * level (`spark.sql.defaultCacheStorageLevel`, MEMORY_AND_DISK unless
+    * set) and register it for [[releaseAll]]; returns the persisted frame.
+    */
+  private[graft] def persist(df: DataFrame): DataFrame = {
+    val cached = df.persist()
+    reg.add(cached)
+    cached
+  }
 
-  /** Register an (eager) `localCheckpoint(true)` result; returns it
-    * unchanged. Checkpoint blocks live OUTSIDE the CacheManager — neither
-    * `Dataset.unpersist` nor `catalog.clearCache` reaches them, and the
-    * ContextCleaner only reclaims them on a lucky GC — so the iterative
-    * fitters' per-round barriers must hand their raw RDDs to the registry
-    * for [[releaseAll]] (the `cache_leaked_blocks` root cause, VERDICT
-    * r8 #2: Bradley-Terry's final-round block outlived every bench query).
+  /** Eagerly `localCheckpoint(true)` a frame and register its blocks for
+    * [[releaseAll]]; returns the checkpointed frame. Checkpoint blocks
+    * live OUTSIDE the CacheManager — neither `Dataset.unpersist` nor
+    * `catalog.clearCache` reaches them, and the ContextCleaner only
+    * reclaims them on a lucky GC — so the iterative fitters' per-round
+    * barriers must hand their raw RDDs to the registry (the
+    * `cache_leaked_blocks` root cause, VERDICT r8 #2: Bradley-Terry's
+    * final-round block outlived every bench query).
     *
     * Caveat sharpening the usual contract: a released checkpoint block is
     * NOT recomputable (LocalCheckpointRDD has no lineage), so re-running
@@ -43,9 +52,10 @@ object OpCaches {
     * [[releaseAll]] only after the terminal action, and rebuild the query
     * for another run — exactly what Verify/Bench already do per rep.
     */
-  private[graft] def registerCheckpoint(df: DataFrame): DataFrame = {
-    org.apache.spark.sql.graftfn.CheckpointRdd.of(df).foreach(rddReg.add)
-    df
+  private[graft] def checkpoint(df: DataFrame): DataFrame = {
+    val barrier = df.localCheckpoint(true)
+    org.apache.spark.sql.graftfn.CheckpointRdd.of(barrier).foreach(rddReg.add)
+    barrier
   }
 
   /** Unpersist every registered frame (non-blocking) and clear the

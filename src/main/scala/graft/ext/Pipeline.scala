@@ -425,10 +425,9 @@ object Pipeline {
     val schema = org.apache.spark.sql.types.StructType(
       sorted.schema.fields :+ org.apache.spark.sql.types.StructField(
         "__rank", org.apache.spark.sql.types.LongType, nullable = false))
-    val ranked = OpCaches.register(spark.createDataFrame(
+    val ranked = OpCaches.persist(spark.createDataFrame(
       sorted.rdd.zipWithIndex().map { case (r, i) =>
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i) }, schema)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i) }, schema))
     // per-source offsets/indices: bounded by the source cardinality.
     // Ordered by SPARK's own orderBy on the casted column (ADVICE r8) so
     // the offset table agrees byte-for-byte with the global sort above —
@@ -487,10 +486,9 @@ object Pipeline {
     val schema = org.apache.spark.sql.types.StructType(
       sorted.schema.fields :+ org.apache.spark.sql.types.StructField(
         "__rank", org.apache.spark.sql.types.LongType, nullable = false))
-    val ranked = OpCaches.register(spark.createDataFrame(
+    val ranked = OpCaches.persist(spark.createDataFrame(
       sorted.rdd.zipWithIndex().map { case (r, i) =>
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i) }, schema)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i) }, schema))
     val n = math.max(1L, ranked.count())
     ranked
       .withColumn("stage",
@@ -826,8 +824,7 @@ object Pipeline {
       .sortWithinPartitions("id")
       // pin the (sampled) range boundaries: the totals pass and the offset
       // pass must see the identical partitioning
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .transform(OpCaches.register)
+      .transform(OpCaches.persist)
     val pidTotals = base
       .groupBy(spark_partition_id().as("__pid"))
       .agg(sum(col("tok")).as("t"))
@@ -1795,10 +1792,9 @@ object Pipeline {
     val schema = org.apache.spark.sql.types.StructType(
       sorted.schema.fields :+ org.apache.spark.sql.types.StructField(
         "__pos", org.apache.spark.sql.types.LongType, nullable = false))
-    val ranked = OpCaches.register(spark.createDataFrame(
+    val ranked = OpCaches.persist(spark.createDataFrame(
       sorted.rdd.zipWithIndex.map { case (r, i) =>
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i) }, schema)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i) }, schema))
     val n = ranked.count()
     require(n > 0, "negativeSamples needs a non-empty corpus")
     val draws = positives.select(col(queryCol)).distinct()
@@ -1864,10 +1860,9 @@ object Pipeline {
     val schema = org.apache.spark.sql.types.StructType(
       sorted.schema.fields :+ org.apache.spark.sql.types.StructField(
         "__grk", org.apache.spark.sql.types.LongType, nullable = false))
-    val ranked = OpCaches.register(spark.createDataFrame(
+    val ranked = OpCaches.persist(spark.createDataFrame(
       sorted.rdd.zipWithIndex.map { case (r, i) =>
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i) }, schema)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ i) }, schema))
     val offsets = ranked.groupBy(col("bucket"))
       .agg(min(col("__grk")).as("__off"))
     ranked.join(broadcast(offsets), Seq("bucket"))
@@ -2108,9 +2103,8 @@ object Pipeline {
     */
   def kendallTau(df: DataFrame, idCol: String, xCol: String,
                  yCol: String): DataFrame = {
-    val base = OpCaches.register(df.select(col(idCol).as("id"),
-        col(xCol).cast("long").as("x"), col(yCol).cast("long").as("y"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val base = OpCaches.persist(df.select(col(idCol).as("id"),
+        col(xCol).cast("long").as("x"), col(yCol).cast("long").as("y")))
     val a = base.select(col("id").as("ia"), col("x").as("xa"),
       col("y").as("ya"))
     val b = base.select(col("id").as("ib"), col("x").as("xb"),
@@ -2184,10 +2178,9 @@ object Pipeline {
     */
   def chiSquareHomogeneity(df: DataFrame, rowCol: String,
                            colCol: String): DataFrame = {
-    val cells = OpCaches.register(df
+    val cells = OpCaches.persist(df
       .groupBy(col(rowCol).as("r"), col(colCol).as("c"))
-      .agg(count(lit(1)).as("o"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      .agg(count(lit(1)).as("o")))
     val rt = cells.groupBy(col("r")).agg(sum(col("o")).as("rt"))
     val ct = cells.groupBy(col("c")).agg(sum(col("o")).as("ct"))
     val tot = cells.agg(sum(col("o")).as("n"),

@@ -185,8 +185,8 @@ object Similarity {
     require(pairsPerQuery >= 1, "pairsPerQuery must be >= 1")
     // three consumers (fwd agg, bwd agg, margin join) — persist once;
     // lifecycle transfers to the caller via OpCaches
-    val scored = OpCaches.register(
-      candidates.select(col("query_id"), col("pair_id"), col("cos")).persist())
+    val scored = OpCaches.persist(
+      candidates.select(col("query_id"), col("pair_id"), col("cos")))
     val fwd = rankTopK(scored.withColumnRenamed("pair_id", "neighbor_id"),
         kDenom)
       .groupBy("query_id").agg(avg("cos").as("fwd_avg"))
@@ -1468,8 +1468,7 @@ object Similarity {
                  iters: Int = 3): QKmeansModel = {
     require(k >= 1 && iters >= 0, "k >= 1 and iters >= 0")
     val spark = corpus.sparkSession
-    val q = OpCaches.register(quantized(corpus, vecCol, idCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val q = OpCaches.persist(quantized(corpus, vecCol, idCol))
     // deterministic seeds: k smallest (md5-hash, id); a seed point's grid
     // image is itself (256·q̂ lands exactly on the 2^-16 grid)
     val seeds = q.select(col("id"), col("q"),

@@ -1,276 +1,175 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.datasketches.memory.Memory
+import org.apache.datasketches.theta.{CompactSketch, SetOperation}
+import org.apache.spark.sql.{Column, DataFrame, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.util.sketch.CountMinSketch
 
-/** One-pass frequency sketches. The motivating 100 TB problem: "what are
-  * the hot keys / hot terms / hot domains" over a corpus too large to
-  * groupBy — a full key aggregation shuffles every distinct key, while a
-  * Misra-Gries summary ships at most `capacity` rows PER PARTITION,
-  * regardless of how many distinct keys the data holds.
+/** One-pass sketches: which keys are hot, how hot one key is, how many
+  * distinct keys there are, and value quantiles. The motivating 100 TB
+  * problem: a full key aggregation shuffles every distinct key, while a
+  * sketch ships a bounded summary per partition, however many distinct
+  * keys the data holds.
+  *
+  * The frequency and distinct members are Spark's native sketch
+  * functions: `approx_top_k` (a DataSketches frequent-items sketch),
+  * `count_min_sketch` (Spark's `CountMinSketch`) and `theta_sketch_agg`
+  * (a DataSketches theta sketch). Each is mergeable, one aggregation
+  * pass, and EXACT when sized to cover the data (the gate-query mode).
+  * The quantile member (KLL) stays hand-rolled; see its section below.
   */
 object Sketches {
 
-  /** Fold keys into a Misra-Gries summary map in place: the classic
-    * streaming heavy-hitters algorithm (Misra & Gries 1982, the
-    * space-saving family). Estimates undercount: after folding n rows,
-    * `c_true − n/(capacity+1) ≤ est ≤ c_true`. Null keys are skipped
-    * (no frequency semantics).
-    */
-  private[graft] def mgFold(m: java.util.HashMap[Any, Long],
-                            it: Iterator[Any], capacity: Int): Unit =
-    while (it.hasNext) {
-      val key = it.next()
-      if (key != null) {
-        val cur = m.get(key)
-        if (cur != 0L || m.containsKey(key)) m.put(key, cur + 1L)
-        else if (m.size < capacity) m.put(key, 1L)
-        else {
-          // decrement-all: every tracked count drops by one; zeros evict.
-          // O(capacity) amortized over >= capacity arrivals.
-          val del = new java.util.ArrayList[Any](4)
-          val e = m.entrySet().iterator()
-          while (e.hasNext) {
-            val kv = e.next()
-            if (kv.getValue == 1L) del.add(kv.getKey)
-            else kv.setValue(kv.getValue - 1L)
-          }
-          del.forEach(k => m.remove(k))
-        }
-      }
-    }
-
-  private[ext] def misraGries(it: Iterator[Any],
-                              capacity: Int): Iterator[(Any, Long)] = {
-    val m = new java.util.HashMap[Any, Long](capacity * 2)
-    mgFold(m, it, capacity)
-    import scala.jdk.CollectionConverters._
-    m.asScala.iterator.map { case (k, v) => (k, v) }.toArray.iterator
-  }
-
-  /** Approximate top-k heavy hitters over `keyCol`, ONE pass and no
-    * full-key shuffle: each partition reduces to a `capacity`-entry
-    * Misra-Gries summary; summaries merge by summing per key (≤
-    * capacity × partitions tiny rows cross the wire); the merged
-    * estimates keep the additive bound
-    * `c_true − N/(capacity+1) ≤ est ≤ c_true`, so any key with frequency
-    * above N/(capacity+1) is guaranteed present. With
-    * `capacity ≥ distinct(key)` no partition ever decrements and the
-    * estimates are EXACT — the gate-query mode.
+  /** Approximate top-k heavy hitters over `keyCol`: Spark's
+    * `approx_top_k` tracks up to `capacity` keys per partition and merges
+    * the partial sketches, so no exchange carries the distinct-key space.
+    * The top `capacity` candidates are re-ranked by estimate descending,
+    * then key ascending, and cut to `k`. NULL keys are not tracked, and
+    * the key column keeps its input type.
     *
-    * Returns (key, est) — top `k` by estimate desc, key asc. Null keys
-    * are not tracked (no frequency semantics). Key column keeps its
-    * input type.
+    * Error bound (DataSketches frequent items, map size M = the smallest
+    * power of two ≥ capacity / 0.75, N = non-null rows): an estimate never
+    * undercounts and overcounts by at most 3.5·N/M. It is EXACT while
+    * `capacity ≥ distinct(key)` (the gate-query mode). Only keys whose
+    * lower bound clears the sketch's error are reported, so every key
+    * with true count above 2 · 3.5·N/M is.
     *
-    * 100 TB shape: a narrow single-column scan; the only exchange
-    * carries per-partition summaries (capacity rows each); the final
-    * ranking is a TakeOrderedAndProject over ≤ capacity × partitions
-    * rows. Compare `df.groupBy(key).count()`: one shuffle row per INPUT
-    * distinct key — unboundedly wider.
+    * Returns (key, est).
     */
   def heavyHitters(df: DataFrame, keyCol: String, k: Int,
                    capacity: Int = 1024): DataFrame = {
     require(k >= 1, "k must be >= 1")
     require(capacity >= k, s"capacity $capacity must be >= k $k")
-    val keyField = df.schema(keyCol)
-    val outSchema = StructType(Seq(keyField.copy(name = "key"),
-      StructField("est", LongType, nullable = false)))
-    val partials = df.select(col(keyCol).as("key"))
-      .mapPartitions { rows =>
-        misraGries(rows.map(_.get(0)), capacity)
-          .map { case (key, c) => Row(key, c) }
-      }(Encoders.row(outSchema))
-    partials.groupBy(col("key"))
-      .agg(sum(col("est")).as("est"))
+    df.where(col(keyCol).isNotNull)
+      .select(explode(topItems(col(keyCol), capacity)).as("t"))
+      .select(col("t.item").as("key"), col("t.count").as("est"))
       .orderBy(col("est").desc, col("key"))
       .limit(k)
   }
 
-  /** A fitted Count-Min sketch (Cormode & Muthukrishnan 2005): `depth`
-    * hash rows × `width` counters, plus the total item count `n`.
-    * `estimate(key)` = min over rows — never under the true count, and
-    * over it by at most `⌈e/width⌉·n` with probability `1 − e^-depth`.
-    * Counters are pure sums, so the fit is aggregation-order-independent
-    * (bit-identical across partitionings) and two sketches with the same
-    * dimensions [[CmsModel.merge]] by elementwise addition.
-    */
-  final case class CmsModel(depth: Int, width: Int, counts: Array[Long],
-                            n: Long) {
-    def estimate(key: String): Long = {
-      var best = Long.MaxValue
-      var r = 0
-      while (r < depth) {
-        val c = counts(r * width + CmsModel.idx(r, width, key))
-        if (c < best) best = c
-        r += 1
-      }
-      if (best == Long.MaxValue) 0L else best
-    }
+  private def topItems(c: Column, capacity: Int): Column =
+    call_function("approx_top_k", c, lit(capacity), lit(capacity))
 
-    def merge(other: CmsModel): CmsModel = {
-      require(other.depth == depth && other.width == width,
-        s"sketch dims differ: ${depth}x$width vs ${other.depth}x${other.width}")
-      val out = new Array[Long](counts.length)
-      var i = 0
-      while (i < counts.length) {
-        out(i) = counts(i) + other.counts(i); i += 1
-      }
-      CmsModel(depth, width, out, n + other.n)
-    }
-  }
-
-  object CmsModel {
-    private val md = new ThreadLocal[java.security.MessageDigest] {
-      override def initialValue(): java.security.MessageDigest =
-        java.security.MessageDigest.getInstance("MD5")
-    }
-
-    /** Row-salted md5-derived counter index — deterministic across JVMs
-      * and seeds (no per-run RNG: replays and spec reruns see the same
-      * collisions).
-      */
-    private[ext] def idx(row: Int, width: Int, key: String): Int = {
-      val d = md.get()
-      d.reset()
-      d.update((row + ":" + key).getBytes("UTF-8"))
-      val dig = d.digest()
-      var v = 0L
-      var i = 0
-      while (i < 8) { v = (v << 8) | (dig(i) & 0xffL); i += 1 }
-      ((v >>> 4) % width).toInt
-    }
-  }
-
-  /** Fit a Count-Min sketch over `keyCol` in ONE pass with NO shuffle:
-    * each task folds its rows into a local `depth × width` counter array
-    * (`depth·width·8` bytes, e.g. 4×4096 → 128 KB) and the arrays reduce
-    * through `treeAggregate` — the wire carries sketches, never keys. The
-    * point-frequency complement of [[heavyHitters]]: Misra-Gries answers
-    * "which keys are hot", Count-Min answers "how hot is THIS key" for
-    * any key, including ones below the heavy-hitter floor.
+  /** Fit Spark's Count-Min sketch (Cormode & Muthukrishnan 2005) over
+    * `keyCol`, cast to string: `depth` hash rows × `width` counters. One
+    * aggregation pass; the exchange carries sketches, never keys.
+    * `estimateCount(key)` never undercounts and overcounts by at most
+    * `2·n/width` with probability `1 − 2^-depth` (n = `totalCount`; Spark
+    * documents the bound as eps·n at confidence, for eps = 2/width and
+    * confidence = 1 − 2^-depth). Counters are pure sums, so the fit
+    * does not depend on partitioning, and two sketches of equal dimensions
+    * `mergeInPlace` (unequal ones throw `IncompatibleMergeException`).
     *
-    * With `width` collision-free for the queried key set the estimates
-    * are EXACT (the gate-query mode); at 100 TB the same 128 KB sketch
-    * absorbs any cardinality — the accuracy knob is `width`, not data
-    * size. Null keys are skipped (no frequency semantics).
+    * The point-frequency complement of [[heavyHitters]]: it answers "how
+    * hot is THIS key" for any key, including ones below the heavy-hitter
+    * floor. With `width` collision-free for the queried keys the estimates
+    * are EXACT (the gate-query mode); the accuracy knob is `width`, not
+    * data size. Null keys are skipped.
     */
   def countMinFit(df: DataFrame, keyCol: String, width: Int = 4096,
-                  depth: Int = 4): CmsModel = {
-    require(width >= 2 && depth >= 1, "width >= 2 and depth >= 1")
-    val keys = df.select(col(keyCol).cast("string").as("key"))
-      .where(col("key").isNotNull)
-    val (counts, n) = keys.rdd.map(_.getString(0))
-      .treeAggregate((new Array[Long](depth * width), 0L))(
-        seqOp = { case ((arr, c), key) =>
-          var r = 0
-          while (r < depth) {
-            arr(r * width + CmsModel.idx(r, width, key)) += 1L; r += 1
-          }
-          (arr, c + 1L)
-        },
-        combOp = { case ((a, ca), (b, cb)) =>
-          var i = 0
-          while (i < a.length) { a(i) += b(i); i += 1 }
-          (a, ca + cb)
-        })
-    CmsModel(depth, width, counts, n)
+                  depth: Int = 4): CountMinSketch = {
+    require(width >= 2 && depth >= 1 && depth <= 32,
+      "width >= 2 and 1 <= depth <= 32")
+    // Spark sizes the sketch from (eps, confidence) as width = ⌈2/eps⌉
+    // and depth = ⌈−log2(1 − confidence)⌉; aiming half a step below each
+    // integer keeps both exact under double rounding (2/(2/49) is not 49)
+    df.stat.countMinSketch(col(keyCol).cast("string"), 2.0 / (width - 0.5),
+      1.0 - math.pow(2.0, 0.5 - depth), CmsSeed)
   }
 
+  /** Hash seed shared by batch fits and streaming state, so their
+    * sketches merge and agree. */
+  private val CmsSeed = 0
+
   /** Estimate column face: `cms_est` for each row's `keyCol` under a
-    * fitted model — the model rides the closure (≤ a few hundred KB), a
+    * fitted sketch — the sketch rides the closure (≤ a few hundred KB), a
     * pure narrow map. */
   def cmsEstimate(df: DataFrame, keyCol: String,
-                  model: CmsModel): DataFrame = {
-    val est = udf((k: String) => if (k == null) 0L else model.estimate(k))
+                  model: CountMinSketch): DataFrame = {
+    val est = udf((k: String) => if (k == null) 0L else model.estimateCount(k))
     df.withColumn("cms_est", est(col(keyCol).cast("string")))
   }
 
-  /** A fitted KMV (k-minimum-values / bottom-k) distinct sketch: the k
-    * smallest 60-bit hash values seen. Below saturation the sketch IS the
-    * distinct hash set (estimate exact); saturated, the classic estimator
-    * `(k−1)·2⁶⁰ / kth-min` applies (relative error ≈ 1/√(k−1)). The
-    * third leg of the sketch triad: Misra-Gries answers "which keys",
-    * Count-Min "how many of THIS key", KMV "how many DISTINCT keys" —
-    * all mergeable, all one-pass, all with wire cost independent of
-    * cardinality.
+  /** A fitted distinct-count sketch: a DataSketches theta sketch of
+    * nominal size `2^lgK`. Below saturation it holds every distinct hash
+    * and the estimate is EXACT; saturated, its relative standard error is
+    * about `1/√(2^lgK)` (DataSketches' documented bound; `sketch`'s
+    * `getLowerBound`/`getUpperBound` give the confidence interval).
     */
-  final case class KmvModel(k: Int, mins: Array[Long]) {
-    def saturated: Boolean = mins.length >= k
+  final case class ThetaModel(lgK: Int, sketch: CompactSketch) {
+    def saturated: Boolean = sketch.isEstimationMode
+    def estimate: Long = math.round(sketch.getEstimate)
 
-    def estimate: Long =
-      if (!saturated) mins.length.toLong
-      else math.round((k - 1).toDouble *
-        1152921504606846976.0 /* 2^60 */ / mins.last)
-
-    def merge(other: KmvModel): KmvModel = {
-      require(other.k == k, s"sketch k differs: $k vs ${other.k}")
-      val s = new java.util.TreeSet[java.lang.Long]()
-      mins.foreach(s.add(_))
-      other.mins.foreach(s.add(_))
-      while (s.size > k) s.pollLast()
-      KmvModel(k, kmvToArray(s))
+    def merge(other: ThetaModel): ThetaModel = {
+      require(other.lgK == lgK, s"sketch sizes differ: 2^$lgK vs 2^${other.lgK}")
+      val u = SetOperation.builder().setNominalEntries(1 << lgK).buildUnion()
+      u.union(sketch)
+      u.union(other.sketch)
+      ThetaModel(lgK, u.getResult)
     }
   }
 
-  private[ext] def kmvToArray(s: java.util.TreeSet[java.lang.Long]): Array[Long] = {
-    val out = new Array[Long](s.size)
-    val it = s.iterator()
-    var i = 0
-    while (it.hasNext) { out(i) = it.next(); i += 1 }
-    out
+  /** `theta_sketch_agg`'s size exponent for a sketch that stays exact up
+    * to `k` distinct values: ⌈log2 k⌉, at least 4 (DataSketches' floor). */
+  private def lgNominal(k: Int): Int = {
+    require(k >= 2 && k <= (1 << 26), s"k must be in [2, 2^26], got $k")
+    math.max(4, 32 - Integer.numberOfLeadingZeros(k - 1))
   }
 
-  private[ext] def kmvHash60(key: String): Long = {
-    val d = java.security.MessageDigest.getInstance("MD5")
-    val dig = d.digest(key.getBytes("UTF-8"))
-    var v = 0L
-    var i = 0
-    while (i < 8) { v = (v << 8) | (dig(i) & 0xffL); i += 1 }
-    v >>> 4
-  }
+  /** The value a theta sketch hashes for a key: its string form with a
+    * fixed suffix. DataSketches skips empty strings, and `s ↦ s + "\u0000"`
+    * is injective, so '' still counts as one distinct value. */
+  private def thetaKey(c: Column): Column =
+    concat(c.cast("string"), lit("\u0000"))
 
-  /** Fit a KMV sketch in ONE pass with NO shuffle: each task keeps its
-    * own bottom-k tree of key hashes; `treeAggregate` merges trees (≤ k
-    * Longs each on the wire). With `k ≥ distinct(key)` the sketch holds
-    * every distinct hash and the estimate is EXACT — the gate-query mode;
-    * compare `count_distinct`, which shuffles every distinct key.
-    * Null keys are skipped.
+  /** Fit a distinct-count sketch over `keyCol` in ONE aggregation pass:
+    * `theta_sketch_agg` with nominal size `2^⌈log2 k⌉`, so the estimate is
+    * EXACT while `distinct(key) ≤ k` (the gate-query mode); compare
+    * `count_distinct`, which shuffles every distinct key. Null keys are
+    * skipped.
     */
-  def kmvFit(df: DataFrame, keyCol: String, k: Int = 4096): KmvModel = {
-    require(k >= 2, s"k must be >= 2, got $k")
-    val keys = df.select(col(keyCol).cast("string").as("key"))
-      .where(col("key").isNotNull)
-    val set = keys.rdd.map(_.getString(0))
-      .treeAggregate(new java.util.TreeSet[java.lang.Long]())(
-        seqOp = { (s, key) =>
-          s.add(kmvHash60(key))
-          if (s.size > k) s.pollLast()
-          s
-        },
-        combOp = { (a, b) =>
-          val it = b.iterator()
-          while (it.hasNext) {
-            a.add(it.next())
-            if (a.size > k) a.pollLast()
-          }
-          a
-        })
-    KmvModel(k, kmvToArray(set))
+  def kmvFit(df: DataFrame, keyCol: String, k: Int = 4096): ThetaModel = {
+    val lg = lgNominal(k)
+    val bytes = df.select(theta_sketch_agg(thetaKey(col(keyCol)), lg))
+      .head().getAs[Array[Byte]](0)
+    ThetaModel(lg, CompactSketch.heapify(Memory.wrap(bytes)))
   }
 
-  /** The streaming face of [[countMinFit]] (the [[heavyHittersStream]]
-    * pattern): keys hash into `nShards` independent CMS counter arrays;
-    * each micro-batch folds its keys into its shard's array and emits the
-    * UPDATED point estimate for every distinct key seen in that batch —
-    * an Update-mode changelog where the latest (key, est) row is the
-    * running estimate. A static frame runs the same kernel as one batch.
+  /** The groupBy face of [[kmvFit]]: per-group distinct-count estimates,
+    * `theta_sketch_estimate(theta_sketch_agg(c, ⌈log2 k⌉))` — "distinct
+    * users per event type / distinct URLs per domain" in ONE hash
+    * aggregation whose wire traffic is ≤ 2^⌈log2 k⌉ hashes per (partition
+    * × group), never the distinct values themselves. Exact while a group's
+    * distinct count stays ≤ k (the gate-query mode). Nulls are skipped.
+    */
+  def kmvDistinctUdaf(k: Int = 4096): Column => Column = {
+    val lg = lgNominal(k)
+    c => theta_sketch_estimate(theta_sketch_agg(thetaKey(c), lg))
+  }
+
+  /** Non-null keys as strings, each tagged with the one of `nShards`
+    * shards it belongs to. */
+  private def sharded(events: DataFrame, keyCol: String,
+                      nShards: Int): DataFrame =
+    events.select(col(keyCol).cast("string").as("key"))
+      .where(col("key").isNotNull)
+      .select(pmod(xxhash64(col("key")), lit(nShards)).cast("long")
+        .as("shard"), col("key"))
+
+  /** The streaming face of [[countMinFit]]: keys hash into `nShards`
+    * independent Count-Min sketches; each micro-batch folds its keys into
+    * its shard's sketch (the state is the serialized `CountMinSketch`)
+    * and emits the UPDATED point estimate for every distinct key seen in
+    * that batch — an Update-mode changelog where the latest (key, est)
+    * row is the running estimate. A static frame runs the same kernel as
+    * one batch.
     *
     * A key belongs to exactly one shard, so estimates never need a
-    * cross-shard merge, and the per-shard fold preserves the batch CMS
-    * guarantees (never under the shard's true count, exact when `width`
-    * is collision-free). State is bounded by construction —
-    * `nShards × depth × width` Longs, forever, no watermark.
+    * cross-shard merge, and each shard keeps the batch bound over its own
+    * arrivals (exact when `width` is collision-free). State is bounded by
+    * construction — `nShards × depth × width` counters, forever, no
+    * watermark.
     */
   def countMinStream(events: DataFrame, keyCol: String,
                      width: Int = 4096, depth: Int = 4,
@@ -282,128 +181,85 @@ object Sketches {
       "width >= 2, depth >= 1, nShards >= 1")
     val spark = events.sparkSession
     import spark.implicits._
-    events.select(col(keyCol).cast("string").as("key"))
-      .where(col("key").isNotNull)
-      .select(pmod(xxhash64(col("key")), lit(nShards)).cast("long")
-        .as("shard"), col("key"))
+    sharded(events, keyCol, nShards)
       .as[(Long, String)]
       .groupByKey(_._1)
       .flatMapGroupsWithState(OutputMode.Update,
         GroupStateTimeout.NoTimeout) {
         (shard: Long, rows: Iterator[(Long, String)],
-         state: GroupState[Array[Long]]) =>
-          // one flat depth × width counter array per shard
-          val arr = state.getOption.getOrElse(new Array[Long](depth * width))
+         state: GroupState[Array[Byte]]) =>
+          val cms = state.getOption.fold(CountMinSketch.create(depth, width, CmsSeed))(
+            b => CountMinSketch.readFrom(b))
           val batchKeys = new java.util.LinkedHashSet[String]()
-          rows.foreach { case (_, key) =>
-            var r = 0
-            while (r < depth) {
-              arr(r * width + CmsModel.idx(r, width, key)) += 1L
-              r += 1
-            }
-            batchKeys.add(key)
-          }
-          state.update(arr)
-          val model = CmsModel(depth, width, arr, 0L)
-          batchKeys.asScala.iterator.map(k => (shard, k, model.estimate(k)))
+          rows.foreach { case (_, key) => cms.add(key); batchKeys.add(key) }
+          state.update(cms.toByteArray)
+          batchKeys.asScala.iterator.map(k => (shard, k, cms.estimateCount(k)))
       }
       .toDF("shard", "key", "est")
   }
 
   /** The streaming face of [[kmvFit]]: keys hash into `nShards` disjoint
-    * subspaces; each shard keeps the bottom-k hashes of ITS OWN keys (a
-    * sorted Long array, ≤ k by contract) and emits one
-    * (shard, n_distinct, saturated) row per batch it touches. Shards
-    * partition the key space, so the GLOBAL distinct count is the SUM of
-    * the latest per-shard rows — exact while every shard stays below
-    * saturation, estimate-summed above. State: ≤ nShards × k Longs,
-    * forever, no watermark.
+    * subspaces, and an update-mode `groupBy(shard)` over
+    * `theta_sketch_agg` keeps one sketch per shard, emitting
+    * (shard, n_distinct, saturated) for each shard a batch touches.
+    * Shards partition the key space, so the GLOBAL distinct count is the
+    * SUM of the latest per-shard rows — exact while no shard saturates.
+    * State: nShards sketches of ≤ 2^⌈log2 k⌉ hashes, forever, no
+    * watermark.
     */
   def kmvStream(events: DataFrame, keyCol: String, k: Int = 4096,
                 nShards: Int = 8): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
-      OutputMode}
-    require(k >= 2 && nShards >= 1, "k >= 2 and nShards >= 1")
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.select(col(keyCol).cast("string").as("key"))
-      .where(col("key").isNotNull)
-      .select(pmod(xxhash64(col("key")), lit(nShards)).cast("long")
-        .as("shard"), col("key"))
-      .as[(Long, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Update,
-        GroupStateTimeout.NoTimeout) {
-        (shard: Long, rows: Iterator[(Long, String)],
-         state: GroupState[Array[Long]]) =>
-          val s = new java.util.TreeSet[java.lang.Long]()
-          state.getOption.foreach(_.foreach(s.add(_)))
-          rows.foreach { case (_, key) =>
-            s.add(kmvHash60(key))
-            if (s.size > k) s.pollLast()
-          }
-          val arr = kmvToArray(s)
-          state.update(arr)
-          val model = KmvModel(k, arr)
-          Iterator.single((shard, model.estimate, model.saturated))
-      }
-      .toDF("shard", "n_distinct", "saturated")
+    require(nShards >= 1, "nShards >= 1")
+    val lg = lgNominal(k)
+    val estimating = udf((b: Array[Byte]) =>
+      CompactSketch.wrap(Memory.wrap(b)).isEstimationMode)
+    sharded(events, keyCol, nShards)
+      .groupBy(col("shard"))
+      .agg(theta_sketch_agg(thetaKey(col("key")), lg).as("sketch"))
+      .select(col("shard"), theta_sketch_estimate(col("sketch")).as("n_distinct"),
+        estimating(col("sketch")).as("saturated"))
   }
 
   /** The streaming face of [[heavyHitters]]: keys hash into `nShards`
-    * independent summaries; each shard folds its micro-batch into a
-    * capacity-bounded Misra-Gries map (one state cell, rewritten per
-    * batch — the summary is small by contract) and emits the updated
-    * summary as an Update-mode changelog (shard, key, est).
+    * independent `approx_top_k` sketches of `capacity` tracked keys,
+    * folded by an update-mode `groupBy(shard)`; each batch emits the
+    * updated summary of every shard it touches as (shard, key, est) rows.
     *
     * Because a key belongs to exactly ONE shard, per-key estimates need
     * no cross-shard merge — the latest (shard, key) row IS the estimate,
-    * with the additive bound `c_true − n_shard/(capacity+1) ≤ est ≤
-    * c_true` over that shard's arrivals. State is bounded by
-    * construction: `nShards × capacity` entries total, forever, no
-    * watermark needed. Null keys are dropped; keys are tracked as
+    * with [[heavyHitters]]' bound over that shard's arrivals. Each shard
+    * reports at most `capacity` keys: state is bounded by construction,
+    * forever, no watermark. Null keys are dropped; keys are tracked as
     * strings (cast), the changelog-friendly form.
     */
   def heavyHittersStream(events: DataFrame, keyCol: String, capacity: Int,
                          nShards: Int = 8): DataFrame = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
-      OutputMode}
-    import scala.jdk.CollectionConverters._
     require(capacity >= 1 && nShards >= 1, "capacity and nShards >= 1")
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.select(col(keyCol).cast("string").as("key"))
-      .where(col("key").isNotNull)
-      .select(pmod(xxhash64(col("key")), lit(nShards)).cast("long")
-        .as("shard"), col("key"))
-      .as[(Long, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Update,
-        GroupStateTimeout.NoTimeout) {
-        (shard: Long, rows: Iterator[(Long, String)],
-         state: GroupState[Map[String, Long]]) =>
-          val m = new java.util.HashMap[Any, Long](capacity * 2)
-          state.getOption.foreach(_.foreach { case (k, v) => m.put(k, v) })
-          mgFold(m, rows.map(_._2), capacity)
-          val snap = m.asScala.map { case (k, v) =>
-            k.asInstanceOf[String] -> v }.toMap
-          state.update(snap)
-          snap.iterator.map { case (k, v) => (shard, k, v) }
-      }
-      .toDF("shard", "key", "est")
+    sharded(events, keyCol, nShards)
+      .groupBy(col("shard"))
+      .agg(topItems(col("key"), capacity).as("top"))
+      .select(col("shard"), explode(col("top")).as("t"))
+      .select(col("shard"), col("t.item").as("key"), col("t.count").as("est"))
   }
 
   // ── KLL quantile sketch ──────────────────────────────────────────────
   //
-  // The quantile member of the sketch family (alongside Misra-Gries for
-  // heavy hitters, Count-Min for point frequencies, KMV for distinct
-  // counts): a mergeable rank/quantile summary after Karnin, Lang &
+  // The quantile member of the sketch family (alongside top-k heavy
+  // hitters, Count-Min point frequencies and theta distinct counts): a
+  // mergeable rank/quantile summary after Karnin, Lang &
   // Liberty, "Optimal quantile approximation in streams" (FOCS 2016).
   // The motivating 100 TB problem: "what is p99 doc length / p50 score"
   // over a corpus where exact `percentile` shuffles and sorts every
   // value — a KLL sketch ships O(k log(n/k)) doubles per partition and
   // merges associatively, so the fit is ONE scan with NO shuffle
-  // (treeAggregate), like [[kmvFit]].
+  // (treeAggregate).
+  //
+  // Why it is not Spark's native `kll_sketch_agg_double`: DataSketches
+  // caps KLL's k at 65535, below the exact mode's k ≥ n at the gate
+  // scales (`ev_kll_quantiles` at sf0.1 has n = 100,000; at k = 65535 the
+  // native sketch answers 114.32 where the exact quantile is 114.3), and
+  // `kll_sketch_get_rank_double` rejects a per-row (non-foldable) rank,
+  // which [[Pipeline.quantileNormalizeBySketch]] probes.
   //
   // Determinism: the classic algorithm flips a coin per compaction to
   // pick the even- or odd-indexed half. This implementation alternates
@@ -417,7 +273,7 @@ object Sketches {
   // The worst-case O(1/k) rank-error family guarantee is unchanged.
   // With `k ≥ n` no compaction ever fires and every value is retained
   // at level 0 — quantiles are EXACT and independent of merge order
-  // (the gate-query mode, same convention as the other three sketches).
+  // (the gate-query mode, same convention as the other sketches).
 
   /** Mutable KLL builder — the treeAggregate zero and the Aggregator
     * buffer. `levels(i)` holds items of weight `2^i`; level capacities
@@ -632,22 +488,7 @@ object Sketches {
     udaf(new KllAgg(k, qs), Encoders.DOUBLE)
   }
 
-  /** The groupBy face of [[kmvFit]]: per-group distinct-count estimates
-    * as a typed `Aggregator` UDAF — "distinct users per event type /
-    * distinct URLs per domain" over 100 TB in ONE hash aggregation whose
-    * wire traffic is ≤ k hashes per (partition × group), never the
-    * distinct values themselves (`countDistinct` shuffles every distinct
-    * (group, value) pair — unboundedly wider). Exact while a group's
-    * distinct count stays ≤ k (the gate-query mode), KMV-estimated
-    * above. Null values are skipped (no distinct semantics).
-    */
-  def kmvDistinctUdaf(k: Int = 4096)
-      : org.apache.spark.sql.expressions.UserDefinedFunction = {
-    require(k >= 2, s"k must be >= 2, got $k")
-    udaf(new KmvDistinctAgg(k), Encoders.STRING)
-  }
-
-  /** The streaming face of [[kllFit]]. Unlike the CMS/KMV/MG streams,
+  /** The streaming face of [[kllFit]]. Unlike the CMS/theta/top-k streams,
     * quantile estimates are NOT combinable across disjoint-key shards
     * without the underlying models, so this face keeps ONE global sketch
     * cell (the kryo'd builder, O(k log(n/k)) doubles) and emits the
@@ -731,38 +572,3 @@ private[ext] class KllAgg(k: Int, qs: Seq[Double])
     org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
 }
 
-/** The per-group KMV aggregator: buffer is the bottom-k tree of value
-  * hashes (kryo-encoded between partial and final aggregation), output
-  * the KMV distinct estimate — exact below saturation.
-  */
-private[ext] class KmvDistinctAgg(k: Int)
-    extends org.apache.spark.sql.expressions.Aggregator[
-      String, java.util.TreeSet[java.lang.Long], Long] {
-  def zero: java.util.TreeSet[java.lang.Long] =
-    new java.util.TreeSet[java.lang.Long]()
-  def reduce(s: java.util.TreeSet[java.lang.Long],
-             key: String): java.util.TreeSet[java.lang.Long] = {
-    if (key != null) {
-      s.add(Sketches.kmvHash60(key))
-      if (s.size > k) s.pollLast()
-    }
-    s
-  }
-  def merge(a: java.util.TreeSet[java.lang.Long],
-            b: java.util.TreeSet[java.lang.Long])
-      : java.util.TreeSet[java.lang.Long] = {
-    val it = b.iterator()
-    while (it.hasNext) {
-      a.add(it.next())
-      if (a.size > k) a.pollLast()
-    }
-    a
-  }
-  def finish(s: java.util.TreeSet[java.lang.Long]): Long =
-    Sketches.KmvModel(k, Sketches.kmvToArray(s)).estimate
-  def bufferEncoder
-      : org.apache.spark.sql.Encoder[java.util.TreeSet[java.lang.Long]] =
-    Encoders.kryo[java.util.TreeSet[java.lang.Long]]
-  def outputEncoder: org.apache.spark.sql.Encoder[Long] =
-    Encoders.scalaLong
-}

@@ -61,8 +61,7 @@ object Stats {
       .sortWithinPartitions("v")
       // pin the sampled range boundaries: the totals pass and the
       // running pass must see the identical partitioning
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      .transform(OpCaches.register)
+      .transform(OpCaches.persist)
     val pidTotals = per
       .groupBy(spark_partition_id().as("__pid"))
       .agg(sum(col("ca")).as("ta"), sum(col("cb")).as("tb"))

@@ -604,11 +604,10 @@ object TextAnalysis {
                         minCount: Long = 2): DataFrame = {
     // native one-pass bigram hashing (WordBigramHashes): the HOF chain in
     // [[bigrams]] walks interpreted nodes per bigram and dominated the op
-    val hashed = OpCaches.register(docs
+    val hashed = OpCaches.persist(docs
       .select(col(idCol).as("id"),
         explode(graft.functions.VectorFunctions.word_bigram_hashes(
-          col(textCol))).as("bh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+          col(textCol))).as("bh")))
     val counts = hashed.groupBy("bh").agg(count(lit(1)).as("c"))
     hashed.join(counts, Seq("bh"))
       .groupBy(col("id"))
@@ -660,11 +659,10 @@ object TextAnalysis {
     */
   def tfidfTopTerms(docs: DataFrame, textCol: String, idCol: String,
                     k: Int = 5, minDf: Long = 1): DataFrame = {
-    val tf = OpCaches.register(docs.select(col(idCol).as("id"),
+    val tf = OpCaches.persist(docs.select(col(idCol).as("id"),
         explode(toks(col(textCol))).as("term"))
       .groupBy(col("id"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      .agg(count(lit(1)).as("tf")))
     val df_ = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
       .where(col("df") >= minDf)
     val n = docs.select(count(lit(1)).as("__n"))
@@ -831,13 +829,13 @@ object TextAnalysis {
     // the corpus aggregation (OpCaches lifecycle)
     val words = df.select(explode(split(col(textCol), " ")).as("w"))
       .where(col("w") =!= "")
-    val wc = OpCaches.register(
-      words.groupBy(col("w")).agg(count(lit(1)).as("c")).persist())
+    val wc = OpCaches.persist(
+      words.groupBy(col("w")).agg(count(lit(1)).as("c")))
     val nw = wc.agg(sum(col("c")).cast("double").as("nw"))
-    val bcAll = OpCaches.register(
+    val bcAll = OpCaches.persist(
       df.select(explode(graft.functions.VectorFunctions
           .word_bigrams(col(textCol))).as("b"))
-        .groupBy(col("b")).agg(count(lit(1)).as("cab")).persist())
+        .groupBy(col("b")).agg(count(lit(1)).as("cab")))
     val nb = bcAll.agg(sum(col("cab")).cast("double").as("nb"))
     val bc = bcAll.where(col("cab") >= minCount)
     bc.withColumn("wa", split(col("b"), " ")(0))
@@ -915,12 +913,11 @@ object TextAnalysis {
     // cut AND the per-language coverage sums both derive from it (the
     // table is language×vocabulary-sized — persisted for its two
     // consumers, OpCaches lifecycle)
-    val lw = OpCaches.register(df
+    val lw = OpCaches.persist(df
       .select(col(langCol).as("lang"),
         explode(split(col(textCol), " ")).as("w"))
       .where(col("w") =!= "")
-      .groupBy(col("lang"), col("w")).agg(count(lit(1)).as("c"))
-      .persist())
+      .groupBy(col("lang"), col("w")).agg(count(lit(1)).as("c")))
     val vocab = lw.groupBy(col("w")).agg(sum(col("c")).as("cw"))
       .orderBy(col("cw").desc, col("w")).limit(topN)
       .select(col("w"), lit(1L).as("__inv"))
@@ -1034,12 +1031,11 @@ object TextAnalysis {
                  topN: Int = 32): DataFrame = {
     require(topN >= 1, s"topN must be >= 1, got $topN")
     val nDocs = df.count() // bounded meta-collect (one scalar)
-    val dtc = OpCaches.register(df
+    val dtc = OpCaches.persist(df
       .select(col(idCol).as("id"),
         explode(split(col(textCol), " ")).as("w"))
       .where(col("w") =!= "")
-      .groupBy(col("id"), col("w")).agg(count(lit(1)).as("c"))
-      .persist())
+      .groupBy(col("id"), col("w")).agg(count(lit(1)).as("c")))
     val top = dtc.groupBy(col("w"))
       .agg(sum(col("c")).as("total"), count(lit(1)).as("n_docs"))
       .orderBy(col("total").desc, col("w").asc).limit(topN)
@@ -1480,8 +1476,7 @@ object TextAnalysis {
     // re-aggregation; persist it so the bigram-count shuffle runs once
     // (plan-audited: unpersisted, Catalyst re-derived the whole fit for
     // the ctx branch — a full second corpus explode)
-    val lm = OpCaches.register(lm0
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val lm = OpCaches.persist(lm0)
     val bg = docs.select(col(idCol).as("id"),
       explode(bigrams(col(textCol))).as("bigram"))
     val ctx = lm.groupBy(split(col("bigram"), " ").getItem(0).as("w1"))
@@ -1561,8 +1556,7 @@ object TextAnalysis {
               idCol: String, alpha: Double = 0.4,
               oovPseudo: Double = 0.5): DataFrame = {
     require(alpha > 0 && alpha <= 1, s"alpha in (0,1], got $alpha")
-    val lm = OpCaches.register(lm0
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val lm = OpCaches.persist(lm0)
     val nTotal = lm.where(col("o") === 1)
       .agg(sum(col("c")).cast("double").as("__n"))
     val w = split(col("g3"), " ")
@@ -1616,8 +1610,7 @@ object TextAnalysis {
   def perplexityBy(docs: DataFrame, lm0: DataFrame, textCol: String,
                    idCol: String, byCol: String,
                    k: Double = 0.5): DataFrame = {
-    val lm = OpCaches.register(lm0
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val lm = OpCaches.persist(lm0)
     val bg = docs.select(col(idCol).as("id"), col(byCol),
       explode(bigrams(col(textCol))).as("bigram"))
     val ctx = lm.groupBy(col(byCol),

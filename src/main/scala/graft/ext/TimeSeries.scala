@@ -406,8 +406,7 @@ object TimeSeries {
   def cusumAdaptive(series: DataFrame, keyCol: String, orderCol: String,
                     valCol: String, sigmaMult: Double,
                     threshold: Long): DataFrame = {
-    val cached = OpCaches.register(series
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val cached = OpCaches.persist(series)
     val medExpr = expr(s"percentile($valCol, 0.5)")
     val med = cached.groupBy(col(keyCol))
       .agg(greatest(floor(medExpr + lit(sigmaMult) * sqrt(medExpr))
@@ -573,9 +572,8 @@ object TimeSeries {
   def anomalousWindowsRobust(events: DataFrame, keyCol: String,
                              tsCol: String, bucketSeconds: Long,
                              zMin: Double): DataFrame = {
-    val series = OpCaches.register(
-      resampleCounts(events, keyCol, tsCol, bucketSeconds)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val series = OpCaches.persist(
+      resampleCounts(events, keyCol, tsCol, bucketSeconds))
     val med = series.groupBy(col("key"))
       .agg(expr("percentile(n, 0.5)").as("med"))
     val dev = series.join(broadcast(med), Seq("key"))

@@ -409,7 +409,7 @@ private[queries] object ExtEventQueries {
         .orderBy(col("cohort"))
     },
     "ev_kmv_distinct" -> { (s, d) =>
-      // KMV bottom-k distinct sketch, shuffle-free treeAggregate fit.
+      // theta distinct-count sketch, one theta_sketch_agg pass.
       // Gate mode sizes k from the DATA (distinct count + 1, floored at
       // 4096) so the sketch never saturates and the estimate is exact
       // at ANY fixture scale — the constant 4096 silently started
@@ -425,9 +425,9 @@ private[queries] object ExtEventQueries {
       Seq(Sketches.kmvFit(ev, "user_id", k).estimate).toDF("n_users")
     },
     "ev_cms_counts" -> { (s, d) =>
-      // Count-Min point-frequency estimates: one shuffle-free treeAggregate
-      // pass; width 4096 is collision-free for the 5-key query set, so the
-      // min-over-rows estimates are exact (the gate mode)
+      // Count-Min point-frequency estimates: one count_min_sketch
+      // aggregation pass; width 4096 is collision-free for the 5-key query
+      // set, so the min-over-rows estimates are exact (the gate mode)
       val ev = new graft.compile.ParquetEnv(s, d).load("events")
       val model = Sketches.countMinFit(ev, "event_type")
       Sketches.cmsEstimate(ev.select("event_type").distinct(),
@@ -436,16 +436,16 @@ private[queries] object ExtEventQueries {
         .orderBy(col("event_type"))
     },
     "ev_heavy_hitters" -> { (s, d) =>
-      // one-pass Misra-Gries hot-key detection, no full-key shuffle; at
-      // capacity 64 >= 5 distinct event types no partition ever
-      // decrements, so the estimates are exact (the gate mode)
+      // one-pass approx_top_k hot-key detection, no full-key shuffle; at
+      // capacity 64 >= 5 distinct event types the frequent-items sketch
+      // never purges, so the estimates are exact (the gate mode)
       val ev = new graft.compile.ParquetEnv(s, d).load("events")
       Sketches.heavyHitters(ev, "event_type", k = 5, capacity = 64)
     },
     "ev_kmv_by_type" -> { (s, d) =>
       // per-group distinct-count sketch UDAF (the fan-out /
       // super-spreader report): distinct users per event type in ONE
-      // hash aggregation — the wire carries bottom-k hash trees, never
+      // hash aggregation — the wire carries theta sketches, never
       // the distinct values (countDistinct shuffles every distinct
       // (group, value) pair); gate mode sizes k from the DATA (max
       // per-group distinct + 1, floored at 4096 — same sf1-sweep fix as

@@ -54,8 +54,7 @@ object ScaleUp {
     val out = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
     require(factor >= 1, s"factor must be >= 1, got $factor")
-    val spark = graft.Sessions.local(defaultCpus = 32,
-      "spark.sql.legacy.parquet.nanosAsLong" -> "true")
+    val spark = graft.Sessions.local(defaultCpus = 32)
     scaleAll(spark, src, out, factor)
     spark.stop()
   }

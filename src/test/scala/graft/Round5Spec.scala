@@ -1182,7 +1182,7 @@ class Round5Spec extends SparkSpecBase {
     }
   }
 
-  // ---- Misra-Gries heavy hitters ----
+  // ---- top-k heavy hitters ----
 
   test("heavyHitters: exact when capacity covers the key space") {
     import graft.ext.Sketches
@@ -1196,10 +1196,10 @@ class Round5Spec extends SparkSpecBase {
     assert(got == exact, "capacity >= distinct must be exact")
   }
 
-  test("heavyHitters: Misra-Gries additive error bound at small capacity") {
+  test("heavyHitters: frequent-items error bound at small capacity") {
     import graft.ext.Sketches
     val rng = new scala.util.Random(11)
-    // zipf-ish: heavy mass on few keys, long tail forcing decrements
+    // zipf-ish: heavy mass on few keys, long tail forcing purges
     val data = Seq.fill(20000)(
       if (rng.nextDouble() < 0.6) rng.nextInt(5).toLong
       else 100L + rng.nextInt(2000)).map(Tuple1(_))
@@ -1209,16 +1209,39 @@ class Round5Spec extends SparkSpecBase {
     val est = Sketches.heavyHitters(df, "k", k = cap, capacity = cap)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val truth = data.groupBy(_._1).map { case (k, v) => k -> v.size.toLong }
-    // returned estimates never overcount and undercount by <= N/(cap+1)
+    // DataSketches frequent items with map size M (the smallest power of
+    // two >= cap / 0.75, 128 here): estimates never undercount and
+    // overcount by at most 3.5·N/M
+    val m = Integer.highestOneBit(math.ceil(cap / 0.75).toInt - 1) << 1
+    assert(m == 128)
+    val bound = 3.5 * n / m
     est.foreach { case (k, e) =>
       val t = truth(k)
-      assert(e <= t, s"overcount for $k: $e > $t")
-      assert(e >= t - n / (cap + 1), s"bound violated for $k: $e vs $t")
+      assert(e >= t, s"undercount for $k: $e < $t")
+      assert(e <= t + bound, s"bound violated for $k: $e vs $t")
     }
-    // every key heavier than the bound is guaranteed to surface
-    val mustHave = truth.filter(_._2 > n / (cap + 1)).keySet
+    // every key heavier than twice the bound is guaranteed to surface
+    val mustHave = truth.filter(_._2 > 2 * bound).keySet
+    assert(mustHave.nonEmpty)
     assert(mustHave.subsetOf(est.keySet),
       s"missing guaranteed heavy keys: ${mustHave -- est.keySet}")
+  }
+
+  test("heavyHitters: a tie at the k-th key breaks by key ascending, and " +
+    "the most frequent value, NULL, is never a key") {
+    import graft.ext.Sketches
+    // NULL is the most frequent value; c and d tie for the 3rd place
+    val vals = Seq.fill(9)(None) ++ Seq.fill(5)(Some("a")) ++
+      Seq.fill(4)(Some("b")) ++ Seq.fill(3)(Some("d")) ++
+      Seq.fill(3)(Some("c")) ++ Seq(Some("e"))
+    for (parts <- Seq(1, 3, 7)) {
+      val df = new scala.util.Random(parts).shuffle(vals).toDF("k")
+        .repartition(parts)
+      val got = Sketches.heavyHitters(df, "k", k = 3, capacity = 8)
+        .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+      assert(got == Seq(("a", 5L), ("b", 4L), ("c", 3L)),
+        s"$parts partitions: $got")
+    }
   }
 
   test("heavyHittersStream: the per-shard summary is exact across " +

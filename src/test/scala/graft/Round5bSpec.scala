@@ -769,30 +769,34 @@ class Round5bSpec extends SparkSpecBase {
       .map(r => r.getString(0) -> r.getLong(1)).toMap
 
     val wide = Sketches.countMinFit(ev, "event_type")
+    assert(wide.width == 4096 && wide.depth == 4)
     truth.foreach { case (k, c) =>
-      assert(wide.estimate(k) == c, s"wide sketch off for $k")
+      assert(wide.estimateCount(k) == c, s"wide sketch off for $k")
     }
 
     // crafted collisions: width 2, depth 1 — min-row estimate must still
     // dominate the true count for every key
     val narrow = Sketches.countMinFit(ev, "event_type", width = 2, depth = 1)
+    assert(narrow.width == 2 && narrow.depth == 1)
     truth.foreach { case (k, c) =>
-      assert(narrow.estimate(k) >= c, s"narrow sketch UNDER-counts $k")
-      assert(narrow.estimate(k) <= narrow.n)
+      assert(narrow.estimateCount(k) >= c, s"narrow sketch UNDER-counts $k")
+      assert(narrow.estimateCount(k) <= narrow.totalCount)
     }
+    // dimensions whose naive (eps, confidence) round trip rounds up
+    val odd49 = Sketches.countMinFit(ev, "event_type", width = 49, depth = 29)
+    assert(odd49.width == 49 && odd49.depth == 29)
 
     // merge of half-fits ≡ one whole fit (integer sums, order-free)
     val odd = Sketches.countMinFit(
       ev.where(pmod(col("event_id"), lit(2)) === 1), "event_type")
     val even = Sketches.countMinFit(
       ev.where(pmod(col("event_id"), lit(2)) === 0), "event_type")
-    val merged = odd.merge(even)
-    assert(merged.n == wide.n)
-    assert(java.util.Arrays.equals(merged.counts, wide.counts))
+    odd.mergeInPlace(even)
+    assert(odd.totalCount == wide.totalCount)
+    assert(odd == wide)
 
     // partitioning cannot change a sum-only sketch
-    val repart = Sketches.countMinFit(ev.repartition(7), "event_type")
-    assert(java.util.Arrays.equals(repart.counts, wide.counts))
+    assert(Sketches.countMinFit(ev.repartition(7), "event_type") == wide)
   }
 
   test("countMinStream: running estimates are exact across batches at " +
@@ -822,28 +826,39 @@ class Round5bSpec extends SparkSpecBase {
   test("kmv: exact below saturation, bounded error above, merge ≡ " +
     "whole-fit, partition-invariant") {
     import graft.ext.Sketches
+    def hashes(m: Sketches.ThetaModel): Seq[Long] = {
+      val it = m.sketch.iterator()
+      val b = Seq.newBuilder[Long]
+      while (it.next()) b += it.get()
+      b.result().sorted
+    }
     val ev = spark.read.parquet(s"$sfDir/events.parquet")
     val exact = ev.select(count_distinct(col("user_id")))
       .collect()(0).getLong(0)
     val m = Sketches.kmvFit(ev, "user_id") // k=4096 >> distinct
     assert(!m.saturated && m.estimate == exact)
+    assert(hashes(m).size == exact)
 
-    // partitioning cannot change a bottom-k hash set
+    // partitioning cannot change the retained hash set
     val m2 = Sketches.kmvFit(ev.repartition(7), "user_id")
-    assert(java.util.Arrays.equals(m.mins, m2.mins))
+    assert(hashes(m2) == hashes(m))
 
     // merge of half-fits ≡ one whole fit
     val odd = Sketches.kmvFit(
       ev.where(pmod(col("event_id"), lit(2)) === 1), "user_id")
     val even = Sketches.kmvFit(
       ev.where(pmod(col("event_id"), lit(2)) === 0), "user_id")
-    assert(java.util.Arrays.equals(odd.merge(even).mins, m.mins))
+    val merged = odd.merge(even)
+    assert(!merged.saturated && hashes(merged) == hashes(m))
 
-    // saturated: 20000 distinct ids through k=256 — estimate within the
-    // ~4·RSE envelope (RSE ≈ 1/√255 ≈ 6.3%)
+    // saturated: 20000 distinct ids through k=256 — the truth lies inside
+    // the sketch's own 3-sigma bounds, and the estimate within 25%
+    // (RSE ≈ 1/√256 ≈ 6.3%)
     val big = (1 to 20000).map(i => s"id$i").toDF("k")
     val sat = Sketches.kmvFit(big, "k", k = 256)
     assert(sat.saturated)
+    assert(sat.sketch.getLowerBound(3) <= 20000.0 &&
+      20000.0 <= sat.sketch.getUpperBound(3))
     assert(math.abs(sat.estimate - 20000.0) / 20000.0 < 0.25,
       s"saturated estimate ${sat.estimate} too far from 20000")
     // k mismatch fails loud
@@ -873,6 +888,10 @@ class Round5bSpec extends SparkSpecBase {
       assert(latest.forall(!_._3))
       assert(latest.map(_._2).sum == 5L, s"got $latest")
     } finally q.stop()
+    // past 2^⌈log2 k⌉ distinct keys a shard reports saturation
+    val sat = Sketches.kmvStream((1 to 100).map(i => s"k$i").toDF("k"), "k",
+      k = 16, nShards = 1).collect()
+    assert(sat.length == 1 && sat(0).getBoolean(2), s"got ${sat.toSeq}")
   }
 
   test("countMin: dimension mismatch fails loud on merge") {
@@ -880,7 +899,8 @@ class Round5bSpec extends SparkSpecBase {
     val ev = spark.read.parquet(s"$sfDir/events.parquet")
     val a = Sketches.countMinFit(ev, "event_type", width = 64, depth = 2)
     val b = Sketches.countMinFit(ev, "event_type", width = 32, depth = 2)
-    assertThrows[IllegalArgumentException](a.merge(b))
+    assertThrows[org.apache.spark.util.sketch.IncompatibleMergeException](
+      a.mergeInPlace(b))
   }
 
   // ---- scd2 ----

@@ -56,6 +56,41 @@ class SourceCacheSpec extends SparkSpecBase {
     }
   }
 
+  test("an INT64 TIMESTAMP(NANOS) column reads as microsecond timestamps") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val dir = Files.createTempDirectory("graft-nanos").toFile
+    val file = new File(dir, "ev.parquet")
+    val schema = MessageTypeParser.parseMessageType(
+      "message ev { required int64 id; optional int64 ts (TIMESTAMP(NANOS,true)); }")
+    // id -> nanoseconds since the epoch; pre-1970 instants round down
+    val nanos = Seq(1L -> Some(1700000000123456789L), 2L -> Some(-1500L),
+      3L -> None, 4L -> Some(999L))
+    try {
+      val w = ExampleParquetWriter.builder(new Path(file.toURI))
+        .withType(schema).build()
+      try {
+        val g = new SimpleGroupFactory(schema)
+        nanos.foreach { case (id, ts) =>
+          val row = g.newGroup().append("id", id)
+          ts.foreach(row.append("ts", _))
+          w.write(row)
+        }
+      } finally w.close()
+      val df = ParquetEnv.read(spark, file.getPath)
+      assert(df.schema("ts").dataType == org.apache.spark.sql.types.TimestampType)
+      val got = df.select(col("id"), unix_micros(col("ts"))).collect()
+        .map(r => r.getLong(0) -> Option(r.get(1)).map(_.asInstanceOf[Long]))
+        .toMap
+      assert(got == nanos.map { case (id, ts) =>
+        id -> ts.map(Math.floorDiv(_, 1000L)) }.toMap, s"got $got")
+    } finally {
+      Option(dir.listFiles()).toSeq.flatten.foreach(_.delete()); dir.delete()
+    }
+  }
+
   test("a second build of op_filter and q3_revenue starts no Spark job") {
     Seq("op_filter", "q3_revenue").foreach { name =>
       build(name)

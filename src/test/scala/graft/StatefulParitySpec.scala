@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   * frame of b1 ∪ b2 (default state-store provider, no streaming query) it
   * returns exactly the latest row per key of a two-micro-batch streaming
   * run over b1 then b2. The parameters keep each estimate independent of
-  * arrival order: a collision-free Count-Min width, KMV below saturation,
-  * covering Misra-Gries capacity and KLL with k ≥ n.
+  * arrival order: a collision-free Count-Min width, a theta sketch below
+  * saturation, covering top-k capacity and KLL with k ≥ n.
   */
 class StatefulParitySpec extends SparkSpecBase {
   import spark.implicits._
